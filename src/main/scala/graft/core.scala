@@ -37,6 +37,18 @@ object T {
     * partitioned table root; Spark's file source handles split planning,
     * partition pruning and filter/column pushdown identically.
     *
+    * The parquet schema is memoized per session, the way a Hive
+    * metastore holds each table's schema: Spark's footer inference is a
+    * Spark job of its own, so without the memo every statement paid one
+    * job per table it reads before any of its own work ran. The memo
+    * key is the session, the table path, its [[contentTag]] (a listing,
+    * no data read — a table regenerated in-process misses) and the
+    * session confs that decide how a footer maps to Catalyst types
+    * ([[footerConfs]]). Only the schema is kept, never the DataFrame:
+    * each call still builds a fresh relation, so self-joins get fresh
+    * expression IDs and `df("col")` references resolve against their
+    * own read, and the file index lists the files as they are now.
+    *
     * `events.ts` has shipped as BOTH parquet INT64 TIMESTAMP(NANOS)
     * (earlier rounds) and TIMESTAMP(MICROS) (current driver generator),
     * so detect from the read schema and surface the SAME two columns
@@ -56,7 +68,7 @@ object T {
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
     HiveCompatFunctions.ensure(s)
     if (name == "events") {
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = parquet(s, dir, "events")
       raw.schema("ts").dataType match {
         case LongType => // TIMESTAMP(NANOS) file read as raw nanos
           raw.withColumn("ts_ns", col("ts"))
@@ -72,7 +84,7 @@ object T {
           raw.withColumn("ts", ts)
             .withColumn("ts_ns", unix_micros(ts) * lit(1000L))
       }
-    } else s.read.parquet(s"$dir/$name.parquet")
+    } else parquet(s, dir, name)
   }
 
   /** True if dir's events.parquet stores ts as INT64 TIMESTAMP(NANOS)
@@ -83,7 +95,42 @@ object T {
     */
   def eventsTsIsNanos(s: SparkSession, dir: String): Boolean = {
     HiveCompatFunctions.ensure(s)
-    s.read.parquet(s"$dir/events.parquet").schema("ts").dataType == LongType
+    parquet(s, dir, "events").schema("ts").dataType == LongType
+  }
+
+  /** Session confs that change how a parquet footer maps to Catalyst
+    * types; their values are part of the schema memo key. */
+  private val footerConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  // Session -> (path, footer conf values) -> (contentTag, schema). Keyed
+  // on the session object like HiveCompatFunctions.registered; the
+  // WeakHashMap lets dead sessions' memos be collected. A rewritten
+  // table replaces its entry, so a session holds one per path and conf
+  // combination.
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.concurrent
+      .ConcurrentHashMap[(String, Seq[Option[String]]), (String, StructType)]]())
+
+  /** `$dir/$name.parquet` through the session's schema memo (see [[t]]):
+    * the first read infers the schema as Spark always does and stores
+    * it; later reads pass it to the reader, which skips the footer job. */
+  private def parquet(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, footerConfs.map(s.conf.getOption))
+    val tag = contentTag(dir, name)
+    val memo =
+      schemas.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap())
+    memo.get(key) match {
+      case (`tag`, schema) => s.read.schema(schema).parquet(path)
+      case _ =>
+        val df = s.read.parquet(path)
+        memo.put(key, (tag, df.schema))
+        df
+    }
   }
 
   /** Exact-decimal cast for money/quantity doubles. Summing doubles is

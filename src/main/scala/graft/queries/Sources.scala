@@ -3,6 +3,7 @@ package graft.queries
 import graft._
 import graft.T._
 import graft.sources.LegacyDecode
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,6 +31,14 @@ object Sources extends QueryPack {
   private def tmp(dir: String, name: String): String =
     System.getProperty("java.io.tmpdir") + "/graft_src_" +
       dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" + name
+
+  /** Schema of a directory `df` was written to with `partitionBy(part)`:
+    * the data columns, then the partition column as the string partition
+    * discovery reads from its `part=value` directory names. Reading the
+    * directory back with it starts no footer-inference job. */
+  private def partitionedSchema(df: DataFrame, part: String): StructType =
+    StructType(df.schema.filterNot(_.name == part) :+
+      StructField(part, StringType))
 
   /** One Hive-catalog-backed session per JVM for the LOAD DATA entry
     * point (q_load_data): `LOAD DATA` is a metastore operation — Spark
@@ -580,11 +589,11 @@ object Sources extends QueryPack {
         |FROM orders WHERE o_orderstatus = 'F'
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
       val p = tmp(dir, "part")
-      t(s, dir, "orders")
+      val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderpriority", "o_orderstatus")
-        .repartition(col("o_orderstatus"))
+      o.repartition(col("o_orderstatus"))
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(p)
-      s.read.parquet(p)
+      s.read.schema(partitionedSchema(o, "o_orderstatus")).parquet(p)
         .filter(col("o_orderstatus") === "F")
         .groupBy("o_orderpriority").agg(count(lit(1)).as("cnt"))
         .orderBy("o_orderpriority")
@@ -618,7 +627,7 @@ object Sources extends QueryPack {
           .write.mode("overwrite").partitionBy("o_orderstatus").parquet(p)
       } finally prev.foreach(
         s.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      s.read.parquet(p)
+      s.read.schema(partitionedSchema(o, "o_orderstatus")).parquet(p)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("cnt"), dsum(col("o_totalprice")).as("sum_price"))
         .orderBy("o_orderstatus")
