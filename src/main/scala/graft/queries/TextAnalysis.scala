@@ -286,6 +286,12 @@ object TextAnalysis extends QueryPack {
       // surviving terms are computed over the full corpus either way —
       // identical rows out (oracle + A/B-parity checked); the flag
       // pins the old form for the A/B scale protocol.
+      // The broadcast() hint on that set is deliberate: the set is
+      // bounded by the literal doc_id < 10 filter, so it is listed in
+      // PlanLintSpec.boundedFactBroadcasts. Without it, a corpus whose
+      // static size estimate exceeds the broadcast threshold plans a
+      // sort-merge semi-join, and AQE demotes it to a broadcast only
+      // after the unpruned corpus token stream has been shuffled.
       val target = tok(docs.filter(col("doc_id") < 10))
       val tf = target.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       val semi = s.conf.getOption("spark.graft.tfidf.semijoin")

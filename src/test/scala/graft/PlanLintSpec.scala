@@ -137,6 +137,7 @@ class PlanLintSpec extends AnyFunSuite {
     "q_ann_quant_rerank", // same bounded query set
     "q_ann_jl_rerank", // same bounded query set + its projection
     "q_decontam_ngram", // doc_id < 50 eval-benchmark gram set
+    "q_text_tfidf", // doc_id < 10 target-doc term set (df semi-join prune)
     "q_decontam_substring", // doc_id < 50 eval snippet set
     "q_decontam_semantic", // vec_id < 16 eval-embedding set
     "q_ann_pq_adc", // vec_id < 4 codebook + vec_id in [4,9) query LUTs

@@ -72,6 +72,53 @@ class Round18OpsSpec extends AnyFunSuite {
     assert(pruned == full, "q_text_tfidf: df-prune arms disagree")
   }
 
+  test("q_text_tfidf: hinted df semi-join broadcasts the target terms" +
+    " and never shuffles the corpus token stream") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    // Walks into AQE query stages, which are leaves to plain collect.
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.finalPhysicalPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    // As at scale: the corpus file's static estimate exceeds the
+    // threshold, so without the hint the planner sort-merges the
+    // semi-join and AQE can demote it only after both sides shuffled.
+    val docsBytes = T.t(spark, dir, "documents")
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, (docsBytes / 16).toString)
+    val plan = try {
+      val df = SparkEntry.all.find(_.name == "q_text_tfidf").get
+        .run(spark, dir)
+      assert(df.collect().nonEmpty, "q_text_tfidf returned no rows")
+      T.releaseScratch(spark)
+      df.queryExecution.executedPlan
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val semis = nodes(plan).collect {
+      case j: BaseJoinExec if j.joinType == LeftSemi => j
+    }
+    assert(semis.size == 1, s"expected one LeftSemi join:\n$plan")
+    semis.head match {
+      case b: BroadcastHashJoinExec =>
+        val streamed = if (b.buildSide == BuildRight) b.left else b.right
+        val shuffles = nodes(streamed).collect {
+          case s @ (_: ShuffleQueryStageExec | _: ShuffleExchangeExec |
+              _: AQEShuffleReadExec) => s.nodeName
+        }
+        assert(shuffles.isEmpty,
+          s"corpus side of the df semi-join shuffled ($shuffles):\n$plan")
+      case j =>
+        fail(s"df semi-join planned as ${j.nodeName}, not a broadcast:\n$plan")
+    }
+  }
+
   test("forceWin pins the window branch (the A/B protocol's other arm)") {
     import spark.implicits._
     val big = spark.range(1L << 28).toDF("id")
