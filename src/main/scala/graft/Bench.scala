@@ -26,18 +26,10 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.tune(spark)
-    // Additive A/B hook for the dedicated-JVM scale protocol (r16):
-    // "k=v,k=v" session confs, e.g. spark.graft.topk.forceWin=true or
-    // spark.graft.tfidf.semijoin=false, so both arms of a conf-flagged
-    // dual form can be timed under the same harness. Unset (the
-    // driver) = no-op; the timed region and output contract are
-    // untouched.
-    sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach {
-      _.split(",").map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
-    }
+    // A failure is reported on stderr and the run goes on; a statement
+    // whose every timed iteration fails is listed in `failed`.
+    def report(what: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $what failed: $e")
 
     // Warm-up (untimed): bring the fresh fork JVM to steady state before
     // anything is timed. `count()` on parquet is answered from footer
@@ -50,7 +42,7 @@ object Bench {
     // default ANSI mode, summing uniform-random 64-bit hashes overflows
     // LongType within a handful of rows, so a sum(xxhash64) pass aborts
     // on [ARITHMETIC_OVERFLOW] before decoding the table (seen in the
-    // sf10 stderr; swallowed by the catch). XOR cannot overflow and
+    // sf10 stderr). XOR cannot overflow and
     // still requires every row's hash. Then a spread of representative queries
     // (join chain, windows, explode/regexp, array lambdas, decimal aggs,
     // set ops) runs once untimed: on a cold VM the first-timed queries
@@ -76,7 +68,7 @@ object Bench {
     T.star.foreach { n =>
       try T.t(spark, sfDir, n)
         .selectExpr("bit_xor(xxhash64(*)) as h").head()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => report(s"warm-up of table $n", e) }
     }
     val warmQs = Set("q1_pricing_summary", "q8_market_share",
       "q_win_rank", "q_explode_words", "q_text_tokens", "q_except_all",
@@ -86,31 +78,16 @@ object Bench {
     val regNames = SparkEntry.all.map(_.name).toSet
     require(warmQs.subsetOf(regNames),
       s"warmQs names missing from registry: ${(warmQs -- regNames).toSeq.sorted.mkString(",")}")
-    // SPARK_GRAFT_WARM_SPREAD=0 skips the representative-query spread
-    // (NOT the table pass or the sacrificial first-query re-run below).
-    // Exists for the dedicated-JVM scale protocol: at sf30 the ten
-    // spread queries cost minutes per JVM, and a single-query isolation
-    // run measuring a tens-of-seconds query doesn't need sub-second
-    // codegen-warmth precision — its own untimed re-run warms the one
-    // plan that will be timed. Bench-SF (sf0.1) runs keep the default.
-    val warmSpread = !sys.env.get("SPARK_GRAFT_WARM_SPREAD").contains("0")
-    if (warmSpread)
-      SparkEntry.all.filter(d => warmQs.contains(d.name)).foreach { d =>
-        try exec(d.run(spark, sfDir)) catch { case _: Throwable => () }
-        T.releaseScratch(spark)
-      }
+    SparkEntry.all.filter(d => warmQs.contains(d.name)).foreach { d =>
+      try exec(d.run(spark, sfDir))
+      catch { case e: Throwable => report(s"warm-up of ${d.name}", e) }
+      T.releaseScratch(spark)
+    }
     // Dev filter (same contract as Verify): SPARK_GRAFT_ONLY=q_a,q_b
     // times just those queries; unset (the driver) = all.
-    // SPARK_GRAFT_REVERSE=1 times them in reverse registry order — the
-    // scale-measurement protocol runs each set in both orders and takes
-    // the per-query MIN, which controls for in-JVM state accumulation
-    // (GC debris, shuffle-file page-cache pressure) that grows with
-    // position at multi-GB SFs (measured ±4× position effects at sf10).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val ordered0 = SparkEntry.all.filter(d => only.forall(_.contains(d.name)))
-    val ordered = if (sys.env.get("SPARK_GRAFT_REVERSE").contains("1"))
-      ordered0.reverse else ordered0
+    val ordered = SparkEntry.all.filter(d => only.forall(_.contains(d.name)))
 
     // Sacrificial untimed re-run of the FIRST query that will be timed,
     // right before the timed loop: q1 is in warmQs, but nine other
@@ -118,17 +95,15 @@ object Bench {
     // slot, and the r7 driver run still showed q1 at 2.38× while the
     // suite median ratio was 1.006 — residual first-slot JVM/allocator
     // state, not a plan issue. Re-running it as the LAST untimed action
-    // absorbs it. Uses the filtered, possibly-reversed list so targeted
-    // SPARK_GRAFT_ONLY dev runs warm the query they will actually time.
+    // absorbs it. Uses the filtered list so targeted SPARK_GRAFT_ONLY
+    // dev runs warm the query they will actually time.
     ordered.headOption.foreach { d =>
-      try exec(d.run(spark, sfDir)) catch { case _: Throwable => () }
+      try exec(d.run(spark, sfDir))
+      catch { case e: Throwable => report(s"warm-up of ${d.name}", e) }
       T.releaseScratch(spark)
     }
-    // The driver always runs default mode; the frozen force-mode JSON
-    // in BASELINE.md is the drift gate (scripts/drift_check.sh runs
-    // force mode by default since round 11), and the default-mode
-    // frozen JSON is kept for driver-run comparisons — see BASELINE.md
-    // "count-pruning artifact".
+    // Force mode is opt-in; see BASELINE.md "count-pruning artifact"
+    // for what it measures that default mode does not.
     var failed = List.empty[String]
     val results = ordered
       .flatMap { d =>
@@ -136,7 +111,7 @@ object Bench {
         val t0 = System.nanoTime()
         val r =
           try { exec(d.run(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-          catch { case _: Throwable => None }
+          catch { case e: Throwable => report(d.name, e); None }
         // Per-ITERATION scratch release (untimed): each run() builds
         // fresh checkpoint blocks, so without this the 3 iterations
         // hold 3 copies and ~200 queries × iters accumulate — the
@@ -165,7 +140,7 @@ object Bench {
       s"""{"metric":"total","value":${jnum(total)},"unit":"sec",$forceTag"queries":$fullQs,"failed":$fs,"iters":$iters,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_DETAIL.json"), fullLine + "\n")
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => report("writing BENCH_DETAIL.json", e) }
 
     val slow = results.sortBy(-_._2).take(25)
       .map { case (k, v) => "\"" + k + "\":" + jnum(v) }

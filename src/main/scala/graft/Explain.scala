@@ -35,20 +35,6 @@ object Explain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.tune(spark)
-    // SPARK_GRAFT_TOPK_FORCE=1 dumps the size-adaptive queries' SCALE
-    // plan (the collect_topk branch) instead of the bench-SF window
-    // branch — the committed plans/r15 evidence needs both.
-    if (sys.env.get("SPARK_GRAFT_TOPK_FORCE").contains("1"))
-      spark.conf.set("spark.graft.topk.forceAgg", "true")
-    // Generic session-conf passthrough for dumping the other arm of a
-    // conf-flagged dual form (e.g. spark.graft.tfidf.semijoin=false,
-    // spark.graft.medianmad.fused=false): "k=v,k=v".
-    sys.env.get("SPARK_GRAFT_EXPLAIN_CONF").foreach {
-      _.split(",").map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
-    }
     SparkEntry.all.filter(d => only.contains(d.name)).foreach { d =>
       val df = d.run(spark, sfDir)
       val txt = df.queryExecution.explainString(

@@ -43,9 +43,7 @@ object SparkEntry {
     // k-element bounded buffers — a few MB). 65536 keeps the hash path
     // for those while still bounding worst-case buffer residency
     // (65536 × k elements) far below executor memory; past it the exec
-    // degrades gracefully to the old sort behavior. Env-overridable for
-    // cluster tuning (scale-dependent setting, parameterised per the
-    // optimization-round rules).
+    // degrades gracefully to the old sort behavior.
     // CAVEAT (ADVICE r15): the threshold is global, so it also governs
     // the theta/KLL/ngram sketch aggregates, whose per-group buffers
     // are KB-to-tens-of-KB — the "65536 × k elements" residency bound
@@ -53,9 +51,9 @@ object SparkEntry {
     // on a low-cardinality key (≤ dozens of groups/task), so the
     // high-threshold × big-buffer product is unreachable today; a new
     // sketch query grouping on a high-cardinality key must lower this
-    // (env above) or aggregate in two stages.
+    // or aggregate in two stages.
     c.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"))
+      "65536")
     HiveCompatFunctions.ensure(spark)
     // Dormant until spark.graft.stats.answerQueries=true (Hive's
     // hive.compute.query.using.stats twin — see plans/StatsAnswer).

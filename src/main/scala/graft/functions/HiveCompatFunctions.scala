@@ -108,7 +108,7 @@ object HiveCompatFunctions {
       // with a unique id, or a unique scalar). A caller with boundary
       // ties would get a deterministic-per-plan but
       // partitioning-dependent keep-set — not a drop-in row_number
-      // replacement.
+      // replacement. TopKAgg.perGroup: its last order key must be unique.
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "collect_topk",
         exprs => {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
@@ -48,14 +49,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType}
   * shuffle-scratch that ENOSPC'd the sf100 ANN runs (BASELINE/SCALE
   * round-14). A wrong-side decision changes only the PLAN, never the
   * result: both forms emit identical rows (TopKSpec + the per-site
-  * Round17OpsSpec force-mode parity). Gate on the CORPUS-side frame's
-  * optimizer size estimate (the expansion's own join estimate is not
-  * trustworthy); 128 MiB ≈ the third data decade (sf30), where the
-  * expansion sorts start spilling — sf100 embeddings (~500 MB) engage,
-  * every local bench SF keeps its frozen window plan byte-identical.
-  * spark.graft.topk.forceAgg=true force-engages (tests).
+  * Round17OpsSpec/Round18OpsSpec parity). Gate on the CORPUS-side
+  * frame's optimizer size estimate (the expansion's own join estimate
+  * is not trustworthy). `perGroup` is the one operator that writes
+  * both forms; call sites pick the arm with `engage`.
   */
 object TopKAgg {
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.functions._
+
   /** Cutover estimate, re-fitted from the r16 dedicated-JVM A/B runs
     * (SCALE.md "Round-17: engaged collect_topk measured"): at sf30
     * (234 MB corpus estimate) the window form's expansion sort still
@@ -64,30 +66,97 @@ object TopKAgg {
     * a measured ENOSPC (twice, r14) and the aggregate completes — so
     * the line sits between those decades, not at the r15 guess of
     * 128 MiB (which engaged sf30 early and cost q_ann_ivf_cells 2.4×).
-    * Env-overridable: on a cluster whose per-node shuffle scratch is
-    * not one NVMe, a larger threshold keeps the faster window form
-    * longer (scale-dependent setting, parameterised per the
-    * optimization-round rules).
     */
-  val engageBytes: Long =
-    sys.env.get("SPARK_GRAFT_TOPK_ENGAGE_BYTES").map(_.toLong)
-      .getOrElse(1L << 29)
+  val engageBytes: Long = 1L << 29
 
-  /** Branch selector for the rank-window ⇄ collect_topk rewrite. A
-    * wrong-side decision changes only the PLAN, never the result
-    * (TopKSpec + Round17OpsSpec parity). forceAgg/forceWin exist for
-    * tests and A/B scale runs. NOTE (ADVICE r15): this consults the
-    * corpus frame's optimizer estimate, which forces an
-    * analysis+optimization pass of that sub-frame on the driver —
-    * call it once per query build and thread the Boolean (as every
-    * site does), not per stage.
+  private val forced = ThreadLocal.withInitial[Option[Boolean]](() => None)
+
+  /** Runs `body` with `engage` answering `agg` (true: the collect_topk
+    * arm) on this thread only — how specs compare both arms. Not a
+    * session conf, so no user can set it, and a statement built on
+    * another thread (a child thread included) never sees it.
     */
-  def engage(corpus: org.apache.spark.sql.DataFrame): Boolean = {
-    val conf = corpus.sparkSession.conf
-    if (conf.getOption("spark.graft.topk.forceAgg").contains("true")) true
-    else if (conf.getOption("spark.graft.topk.forceWin").contains("true"))
-      false
-    else corpus.queryExecution.optimizedPlan.stats.sizeInBytes > engageBytes
+  private[graft] def forcing[A](agg: Boolean)(body: => A): A = {
+    val saved = forced.get
+    forced.set(Some(agg))
+    try body finally forced.set(saved)
+  }
+
+  /** Branch selector for the rank-window ⇄ collect_topk rewrite. This
+    * consults the corpus frame's optimizer estimate, which forces an
+    * analysis+optimization pass of that sub-frame on the driver — call
+    * it once per statement build and pass the Boolean to every
+    * `perGroup` stage of that statement.
+    */
+  def engage(corpus: DataFrame): Boolean =
+    forced.get.getOrElse(
+      corpus.queryExecution.optimizedPlan.stats.sizeInBytes > engageBytes)
+
+  /** `order` direction flags: `"d" -> Asc`, `"cos" -> Desc`. */
+  final val Asc = false
+  final val Desc = true
+
+  /** The k first rows of each `by` group under `order` (Hive's
+    * per-group top-N, the job `TopNKeyOperator` does), in one of two
+    * plans that emit the same rows:
+    *
+    *  - window arm (`agg = false`):
+    *    `row_number() OVER (PARTITION BY by ORDER BY order) <= k`,
+    *    which Spark plans as a partial WindowGroupLimit before the
+    *    exchange;
+    *  - aggregate arm (`agg = true`):
+    *    `posexplode(collect_topk(struct(keys…, carry…), k, reverse))`,
+    *    which folds each map task to k-row buffers per group.
+    *
+    * Output columns: `by`, the `order` keys, `carry`, then `rank`
+    * (the 1-based row_number, int) when given. Callers rename and cast
+    * after the call.
+    *
+    * TOTAL ORDER REQUIRED: the last `order` key must be unique within
+    * a group. collect_topk keeps the incumbent on a comparison tie, so
+    * with ties at the k-th row the two arms (and two partitionings of
+    * the aggregate arm) may keep different rows. Keys must be non-null.
+    * A key whose direction differs from the first key's is stored
+    * negated in the struct (struct order is ascending field by field),
+    * so it must be numeric.
+    */
+  def perGroup(
+      df: DataFrame,
+      by: Seq[String],
+      order: Seq[(String, Boolean)],
+      k: Int,
+      carry: Seq[String] = Nil,
+      rank: Option[String] = None,
+      agg: Boolean): DataFrame = {
+    val keys = order.map(_._1)
+    if (!agg) {
+      val w = Window.partitionBy(by.map(col): _*).orderBy(order.map {
+        case (c, desc) => if (desc) col(c).desc else col(c)
+      }: _*)
+      val rn = rank.getOrElse("_topk_rn")
+      df.withColumn(rn, row_number().over(w))
+        .filter(col(rn) <= k)
+        .select((by ++ keys ++ carry ++ rank).map(col): _*)
+    } else {
+      val firstDesc = order.head._2
+      val flipped = order.map(_._2 != firstDesc)
+      val fields = order.zip(flipped).map {
+        case ((c, _), neg) => if (neg) (-col(c)).as(c) else col(c)
+      } ++ carry.map(col)
+      val top = df.groupBy(by.map(col): _*)
+        .agg(call_function("collect_topk", struct(fields: _*), lit(k),
+          lit(!firstDesc)).as("_topk"))
+      val rows =
+        if (rank.isDefined)
+          posexplode(col("_topk")).as(Seq("_topk_pos", "_topk_row"))
+        else explode(col("_topk")).as("_topk_row")
+      def field(c: String) = col(s"_topk_row.$c")
+      top.select(by.map(col) :+ rows: _*)
+        .select(by.map(col) ++ keys.zip(flipped).map {
+          case (c, neg) => (if (neg) -field(c) else field(c)).as(c)
+        } ++ carry.map(c => field(c).as(c)) ++
+          rank.map(r => (col("_topk_pos") + 1).as(r)): _*)
+    }
   }
 }
 

@@ -389,16 +389,13 @@ object Aggregates extends QueryPack {
         // both onto ONE range shuffle via the k-closest-window identity
         // (the k smallest |v−med| are a contiguous window of the
         // value-sorted order) — bit-identical arithmetic, proven by
-        // Round18OpsSpec against this very composition. The conf flag
-        // exists for the A/B scale protocol and forced-parity tests; a
-        // wrong-side cutover changes the plan, never the result.
+        // Round18OpsSpec against this very composition. A wrong-side
+        // cutover changes the plan, never the result.
         val l = t(s, dir, "lineitem")
           .select(col("l_returnflag"), col("l_extendedprice"))
         import s.implicits._
         val estBytes = l.queryExecution.optimizedPlan.stats.sizeInBytes
-        val fused = s.conf.getOption("spark.graft.medianmad.fused")
-          .forall(_.toBoolean) &&
-          estBytes > operators.RankSelect.aggregateSafeBytes
+        val fused = estBytes > operators.RankSelect.aggregateSafeBytes
         val triples: Seq[(String, Double, Double, Long)] = if (fused) {
           operators.RankSelect.groupedMedianMad(
             l, "l_returnflag", "l_extendedprice")

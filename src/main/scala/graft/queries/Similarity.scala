@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.storage.StorageLevel
 import graft._
 import graft.T._
+import graft.TopKAgg.{Asc, Desc}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -114,22 +115,14 @@ object Similarity extends QueryPack {
     // it the bounded top-k aggregate, which folds the n×ncoarse
     // expansion to 2-element buffers MAP-SIDE instead of sorting it
     // inside the partial WindowGroupLimit — the sf100 scratch fix.
-    // Identical rows either way (struct(d, co_id) asc ≡ ORDER BY d,
-    // co_id — TopKSpec).
+    // Identical rows either way (TopKSpec).
     val probeD = emb.crossJoin(broadcast(coarse))
       .withColumn("d",
         (col("en") + col("con") - lit(2) * dot("qd", "co")).cast("long"))
       .select(col("vec_id"), col("co_id"), col("d"))
-    val probes = if (TopKAgg.engage(emb)) {
-      probeD.groupBy("vec_id")
-        .agg(expr("collect_topk(struct(d, co_id), 2, true)").as("top"))
-        .select(col("vec_id"), explode(col("top.co_id")).as("co_id"))
-    } else {
-      val wp = org.apache.spark.sql.expressions.Window
-        .partitionBy("vec_id").orderBy(col("d"), col("co_id"))
-      probeD.withColumn("rn", row_number().over(wp))
-        .filter(col("rn") <= 2).select("vec_id", "co_id")
-    }
+    val probes = TopKAgg.perGroup(probeD, Seq("vec_id"),
+      Seq("d" -> Asc, "co_id" -> Asc), 2, agg = TopKAgg.engage(emb))
+      .select("vec_id", "co_id")
     emb.join(probes, "vec_id")
       .join(broadcast(fineCo), "co_id")
       .withColumn("d",
@@ -448,29 +441,16 @@ object Similarity extends QueryPack {
       // #6; q_ann_pq_adc's note). Gated on the quantized-corpus
       // estimate so the index and delta variants cut over at the same
       // scale as q_ann_ivfpq (identical search plan contract).
-      val useAgg = TopKAgg.engage(emb)
       val adcScored = codes.join(lut, "cell_id")
         .withColumn("adc_dist", expr(
           "aggregate(zip_with(codes, sequence(0, 7)," +
             " (c, s) -> element_at(lut, cast(s*4 + c + 1 as int)))," +
             " cast(0 as bigint), (a, x) -> a + x)"))
-      val top = if (useAgg) {
-        adcScored.groupBy("q_id")
-          .agg(expr(
-            "collect_topk(struct(adc_dist, vec_id, cell_id), 5, true)")
-            .as("top"))
-          .select(col("q_id"), posexplode(col("top")))
-          .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
-            col("col.vec_id").as("cand_id"), col("col.cell_id").as("cell_id"),
-            col("col.adc_dist").as("adc_dist"))
-      } else {
-        adcScored.withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("q_id").orderBy(col("adc_dist"), col("vec_id"))))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("rn").cast("int").as("rn"),
-            col("vec_id").as("cand_id"), col("cell_id"), col("adc_dist"))
-      }
+      val top = TopKAgg.perGroup(adcScored, Seq("q_id"),
+        Seq("adc_dist" -> Asc, "vec_id" -> Asc), 5, carry = Seq("cell_id"),
+        rank = Some("rn"), agg = TopKAgg.engage(emb))
+        .select(col("q_id"), col("rn").cast("int").as("rn"),
+          col("vec_id").as("cand_id"), col("cell_id"), col("adc_dist"))
       val corpV = emb.filter(col("vec_id") >= 9)
         .select(col("vec_id").as("cand_id"), col("qd").as("cv2"),
           col("en").as("cvn2"))
@@ -1160,38 +1140,18 @@ object Similarity extends QueryPack {
         .select(col("vec_id"), col("co_id"),
           round(dot("embedding", "co") / (col("nrm") * col("co_nrm")), 6)
             .as("vcos"))
-      val vc = if (useAgg) {
-        vcD.groupBy("vec_id")
-          .agg(expr(
-            s"collect_topk(struct(vcos, -co_id AS inv, co_id), $wc, false)")
-            .as("top"))
-          .select(col("vec_id"), explode(col("top.co_id")).as("co_id"))
-      } else {
-        val wCoarse = org.apache.spark.sql.expressions.Window
-          .partitionBy("vec_id").orderBy(col("vcos").desc, col("co_id"))
-        vcD.withColumn("crn", row_number().over(wCoarse))
-          .filter(col("crn") <= wc)
-          .select("vec_id", "co_id")
-      }
+      val vc = TopKAgg.perGroup(vcD, Seq("vec_id"),
+        Seq("vcos" -> Desc, "co_id" -> Asc), wc, agg = useAgg)
+        .select("vec_id", "co_id")
       val rankedD = vc.join(e, "vec_id")
         .join(broadcast(fine), "co_id")
         .select(col("vec_id"), col("cent_id"),
           round(dot("embedding", "cent") / (col("nrm") * col("cent_nrm")),
             6).as("cent_cos"))
-      val ranked = (if (useAgg) {
-        rankedD.groupBy("vec_id")
-          .agg(expr("collect_topk(struct(cent_cos, -cent_id AS inv," +
-            s" cent_id), $nprobe, false)").as("top"))
-          .select(col("vec_id"), posexplode(col("top")))
-          .select(col("vec_id"), (col("pos") + 1).as("arn"),
-            col("col.cent_id").as("cent_id"))
-      } else {
-        val wAssign = org.apache.spark.sql.expressions.Window
-          .partitionBy("vec_id").orderBy(col("cent_cos").desc, col("cent_id"))
-        rankedD.withColumn("arn", row_number().over(wAssign))
-          .filter(col("arn") <= nprobe)
-          .select("vec_id", "arn", "cent_id")
-      })
+      val ranked = TopKAgg.perGroup(rankedD, Seq("vec_id"),
+        Seq("cent_cos" -> Desc, "cent_id" -> Asc), nprobe,
+        rank = Some("arn"), agg = useAgg)
+        .select("vec_id", "arn", "cent_id")
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
         .join(e, "vec_id") // re-attach embedding+nrm to the survivors
       // Inverted file: every vector lives in exactly ONE cell (arn=1),
@@ -1371,19 +1331,9 @@ object Similarity extends QueryPack {
         .select(col("vec_id"), col("co_id"),
           round(dot("embedding", "co") / (col("nrm") * col("co_nrm")), 6)
             .as("vcos"))
-      val vc = if (useAgg) {
-        vcD.groupBy("vec_id")
-          .agg(expr(
-            s"collect_topk(struct(vcos, -co_id AS inv, co_id), $wc, false)")
-            .as("top"))
-          .select(col("vec_id"), explode(col("top.co_id")).as("co_id"))
-      } else {
-        val wCoarse = org.apache.spark.sql.expressions.Window
-          .partitionBy("vec_id").orderBy(col("vcos").desc, col("co_id"))
-        vcD.withColumn("crn", row_number().over(wCoarse))
-          .filter(col("crn") <= wc)
-          .select("vec_id", "co_id")
-      }
+      val vc = TopKAgg.perGroup(vcD, Seq("vec_id"),
+        Seq("vcos" -> Desc, "co_id" -> Asc), wc, agg = useAgg)
+        .select("vec_id", "co_id")
       // Fine comparisons restricted to the probed coarse cells: join
       // back the embedding by vec_id, broadcast-join the fine table on
       // its coarse parent — each vector meets ~wc·nlist/ncoarse fine
@@ -1393,20 +1343,10 @@ object Similarity extends QueryPack {
         .select(col("vec_id"), col("cent_id"),
           round(dot("embedding", "cent") / (col("nrm") * col("cent_nrm")), 6)
             .as("fcos"))
-      val ranked = (if (useAgg) {
-        rankedD.groupBy("vec_id")
-          .agg(expr("collect_topk(struct(fcos, -cent_id AS inv," +
-            s" cent_id), $nprobe, false)").as("top"))
-          .select(col("vec_id"), posexplode(col("top")))
-          .select(col("vec_id"), (col("pos") + 1).as("arn"),
-            col("col.cent_id").as("cent_id"))
-      } else {
-        val wFine = org.apache.spark.sql.expressions.Window
-          .partitionBy("vec_id").orderBy(col("fcos").desc, col("cent_id"))
-        rankedD.withColumn("arn", row_number().over(wFine))
-          .filter(col("arn") <= nprobe)
-          .select("vec_id", "arn", "cent_id")
-      })
+      val ranked = TopKAgg.perGroup(rankedD, Seq("vec_id"),
+        Seq("fcos" -> Desc, "cent_id" -> Asc), nprobe,
+        rank = Some("arn"), agg = useAgg)
+        .select("vec_id", "arn", "cent_id")
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
         .join(e, "vec_id") // re-attach embedding+nrm to the survivors
       // Inverted file + probes + exact rescore: identical tail to
@@ -2129,32 +2069,17 @@ object Similarity extends QueryPack {
       // sort-scratch term the IVF sites measured into sf100 ENOSPC.
       // Above the cutover the bounded top-k aggregate folds it to
       // 5-element buffers map-side; identical rows either way
-      // (struct natural order ≡ ORDER BY adc_dist, vec_id with
-      // reverse=true keeping the k smallest — TopKSpec laws,
-      // Round18OpsSpec forced row-set parity), rn reconstructed from
-      // the aggregate's best-first output order.
-      val useAgg = TopKAgg.engage(emb)
+      // (TopKSpec laws, Round18OpsSpec forced row-set parity).
       val adcScored = codes.crossJoin(lut)
         .withColumn("adc_dist", expr(
           "aggregate(zip_with(codes, sequence(0, 7)," +
             " (c, s) -> element_at(lut, cast(s*4 + c + 1 as int)))," +
             " cast(0 as bigint), (a, x) -> a + x)"))
-      val top = if (useAgg) {
-        adcScored.groupBy("q_id")
-          .agg(expr("collect_topk(struct(adc_dist, vec_id), 5, true)")
-            .as("top"))
-          .select(col("q_id"), posexplode(col("top")))
-          .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
-            col("col.vec_id").as("cand_id"),
-            col("col.adc_dist").as("adc_dist"))
-      } else {
-        val wTop = org.apache.spark.sql.expressions.Window
-          .partitionBy("q_id").orderBy(col("adc_dist"), col("vec_id"))
-        adcScored.withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("rn").cast("int").as("rn"),
-            col("vec_id").as("cand_id"), col("adc_dist"))
-      }
+      val top = TopKAgg.perGroup(adcScored, Seq("q_id"),
+        Seq("adc_dist" -> Asc, "vec_id" -> Asc), 5, rank = Some("rn"),
+        agg = TopKAgg.engage(emb))
+        .select(col("q_id"), col("rn").cast("int").as("rn"),
+          col("vec_id").as("cand_id"), col("adc_dist"))
       // Exact rerank of the 25 winners: join the original vectors back
       // in by id (top side broadcasts; the corpus never re-shuffles).
       val corpV = corp.select(col("vec_id").as("cand_id"),
@@ -2281,27 +2206,15 @@ object Similarity extends QueryPack {
       // expansion, k=50). The exact-rerank window below stays a
       // window: its input is shortlist·queries rows (250 here, 50·|q|
       // at any scale) — model-sized by construction.
-      val useAgg = TopKAgg.engage(emb)
       val shortScored = codes.crossJoin(lut)
         .withColumn("adc_dist", expr(
           "aggregate(zip_with(codes, sequence(0, 7)," +
             " (c, s) -> element_at(lut, cast(s*16 + c + 1 as int)))," +
             " cast(0 as bigint), (a, x) -> a + x)"))
-      val short = if (useAgg) {
-        shortScored.groupBy("q_id")
-          .agg(expr("collect_topk(struct(adc_dist, vec_id), 50, true)")
-            .as("top"))
-          .select(col("q_id"), explode(col("top")).as("t"))
-          .select(col("q_id"), col("t.vec_id").as("cand_id"),
-            col("t.adc_dist").as("adc_dist"))
-      } else {
-        val wShort = org.apache.spark.sql.expressions.Window
-          .partitionBy("q_id").orderBy(col("adc_dist"), col("vec_id"))
-        shortScored.withColumn("rn", row_number().over(wShort))
-          .filter(col("rn") <= 50)
-          .select(col("q_id"), col("vec_id").as("cand_id"),
-            col("adc_dist"))
-      }
+      val short = TopKAgg.perGroup(shortScored, Seq("q_id"),
+        Seq("adc_dist" -> Asc, "vec_id" -> Asc), 50,
+        agg = TopKAgg.engage(emb))
+        .select(col("q_id"), col("vec_id").as("cand_id"), col("adc_dist"))
       // Exact rerank of the 250 shortlist rows; the corpus side joins
       // by id (shortlist broadcasts), floats touched only here.
       val corpV = corp.select(col("vec_id").as("cand_id"),
@@ -2413,31 +2326,17 @@ object Similarity extends QueryPack {
       // cell_id — the cell-partition pruning shape — then pure lookups.
       // Final rank — SIZE-ADAPTIVE (TopKAgg.engage, r16, VERDICT r15
       // #6; q_ann_pq_adc's note): nprobe/nlist of corpus × queries.
-      // cell_id trails the ordering struct but never orders — vec_id
-      // is unique per group (the min(struct) carry trick above).
-      val useAgg = TopKAgg.engage(emb)
+      // cell_id is carried, never ordered — vec_id is unique per group.
       val adcScored = codes.join(lut, "cell_id")
         .withColumn("adc_dist", expr(
           "aggregate(zip_with(codes, sequence(0, 7)," +
             " (c, s) -> element_at(lut, cast(s*4 + c + 1 as int)))," +
             " cast(0 as bigint), (a, x) -> a + x)"))
-      val top = if (useAgg) {
-        adcScored.groupBy("q_id")
-          .agg(expr(
-            "collect_topk(struct(adc_dist, vec_id, cell_id), 5, true)")
-            .as("top"))
-          .select(col("q_id"), posexplode(col("top")))
-          .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
-            col("col.vec_id").as("cand_id"), col("col.cell_id").as("cell_id"),
-            col("col.adc_dist").as("adc_dist"))
-      } else {
-        val wTop = org.apache.spark.sql.expressions.Window
-          .partitionBy("q_id").orderBy(col("adc_dist"), col("vec_id"))
-        adcScored.withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5)
-          .select(col("q_id"), col("rn").cast("int").as("rn"),
-            col("vec_id").as("cand_id"), col("cell_id"), col("adc_dist"))
-      }
+      val top = TopKAgg.perGroup(adcScored, Seq("q_id"),
+        Seq("adc_dist" -> Asc, "vec_id" -> Asc), 5, carry = Seq("cell_id"),
+        rank = Some("rn"), agg = TopKAgg.engage(emb))
+        .select(col("q_id"), col("rn").cast("int").as("rn"),
+          col("vec_id").as("cand_id"), col("cell_id"), col("adc_dist"))
       val corpV = corp.select(col("vec_id").as("cand_id"),
         col("qd").as("cv2"), col("en").as("cvn2"))
       val qV = broadcast(qs.select(col("q_id"), col("qv"), col("qn")))
@@ -3261,29 +3160,17 @@ object Similarity extends QueryPack {
       // Top-2 rank — SIZE-ADAPTIVE (TopKAgg.engage, r16, VERDICT r15
       // #6): the scored relation is feature-store corpus × 6 queries —
       // the same expansion shape as the IVF assignment stages whose
-      // window sort-scratch measured into sf100 ENOSPC. Struct order
-      // (cos DESC, doc_id ASC) via the negated tie-break field — the
-      // r15 idiom, forced-parity-tested in Round18OpsSpec.
-      val useAgg = TopKAgg.engage(img)
+      // window sort-scratch measured into sf100 ENOSPC; forced-parity
+      // tested in Round18OpsSpec.
       val scored = img.crossJoin(qs)
         .withColumn("cos_sim",
           round(dot("qpd", "pd") / (col("qnrm") * col("inrm")), 6))
-      (if (useAgg) {
-        scored.groupBy("q_id")
-          .agg(expr(
-            "collect_topk(struct(cos_sim, -doc_id AS inv, doc_id), 2, false)")
-            .as("top"))
-          .select(col("q_id"), posexplode(col("top")))
-          .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
-            col("col.doc_id").as("doc_id"), col("col.cos_sim").as("cos_sim"))
-      } else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("q_id").orderBy(col("cos_sim").desc, col("doc_id"))
-        scored.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 2)
-          .select(col("q_id"), col("rn").cast("int").as("rn"),
-            col("doc_id"), col("cos_sim"))
-      }).orderBy("q_id", "rn")
+      TopKAgg.perGroup(scored, Seq("q_id"),
+        Seq("cos_sim" -> Desc, "doc_id" -> Asc), 2, rank = Some("rn"),
+        agg = TopKAgg.engage(img))
+        .select(col("q_id"), col("rn").cast("int").as("rn"),
+          col("doc_id"), col("cos_sim"))
+        .orderBy("q_id", "rn")
     },
 
     // Cross-modal retrieval through IVF PROBE ROUTING (round 14): the
@@ -3368,23 +3255,10 @@ object Similarity extends QueryPack {
       // shuffles the whole corpus into ≤4 tasks (the guide-§2 skew
       // shape), while the aggregate folds each map task to ≤4·cellCap
       // rows before the exchange. doc_id is unique, so the carried
-      // embedding/norm fields trail the ordering struct without ever
-      // being compared (the min(struct) carry trick).
-      val useAgg = TopKAgg.engage(img)
-      val index = if (useAgg) {
-        assigned.groupBy("cell")
-          .agg(expr(
-            s"collect_topk(struct(doc_id, pd, inrm), $cellCap, true)")
-            .as("mem"))
-          .select(col("cell"), explode(col("mem")).as("m"))
-          .select(col("m.doc_id").as("doc_id"), col("cell"),
-            col("m.pd").as("pd"), col("m.inrm").as("inrm"))
-      } else {
-        val wCell = org.apache.spark.sql.expressions.Window
-          .partitionBy("cell").orderBy("doc_id")
-        assigned.withColumn("crnk", row_number().over(wCell))
-          .filter(col("crnk") <= cellCap).drop("crnk")
-      }
+      // embedding/norm fields are never compared.
+      val index = TopKAgg.perGroup(assigned, Seq("cell"),
+        Seq("doc_id" -> Asc), cellCap, carry = Seq("pd", "inrm"),
+        agg = TopKAgg.engage(img))
       val qs = t(s, dir, "embeddings")
         .filter(col("vec_id") < 6)
         .select(col("vec_id").as("q_id"), expr(

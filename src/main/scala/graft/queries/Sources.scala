@@ -335,9 +335,8 @@ object Sources extends QueryPack {
         |  CAST(SUM(n_nationkey) AS BIGINT) AS key_sum,
         |  MIN(n_name) AS first_name
         |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin) { (s, dir) =>
-      import org.apache.hadoop.hive.ql.io.{RCFileInputFormat, RCFileOutputFormat}
+      import org.apache.hadoop.hive.ql.io.RCFileOutputFormat
       import org.apache.hadoop.hive.serde2.columnar.{BytesRefArrayWritable, BytesRefWritable}
-      import org.apache.hadoop.io.LongWritable
       import java.nio.charset.StandardCharsets.UTF_8
       val p = tmp(dir, "rcfile")
       val fs = org.apache.hadoop.fs.FileSystem.get(

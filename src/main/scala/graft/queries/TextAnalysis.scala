@@ -284,8 +284,8 @@ object TextAnalysis extends QueryPack {
       // before the count-distinct's (term, doc_id) pair shuffle, which
       // otherwise grows linearly with the corpus. df values for
       // surviving terms are computed over the full corpus either way —
-      // identical rows out (oracle + A/B-parity checked); the flag
-      // pins the old form for the A/B scale protocol.
+      // identical rows out (oracle + Round18OpsSpec's unpruned
+      // reference).
       // The broadcast() hint on that set is deliberate: the set is
       // bounded by the literal doc_id < 10 filter, so it is listed in
       // PlanLintSpec.boundedFactBroadcasts. Without it, a corpus whose
@@ -294,13 +294,10 @@ object TextAnalysis extends QueryPack {
       // after the unpruned corpus token stream has been shuffled.
       val target = tok(docs.filter(col("doc_id") < 10))
       val tf = target.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val semi = s.conf.getOption("spark.graft.tfidf.semijoin")
-        .forall(_.toBoolean)
-      val dfIn =
-        if (semi) tok(docs).join(broadcast(target.select("term").distinct()),
-          Seq("term"), "left_semi")
-        else tok(docs)
-      val df = dfIn.groupBy("term")
+      val df = tok(docs)
+        .join(broadcast(target.select("term").distinct()), Seq("term"),
+          "left_semi")
+        .groupBy("term")
         .agg(countDistinct(col("doc_id")).as("df"))
       val n = docs.agg(count(lit(1)).as("n"))
       val w = org.apache.spark.sql.expressions.Window

@@ -42,7 +42,7 @@ object LegacyDecode {
   def parseLong(s: String): java.lang.Long =
     if (s == null || s.isEmpty || s.length > 19) null
     else {
-      var i = if (s.charAt(0) == '-') 1 else 0
+      val i = if (s.charAt(0) == '-') 1 else 0
       if (i >= s.length) null
       else {
         var digits = true

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (q_ann_ivf_cells, q_ann_ivf_hier, q_ann_lsh_bucketed,
   *    q_dedup_semantic) pick between the rank-window form (below
   *    TopKAgg.engageBytes — every local SF) and the bounded top-k
-  *    aggregate (corpus scale / forced). A wrong-side decision must
+  *    aggregate (corpus scale, or forced through the thread-scoped
+  *    TopKAgg.forcing override). A wrong-side decision must
   *    change only the plan, never the result — proven here by running
   *    each query BOTH ways on the same data and comparing full
   *    row-sets. This is the Round9OpsSpec forced-bit-equivalence
@@ -31,20 +32,17 @@ class Round17OpsSpec extends AnyFunSuite {
       T.releaseScratch(spark)
       out
     }
-    spark.conf.set("spark.graft.topk.forceAgg", "false")
-    val window = rows()
-    spark.conf.set("spark.graft.topk.forceAgg", "true")
-    val agg = try rows()
-    finally spark.conf.set("spark.graft.topk.forceAgg", "false")
+    val window = TopKAgg.forcing(agg = false)(rows())
+    val agg = TopKAgg.forcing(agg = true)(rows())
     (window, agg)
   }
 
   // NOTE (r16): q_ann_lsh_bucketed's skew-cap site was reverted to
   // window-always (the sf30 A/B measured the agg form ENOSPC at 60 GB
   // scratch — bounded-occupancy group domain; see the site comment in
-  // Similarity.scala), so forceAgg no longer changes its plan and its
-  // entry here degenerates to a re-run determinism check. Kept rather
-  // than removed: it still pins the row-set across the conf flip.
+  // Similarity.scala), so the override no longer changes its plan and
+  // its entry here degenerates to a re-run determinism check. Kept
+  // rather than removed: it still pins the row-set across both arms.
   for (q <- Seq("q_ann_ivf_cells", "q_ann_ivf_hier", "q_ann_lsh_bucketed",
     "q_dedup_semantic")) {
     test(s"$q: window form == forced collect_topk form (row-set parity)") {
@@ -59,10 +57,16 @@ class Round17OpsSpec extends AnyFunSuite {
     val tiny = (1 to 100).map(i => (i.toLong, i % 5)).toDF("id", "g")
     assert(!TopKAgg.engage(tiny),
       "tiny frame must take the window path (bench plans frozen)")
-    // Force flag overrides (what the parity tests above rely on).
-    spark.conf.set("spark.graft.topk.forceAgg", "true")
-    try assert(TopKAgg.engage(tiny))
-    finally spark.conf.set("spark.graft.topk.forceAgg", "false")
+    // The thread-scoped override wins (what the parity tests above
+    // rely on), and only for the thread that set it.
+    TopKAgg.forcing(agg = true) {
+      assert(TopKAgg.engage(tiny))
+      var other = true
+      val t = new Thread(() => other = TopKAgg.engage(tiny))
+      t.start()
+      t.join()
+      assert(!other, "a statement built on another thread saw the override")
+    }
     // The threshold is the RankSelect-style bytes estimate: a frame the
     // optimizer prices above engageBytes engages. spark.range is priced
     // at 8 bytes/row, so 2^27 rows ≈ 1 GiB > the 512 MiB threshold
@@ -71,10 +75,13 @@ class Round17OpsSpec extends AnyFunSuite {
     val big = spark.range(1L << 27).toDF("id")
     assert(TopKAgg.engage(big),
       "corpus-scale estimate must engage the bounded top-k aggregate")
+    TopKAgg.forcing(agg = false) {
+      assert(!TopKAgg.engage(big),
+        "the window override must hold at any estimate")
+    }
     // And the line itself is pinned: a silent re-constanting of the
     // measured cutover fails here (Round18-style constant pin).
-    assert(TopKAgg.engageBytes == (1L << 29) ||
-      sys.env.contains("SPARK_GRAFT_TOPK_ENGAGE_BYTES"),
+    assert(TopKAgg.engageBytes == (1L << 29),
       "engageBytes re-fitted constant drifted from the measured 512 MiB")
   }
 }

@@ -38,11 +38,8 @@ class Round18OpsSpec extends AnyFunSuite {
       T.releaseScratch(spark)
       out
     }
-    spark.conf.set("spark.graft.topk.forceAgg", "false")
-    val window = rows()
-    spark.conf.set("spark.graft.topk.forceAgg", "true")
-    val agg = try rows()
-    finally spark.conf.set("spark.graft.topk.forceAgg", "false")
+    val window = TopKAgg.forcing(agg = false)(rows())
+    val agg = TopKAgg.forcing(agg = true)(rows())
     (window, agg)
   }
 
@@ -57,19 +54,32 @@ class Round18OpsSpec extends AnyFunSuite {
   }
 
   test("q_text_tfidf: semi-join df prune == unfiltered df (row-set parity)") {
-    val d = SparkEntry.all.find(_.name == "q_text_tfidf").get
-    def rows(): Seq[String] = {
-      val out = d.run(spark, dir).collect().map(_.toString).toSeq.sorted
-      T.releaseScratch(spark)
-      out
-    }
-    spark.conf.set("spark.graft.tfidf.semijoin", "true")
-    val pruned = rows()
-    spark.conf.set("spark.graft.tfidf.semijoin", "false")
-    val full = try rows()
-    finally spark.conf.unset("spark.graft.tfidf.semijoin")
+    // Reference without the prune: df counts distinct docs per term
+    // over the whole corpus token stream, as the statement's definition
+    // says; only the pruned form lives in the program.
+    val docs = T.t(spark, dir, "documents")
+    val tokens = docs.select(col("doc_id"),
+      explode(split(col("text"), " ")).as("term"))
+    val tf = tokens.filter(col("doc_id") < 10)
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val df = tokens.groupBy("term")
+      .agg(countDistinct(col("doc_id")).as("df"))
+    val n = docs.count()
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id").orderBy(col("tfidf").desc, col("term"))
+    val full = tf.join(df, "term")
+      .withColumn("tfidf",
+        round(col("tf") * log(lit(n.toDouble) / col("df")), 6))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3)
+      .select("doc_id", "rn", "term", "tfidf")
+      .collect().map(_.toString).toSeq.sorted
+    val pruned = SparkEntry.all.find(_.name == "q_text_tfidf").get
+      .run(spark, dir).collect().map(_.toString).toSeq.sorted
+    T.releaseScratch(spark)
     assert(pruned.nonEmpty, "q_text_tfidf returned no rows")
-    assert(pruned == full, "q_text_tfidf: df-prune arms disagree")
+    assert(pruned == full, "q_text_tfidf: pruned df disagrees with the" +
+      " whole-corpus reference")
   }
 
   test("q_text_tfidf: hinted df semi-join broadcasts the target terms" +
@@ -117,15 +127,6 @@ class Round18OpsSpec extends AnyFunSuite {
       case j =>
         fail(s"df semi-join planned as ${j.nodeName}, not a broadcast:\n$plan")
     }
-  }
-
-  test("forceWin pins the window branch (the A/B protocol's other arm)") {
-    import spark.implicits._
-    val big = spark.range(1L << 28).toDF("id")
-    spark.conf.set("spark.graft.topk.forceWin", "true")
-    try assert(!TopKAgg.engage(big),
-      "forceWin must keep the window form at any estimate")
-    finally spark.conf.unset("spark.graft.topk.forceWin")
   }
 
   test("bounded-degradation constants: candidate caps and probe widths") {

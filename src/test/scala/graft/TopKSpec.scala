@@ -96,4 +96,43 @@ class TopKSpec extends AnyFunSuite {
       .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
     assert(run(df.repartition(13)) == run(df.coalesce(1)))
   }
+
+  test("perGroup law: window and collect_topk arms emit the same rows") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    import TopKAgg.{Asc, Desc}
+    // Few groups and few distinct v/w values, so groups straddle k and
+    // the rows at the k-th place tie on every key but the unique id.
+    val row = for {
+      g <- Gen.choose(0, 3)
+      v <- Gen.choose(-3, 3)
+      w <- Gen.choose(0, 2)
+      p <- Gen.alphaLowerStr.map(_.take(3))
+    } yield (g, v / 2.0, w.toLong, p)
+    val frames = Gen.choose(1, 40).flatMap(Gen.listOfN(_, row))
+      .map(_.zipWithIndex.map { case ((g, v, w, p), i) =>
+        (g, v, w, i.toLong, p)
+      })
+    val orders = Seq(
+      Seq("v" -> Asc, "id" -> Asc),
+      Seq("v" -> Desc, "id" -> Desc),
+      Seq("v" -> Desc, "id" -> Asc),
+      Seq("v" -> Asc, "w" -> Desc, "id" -> Asc))
+    val shapes = Seq((None, Nil), (Some("rn"), Seq("p")),
+      (Some("rank"), Nil), (None, Seq("p", "w")))
+    for (order <- orders; (rank, carry) <- shapes) {
+      val carried = carry.filterNot(order.map(_._1).contains)
+      val prop = Prop.forAllNoShrink(frames, Gen.choose(1, 4)) { (rows, k) =>
+        val df = rows.toDF("g", "v", "w", "id", "p")
+        def arm(agg: Boolean) =
+          TopKAgg.perGroup(df, Seq("g"), order, k, carried, rank, agg)
+            .collect().map(_.toString).toSeq.sorted
+        val win = arm(agg = false)
+        win.nonEmpty && win == arm(agg = true)
+      }
+      val res = Test.check(Test.Parameters.default
+        .withMinSuccessfulTests(3).withInitialSeed(Seed(7L)), prop)
+      assert(res.passed, s"order=$order rank=$rank carry=$carried: $res")
+    }
+  }
 }
