@@ -4,6 +4,8 @@ import org.apache.spark.storage.StorageLevel
 import graft._
 import graft.T._
 import graft.TopKAgg.{Asc, Desc}
+import graft.operators.Vectors
+import graft.operators.Vectors.{cos6, dot, sqL2}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,22 +23,14 @@ import org.apache.spark.sql.functions._
   *   on bucket id), so the quadratic step never touches the full corpus.
   *   Hyperplanes are derived from xxhash64 — deterministic, no driver
   *   state, no collect.
-  * - All dot products run through the native codegen'd `dot_f`
-  *   Expression (functions/DotProduct.scala) — a tight generated loop
-  *   over the float slots, no UDFs, no intermediate product array.
+  * - The vector operators (dot product, quantize, PQ slice / encode /
+  *   LUT / ADC, IVF assignment and routed search) come from
+  *   operators/Vectors.scala; statements here compose them. All dot
+  *   products run through the native codegen'd `dot_f` Expression
+  *   (functions/DotProduct.scala) — a tight generated loop over the
+  *   float slots, no UDFs, no intermediate product array.
   */
 object Similarity extends QueryPack {
-
-  /** Sum of elementwise products in DOUBLE, left-to-right (the same
-    * association order DuckDB's list_sum uses — keeps both engines
-    * bit-compatible before the final rounding).
-    */
-  private def dot(a: String, b: String) =
-    // Native codegen'd kernel (see functions/DotProduct.scala) — same
-    // left-to-right double accumulation as the former
-    // aggregate(zip_with(...)) composition, so results (and the oracle
-    // hashes) are bit-identical, minus the per-pair intermediate array.
-    expr(s"dot_f($a, $b)")
 
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", sqrt(dot("embedding", "embedding")))
@@ -82,17 +76,8 @@ object Similarity extends QueryPack {
     * instead of k.
     */
   private[graft] def semDedupCells(s: SparkSession, dir: String): DataFrame = {
-    // Hot loops run on the codegen'd dot_f kernel over double casts
-    // of the quantized ints: every value (|q_i| ≤ ~4000, dots ≤ 1e9,
-    // squared distances ≤ 4e9) is integer-exact in a double, so the
-    // expansion d = |e|² + |c|² − 2·e·c equals the oracle's Σ(x−y)²
-    // bit-for-bit after the long cast — same trick, ~6× less time
-    // than the interpreted aggregate(zip_with(...)) lambdas.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("label"),
-      expr("transform(embedding, x -> cast(round(cast(x as double)" +
-        " * 1000) as bigint))").as("q"))
-      .withColumn("qd", col("q").cast("array<double>"))
-      .withColumn("en", dot("qd", "qd"))
+    // Integer-exact distances (Vectors.sqL2): bit-equal to the oracle.
+    val emb = Vectors.quantized(t(s, dir, "embeddings"), "vec_id", "label")
     val k = math.max(4L, t(s, dir, "embeddings").count() / 1250L)
     val cent = emb.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("qd").as("cd"),
@@ -102,8 +87,7 @@ object Similarity extends QueryPack {
         col("cn").as("con"))
     // fine → owning coarse: model × model (k × k/64), broadcast side
     val f2c = cent.crossJoin(broadcast(coarse))
-      .withColumn("d",
-        (col("cn") + col("con") - lit(2) * dot("cd", "co")).cast("long"))
+      .withColumn("d", sqL2("cd", "cn", "co", "con"))
       .groupBy("cid")
       .agg(min(struct(col("d"), col("co_id"))).as("best"))
       .select(col("cid"), col("best.co_id").as("co_id"))
@@ -117,16 +101,14 @@ object Similarity extends QueryPack {
     // inside the partial WindowGroupLimit — the sf100 scratch fix.
     // Identical rows either way (TopKSpec).
     val probeD = emb.crossJoin(broadcast(coarse))
-      .withColumn("d",
-        (col("en") + col("con") - lit(2) * dot("qd", "co")).cast("long"))
+      .withColumn("d", sqL2("qd", "en", "co", "con"))
       .select(col("vec_id"), col("co_id"), col("d"))
     val probes = TopKAgg.perGroup(probeD, Seq("vec_id"),
       Seq("d" -> Asc, "co_id" -> Asc), 2, agg = TopKAgg.engage(emb))
       .select("vec_id", "co_id")
     emb.join(probes, "vec_id")
       .join(broadcast(fineCo), "co_id")
-      .withColumn("d",
-        (col("en") + col("cn") - lit(2) * dot("qd", "cd")).cast("long"))
+      .withColumn("d", sqL2("qd", "en", "cd", "cn"))
       // argmin via min(struct) with q riding as first() — hashing a
       // 512-byte array KEY per candidate row measured slower (the
       // q_cluster_kmeans note), and there are ≤128 candidates/vector
@@ -314,6 +296,12 @@ object Similarity extends QueryPack {
         |      AS nrm
         |  FROM (SELECT q_id, ${sharedProjSql("qv")} AS p FROM qt))""".stripMargin
 
+  /** The query vectors of every PQ statement (vec_id 4..8, as the
+    * oracles' `qs` CTE) from a quantized frame: (q_id, qv, qn). */
+  private def pqQueries(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") >= 4 && col("vec_id") < 9)
+      .select(col("vec_id").as("q_id"), col("qd").as("qv"), col("en").as("qn"))
+
   /** Shared by q_ann_ivfpq and q_ann_ivfpq_index: identical
     * semantics, so one oracle replays both (from-scratch vs
     * from-persisted-index answers must agree exactly).
@@ -397,44 +385,20 @@ object Similarity extends QueryPack {
     */
   private def ivfpqIndexSearch(s: SparkSession, dir: String,
       idx: String): DataFrame = {
-      val emb = graft.sources.IvfPqIndex.quantized(s, dir)
-      val qs = emb.filter(col("vec_id") >= 4 && col("vec_id") < 9)
-        .select(col("vec_id").as("q_id"), col("qd").as("qv"),
-          col("en").as("qn"))
-      val cells = broadcast(s.read.parquet(idx + "/cells")
-        .withColumn("cd", col("c").cast("array<double>"))
-        .withColumn("cn", expr("dot_f(cd, cd)"))
-        .select(col("cell_id"), col("cd"), col("cn")))
-      val cb = broadcast(s.read.parquet(idx + "/codebook")
-        .withColumn("cv", col("cv").cast("array<double>"))
-        .withColumn("cvn", expr("dot_f(cv, cv)")))
-      val wProbe = org.apache.spark.sql.expressions.Window
-        .partitionBy("q_id").orderBy(col("d"), col("cell_id"))
-      val probe = qs.crossJoin(cells)
-        .withColumn("d",
-          (col("qn") + col("cn") - lit(2) * dot("qv", "cd")).cast("long"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 2)
-        .select(col("q_id"), col("cell_id"),
-          expr("zip_with(qv, cd, (a, b) -> a - b)").as("qr"))
+      val emb = Vectors.quantized(t(s, dir, "embeddings"), "vec_id")
+      val qs = pqQueries(emb)
+      val (cells, cb) = graft.sources.IvfPqIndex.readModelFrames(s, idx)
+      val probe = Vectors.probeResiduals(qs, cells, 2)
         .localCheckpoint(true) // probed twice below (routing + LUTs)
       // Driver-side probe routing: ≤ nlist(4) cell ids — model-sized
       // by construction (this is the collect an ANN service does to
       // schedule probes; never corpus data).
       val probedCells = probe.select("cell_id").distinct()
         .collect().map(_.getLong(0))
-      val lut = broadcast(graft.sources.IvfPqIndex
-        .slices(probe, "qr", "q_id", "cell_id")
-        .join(cb, "s")
-        .withColumn("ld",
-          (col("vn") + col("cvn") - lit(2) * dot("v", "cv")).cast("long"))
-        .withColumn("k", col("s") * 4 + col("cid"))
-        .groupBy("q_id", "cell_id")
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(k, ld))), x -> x.ld)")
-          .as("lut")))
+      val lut = Vectors.lut(Vectors.slices(probe, "qr", "q_id", "cell_id"),
+        cb, 4, "q_id", "cell_id")
       // Pruned code scan: only the probed cells' partitions are read.
-      val codes = s.read.parquet(idx + "/codes")
+      val codes = graft.sources.IvfPqIndex.readCodes(s, idx)
         .filter(col("cell_id").isin(probedCells.map(Long.box): _*))
         .withColumn("cell_id", col("cell_id").cast("long"))
       // Final rank — SIZE-ADAPTIVE (TopKAgg.engage, r16, VERDICT r15
@@ -442,22 +406,13 @@ object Similarity extends QueryPack {
       // estimate so the index and delta variants cut over at the same
       // scale as q_ann_ivfpq (identical search plan contract).
       val adcScored = codes.join(lut, "cell_id")
-        .withColumn("adc_dist", expr(
-          "aggregate(zip_with(codes, sequence(0, 7)," +
-            " (c, s) -> element_at(lut, cast(s*4 + c + 1 as int)))," +
-            " cast(0 as bigint), (a, x) -> a + x)"))
+        .withColumn("adc_dist", Vectors.adc(4))
       val top = TopKAgg.perGroup(adcScored, Seq("q_id"),
         Seq("adc_dist" -> Asc, "vec_id" -> Asc), 5, carry = Seq("cell_id"),
         rank = Some("rn"), agg = TopKAgg.engage(emb))
         .select(col("q_id"), col("rn").cast("int").as("rn"),
           col("vec_id").as("cand_id"), col("cell_id"), col("adc_dist"))
-      val corpV = emb.filter(col("vec_id") >= 9)
-        .select(col("vec_id").as("cand_id"), col("qd").as("cv2"),
-          col("en").as("cvn2"))
-      val qV = broadcast(qs)
-      top.join(corpV, "cand_id").join(qV, "q_id")
-        .withColumn("exact_dist",
-          (col("qn") + col("cvn2") - lit(2) * dot("qv", "cv2")).cast("long"))
+      Vectors.withExactDist(top, emb.filter(col("vec_id") >= 9), qs)
         .select("q_id", "rn", "cand_id", "cell_id", "adc_dist",
           "exact_dist")
         .orderBy("q_id", "rn")
@@ -549,7 +504,7 @@ object Similarity extends QueryPack {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("anchor_id").orderBy(col("cos_sim").desc, col("cand_id"))
       anchors.join(cands, col("cand_label") =!= col("anchor_label"))
-        .withColumn("cos_sim", round(dot("ae", "ce") / (col("an") * col("cn")), 6))
+        .withColumn("cos_sim", cos6("ae", "an", "ce", "cn"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select("anchor_id", "anchor_label", "rn", "cand_id", "cand_label",
@@ -631,8 +586,7 @@ object Similarity extends QueryPack {
           (col("idot").cast("double") * col("cs")) / col("cn"))
         .withColumn("rc", row_number().over(wCoarse))
         .filter(col("rc") <= 10)
-        .withColumn("cos_sim",
-          round(dot("qe", "ce") / (col("qn") * col("cn")), 6))
+        .withColumn("cos_sim", cos6("qe", "qn", "ce", "cn"))
         .withColumn("rn", row_number().over(wExact))
         .filter(col("rn") <= 3)
         .select("q_id", "rn", "cand_id", "cos_sim")
@@ -786,11 +740,10 @@ object Similarity extends QueryPack {
       // exchange) instead of a full-shuffle row_number window; ties
       // break as the oracle orders (cos DESC, cand_id ASC).
       cand.join(qv, "q_id").join(cv, "cand_id")
-        .withColumn("cos_sim", round(dot("qe", "ce") / (col("qn") * col("cn")), 6))
+        .withColumn("cos_sim", cos6("qe", "qn", "ce", "cn"))
         .groupBy("q_id")
-        .agg(max_by(struct(col("cand_id"), col("cos_sim")),
-          struct(col("cos_sim"), (lit(0L) - col("cand_id")).as("inv")))
-          .as("best"))
+        .agg(Vectors.maxByCos(struct(col("cand_id"), col("cos_sim")),
+          "cos_sim", "cand_id").as("best"))
         .select(col("q_id"), col("best.cand_id").as("cand_id"),
           col("best.cos_sim").as("cos_sim"))
         .orderBy("q_id")
@@ -820,8 +773,7 @@ object Similarity extends QueryPack {
       val b = e.select(col("vec_id").as("b_id"), col("embedding").as("ce"),
         col("nrm").as("cn"))
       a.join(b, col("a_id") < col("b_id"))
-        .withColumn("cos_sim",
-          round(dot("qe", "ce") / (col("qn") * col("cn")), 6))
+        .withColumn("cos_sim", cos6("qe", "qn", "ce", "cn"))
         .select("a_id", "b_id", "cos_sim")
         .orderBy(col("cos_sim").desc, col("a_id"), col("b_id"))
         .limit(10)
@@ -867,7 +819,7 @@ object Similarity extends QueryPack {
       val b = e.select(col("vec_id").as("b_id"), col("embedding").as("ce"),
         col("nrm").as("cn"))
       val pairs = a.join(b, col("a_id") < col("b_id"))
-        .filter(round(dot("qe", "ce") / (col("qn") * col("cn")), 6) >= 0.4)
+        .filter(cos6("qe", "qn", "ce", "cn") >= 0.4)
         .select("a_id", "b_id")
       val comp = ConnectedComponents.label(pairs, "a_id", "b_id")
       comp.groupBy("comp_id")
@@ -1012,8 +964,6 @@ object Similarity extends QueryPack {
         |                       ORDER BY cos_sim DESC, cand_id) AS rn
         |  FROM scored) WHERE rn = 1 ORDER BY q_id""".stripMargin) {
       (s, dir) =>
-      val nprobe = ivfNprobe
-      val cellCap = ivfCellCap
       val iters = 2
       val e = withNorm(t(s, dir, "embeddings"))
       // ADAPTIVE cell count ~ sqrt(n) — the standard IVF sizing (FAISS's
@@ -1028,8 +978,7 @@ object Similarity extends QueryPack {
       // parquet-footer metadata read.
       val nVecs = e.sparkSession.read
         .parquet(s"$dir/embeddings.parquet").count()
-      val seedMod = (0 until 31).map(1L << _)
-        .find(p => p * p >= nVecs).getOrElse(1L << 31)
+      val seedMod = Vectors.sqrtTier(nVecs, 31)
       var cents = e.filter(col("vec_id") % seedMod === 0)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cent"),
           col("nrm").as("cent_nrm"))
@@ -1059,12 +1008,9 @@ object Similarity extends QueryPack {
         // The argmax compares the ROUNDED cosine (tie → lower cent_id)
         // so the oracle's replay can't flip a cell on a last-ulp delta.
         val assigned = trainSet.crossJoin(broadcast(cents))
-          .withColumn("cent_cos",
-            round(dot("embedding", "cent") / (col("nrm") * col("cent_nrm")),
-              6))
+          .withColumn("cent_cos", cos6("embedding", "nrm", "cent", "cent_nrm"))
           .groupBy("vec_id")
-          .agg(max_by(col("cent_id"),
-            struct(col("cent_cos"), (lit(0L) - col("cent_id")).as("inv")))
+          .agg(Vectors.maxByCos(col("cent_id"), "cent_cos", "cent_id")
             .as("cell"),
             first(col("embedding")).as("embedding"))
         // New centroid = per-dimension mean of the cell: explode to
@@ -1104,88 +1050,14 @@ object Similarity extends QueryPack {
       // CTE-for-CTE, so it is hash-gated, not waved through. Training
       // itself (the two unrolled Lloyd rounds above) already runs on
       // the bounded trainMod sample and stays exactly as it was.
-      // All ranking stays on SKINNY (vec_id, cent_id, cos) relations —
-      // embeddings feed the dots map-side against broadcast frames and
-      // never ride the window shuffles (rank<=k compiles to
-      // WindowGroupLimit); embeddings re-attach by vec_id only for the
-      // ≤ nprobe·n survivors.
-      val wc = 2
-      val coarseMult = (0 until 16).map(1L << _)
-        .find(q => q * q >= seedMod).getOrElse(1L << 16)
+      // The routed search (fine → coarse routing, both rank stages,
+      // inverted file, probes, top-1 rescore) is Vectors.routedIvf,
+      // the operator q_ann_ivf_hier runs over untrained seeds.
+      val coarseMult = Vectors.sqrtTier(seedMod, 16)
       val coarse = cents.filter(col("cent_id") % (seedMod * coarseMult) === 0)
         .select(col("cent_id").as("co_id"), col("cent").as("co"),
           col("cent_nrm").as("co_nrm"))
-      val fine = cents.crossJoin(broadcast(coarse))
-        .withColumn("ccos",
-          round(dot("cent", "co") / (col("cent_nrm") * col("co_nrm")), 6))
-        .groupBy("cent_id")
-        .agg(max_by(col("co_id"),
-          struct(col("ccos"), (lit(0L) - col("co_id")).as("inv")))
-          .as("co_id"),
-          first(col("cent")).as("cent"),
-          first(col("cent_nrm")).as("cent_nrm"))
-      // Both rank stages of the final assignment are SIZE-ADAPTIVE
-      // (TopKAgg.engage, r15 — the fix for this query's flagged
-      // scratch asymptote): below the cutover the rank<=k windows
-      // (codegen sort, frozen-golden plans, measured faster at bench
-      // SFs); above it the bounded top-k aggregate — the windows
-      // locally SORT the n×ncoarse and n·wc·(nlist/ncoarse) expansions
-      // inside the partial WindowGroupLimit before their rank
-      // exchanges, and at sf100 that sort scratch (stacked on the
-      // Lloyd chain's retained shuffles) was the measured ENOSPC. The
-      // aggregate folds each expansion to k-element buffers map-side:
-      // same rows out (TopKSpec law), ~no sort scratch at all.
-      val useAgg = TopKAgg.engage(e)
-      val vcD = e.crossJoin(broadcast(coarse))
-        .select(col("vec_id"), col("co_id"),
-          round(dot("embedding", "co") / (col("nrm") * col("co_nrm")), 6)
-            .as("vcos"))
-      val vc = TopKAgg.perGroup(vcD, Seq("vec_id"),
-        Seq("vcos" -> Desc, "co_id" -> Asc), wc, agg = useAgg)
-        .select("vec_id", "co_id")
-      val rankedD = vc.join(e, "vec_id")
-        .join(broadcast(fine), "co_id")
-        .select(col("vec_id"), col("cent_id"),
-          round(dot("embedding", "cent") / (col("nrm") * col("cent_nrm")),
-            6).as("cent_cos"))
-      val ranked = TopKAgg.perGroup(rankedD, Seq("vec_id"),
-        Seq("cent_cos" -> Desc, "cent_id" -> Asc), nprobe,
-        rank = Some("arn"), agg = useAgg)
-        .select("vec_id", "arn", "cent_id")
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-        .join(e, "vec_id") // re-attach embedding+nrm to the survivors
-      // Inverted file: every vector lives in exactly ONE cell (arn=1),
-      // capped per cell deterministically by vec_id.
-      val wCell = org.apache.spark.sql.expressions.Window
-        .partitionBy("cell").orderBy("cand_id")
-      val index = ranked.filter(col("arn") === 1)
-        .select(col("vec_id").as("cand_id"), col("embedding").as("ce"),
-          col("nrm").as("cn"), col("cent_id").as("cell"))
-        .withColumn("crnk", row_number().over(wCell))
-        .filter(col("crnk") <= cellCap).drop("crnk")
-      // Probe list: each query searches its nprobe nearest cells. A
-      // candidate sits in one cell, so a (q, cand) pair matches at most
-      // once — no dedup needed before re-scoring.
-      val probes = ranked
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"), col("cent_id").as("ccell"))
-      // Top-1 per query via max_by, NOT a row_number window: the scored
-      // relation is |queries| × nprobe × cellSize pairs (~12M here) and
-      // a window would shuffle ALL of it; max_by partial-aggregates
-      // map-side down to one row per query before the exchange. Ties
-      // break identically to the oracle's ORDER BY cos_sim DESC,
-      // cand_id (max over (cos, -cand_id)).
-      probes.join(index, col("ccell") === col("cell") &&
-          col("q_id") =!= col("cand_id"))
-        .withColumn("cos_sim",
-          round(dot("qe", "ce") / (col("qn") * col("cn")), 6))
-        .groupBy("q_id")
-        .agg(max_by(struct(col("cand_id"), col("cos_sim")),
-          struct(col("cos_sim"), (lit(0L) - col("cand_id")).as("inv")))
-          .as("best"))
-        .select(col("q_id"), col("best.cand_id").as("cand_id"),
-          col("best.cos_sim").as("cos_sim"))
-        .orderBy("q_id")
+      Vectors.routedIvf(e, cents, coarse, wc = 2, ivfNprobe, ivfCellCap)
     },
 
     // HIERARCHICAL (two-level) IVF — the bounded-assignment fix for
@@ -1287,92 +1159,24 @@ object Similarity extends QueryPack {
         |                       ORDER BY cos_sim DESC, cand_id) AS rn
         |  FROM scored) WHERE rn = 1 ORDER BY q_id""".stripMargin) {
       (s, dir) =>
-      val wc = 2 // coarse cells probed during assignment/search
-      val nprobe = ivfNprobe // fine cells probed per query
-      val cellCap = ivfCellCap
       val e = withNorm(t(s, dir, "embeddings"))
       val nVecs = e.sparkSession.read
         .parquet(s"$dir/embeddings.parquet").count()
       // Tier sizing by pure integer shifts both engines replay: fine
       // nlist ≈ sqrt(n) (p² ≥ n, the flat-IVF seeding), coarse
       // ncoarse ≈ sqrt(nlist) (q² ≥ p).
-      val fineMod = (0 until 31).map(1L << _)
-        .find(p => p * p >= nVecs).getOrElse(1L << 31)
-      val coarseMult = (0 until 16).map(1L << _)
-        .find(q => q * q >= fineMod).getOrElse(1L << 16)
+      val fineMod = Vectors.sqrtTier(nVecs, 31)
+      val coarseMult = Vectors.sqrtTier(fineMod, 16)
       val fine0 = e.filter(col("vec_id") % fineMod === 0)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cent"),
           col("nrm").as("cent_nrm"))
       val coarse = e.filter(col("vec_id") % (fineMod * coarseMult) === 0)
         .select(col("vec_id").as("co_id"), col("embedding").as("co"),
           col("nrm").as("co_nrm"))
-      // Fine centroid -> nearest coarse cell: model × model (both
-      // broadcastable); argmax via map-side max_by on the rounded
-      // cosine, ties to the lower co_id — the oracle's ROW_NUMBER twin.
-      val fine = fine0.crossJoin(broadcast(coarse))
-        .withColumn("ccos",
-          round(dot("cent", "co") / (col("cent_nrm") * col("co_nrm")), 6))
-        .groupBy("cent_id")
-        .agg(max_by(col("co_id"),
-          struct(col("ccos"), (lit(0L) - col("co_id")).as("inv")))
-          .as("co_id"),
-          first(col("cent")).as("cent"), first(col("cent_nrm")).as("cent_nrm"))
-      // Per-vector top-wc coarse cells on a SKINNY rank relation (the
-      // flat-IVF lesson: embeddings feed the dot map-side but never
-      // ride through the window shuffle); rank<=wc compiles to
-      // WindowGroupLimit.
-      // Both rank stages SIZE-ADAPTIVE between the rank window (bench
-      // SFs — codegen sort, frozen-golden plan) and the bounded top-k
-      // aggregate (corpus scale — k-element buffers fold the
-      // expansions map-side, no per-task sort of the expansion): see
-      // the q_ann_ivf_cells note; same rows either way (TopKSpec).
-      val useAgg = TopKAgg.engage(e)
-      val vcD = e.crossJoin(broadcast(coarse))
-        .select(col("vec_id"), col("co_id"),
-          round(dot("embedding", "co") / (col("nrm") * col("co_nrm")), 6)
-            .as("vcos"))
-      val vc = TopKAgg.perGroup(vcD, Seq("vec_id"),
-        Seq("vcos" -> Desc, "co_id" -> Asc), wc, agg = useAgg)
-        .select("vec_id", "co_id")
-      // Fine comparisons restricted to the probed coarse cells: join
-      // back the embedding by vec_id, broadcast-join the fine table on
-      // its coarse parent — each vector meets ~wc·nlist/ncoarse fine
-      // centroids instead of all nlist. Again skinny into the rank.
-      val rankedD = vc.join(e, "vec_id")
-        .join(broadcast(fine), "co_id")
-        .select(col("vec_id"), col("cent_id"),
-          round(dot("embedding", "cent") / (col("nrm") * col("cent_nrm")), 6)
-            .as("fcos"))
-      val ranked = TopKAgg.perGroup(rankedD, Seq("vec_id"),
-        Seq("fcos" -> Desc, "cent_id" -> Asc), nprobe,
-        rank = Some("arn"), agg = useAgg)
-        .select("vec_id", "arn", "cent_id")
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-        .join(e, "vec_id") // re-attach embedding+nrm to the survivors
-      // Inverted file + probes + exact rescore: identical tail to
-      // q_ann_ivf_cells (one cell per vector, deterministic cellCap,
-      // map-side max_by top-1).
-      val wCell = org.apache.spark.sql.expressions.Window
-        .partitionBy("cell").orderBy("cand_id")
-      val index = ranked.filter(col("arn") === 1)
-        .select(col("vec_id").as("cand_id"), col("embedding").as("ce"),
-          col("nrm").as("cn"), col("cent_id").as("cell"))
-        .withColumn("crnk", row_number().over(wCell))
-        .filter(col("crnk") <= cellCap).drop("crnk")
-      val probes = ranked
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"), col("cent_id").as("ccell"))
-      probes.join(index, col("ccell") === col("cell") &&
-          col("q_id") =!= col("cand_id"))
-        .withColumn("cos_sim",
-          round(dot("qe", "ce") / (col("qn") * col("cn")), 6))
-        .groupBy("q_id")
-        .agg(max_by(struct(col("cand_id"), col("cos_sim")),
-          struct(col("cos_sim"), (lit(0L) - col("cand_id")).as("inv")))
-          .as("best"))
-        .select(col("q_id"), col("best.cand_id").as("cand_id"),
-          col("best.cos_sim").as("cos_sim"))
-        .orderBy("q_id")
+      // Routing, both rank stages, inverted file, probes and the top-1
+      // rescore: the operator q_ann_ivf_cells uses over its trained
+      // centroids. wc = 2 coarse cells probed during assignment.
+      Vectors.routedIvf(e, fine0, coarse, wc = 2, ivfNprobe, ivfCellCap)
     },
 
     // Embedding column statistics per label: count + decimal-stabilized
@@ -1540,8 +1344,7 @@ object Similarity extends QueryPack {
       val wExact = org.apache.spark.sql.expressions.Window
         .partitionBy("q_id").orderBy(col("cos_sim").desc, col("cand_id"))
       cand.join(ce, "cand_id").join(qe, "q_id")
-        .withColumn("cos_sim",
-          round(dot("qe", "ce") / (col("qn") * col("cn")), 6))
+        .withColumn("cos_sim", cos6("qe", "qn", "ce", "cn"))
         .withColumn("rn", row_number().over(wExact))
         .filter(col("rn") <= 3)
         .select("q_id", "rn", "cand_id", "cos_sim")
@@ -1593,20 +1396,13 @@ object Similarity extends QueryPack {
          |  CAST(SUM(d) AS BIGINT) AS inertia
          |FROM a4 GROUP BY cid ORDER BY cid""".stripMargin
     }) { (s, dir) =>
-      // Assignment distance runs on the codegen'd dot_f kernel via the
-      // integer-exact expansion d = |e|² + |c|² − 2·e·c (every
-      // quantized value and dot fits a double exactly — see
-      // q_dedup_semantic note), bit-equal to the oracle's Σ(x−y)².
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 1000)" +
-          " as bigint))").as("q"))
-        .withColumn("qd", col("q").cast("array<double>"))
-        .withColumn("en", dot("qd", "qd"))
+      // Assignment distance: the integer-exact Vectors.sqL2, bit-equal
+      // to the oracle's Σ(x−y)².
+      val emb = Vectors.quantized(t(s, dir, "embeddings"), "vec_id")
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER) // scanned by 4 assignment passes
       def assign(cent: org.apache.spark.sql.DataFrame) =
         emb.crossJoin(broadcast(cent))
-          .withColumn("d",
-            (col("en") + col("cn") - lit(2) * dot("qd", "cd")).cast("long"))
+          .withColumn("d", sqL2("qd", "en", "cd", "cn"))
           // argmin via min(struct): map-side combining, no sort window.
           // The 64-long q array rides through as first() instead of
           // being part of the grouping key (hashing a 512-byte array
@@ -1738,13 +1534,9 @@ object Similarity extends QueryPack {
         |  CAST(SUM(CASE WHEN f = 1 THEN vec_id ELSE 0 END) AS BIGINT)
         |    AS flagged_checksum
         |FROM fl GROUP BY label ORDER BY label""".stripMargin) { (s, dir) =>
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("label"),
-        expr("transform(embedding, x -> cast(round(cast(x as double)" +
-          " * 1000) as bigint))").as("q"))
-        .withColumn("qd", col("q").cast("array<double>"))
-        // |q_i| <= ~4000 so every dot/norm is integer-exact in a double
-        // (the q_dedup_semantic argument) — safe to cast back to long.
-        .withColumn("nn", dot("qd", "qd").cast("long"))
+      // |q|² is integer-exact in a double (Vectors) — safe as a long.
+      val emb = Vectors.quantized(t(s, dir, "embeddings"), "vec_id", "label")
+        .withColumn("nn", col("en").cast("long"))
       val ev = broadcast(emb.filter(col("vec_id") < 16)
         .select(col("qd").as("ed"), col("nn").as("en")))
       emb.filter(col("vec_id") >= 16)
@@ -2016,51 +1808,17 @@ object Similarity extends QueryPack {
         |JOIN corp ON corp.vec_id = t.vec_id
         |WHERE t.rn <= 5
         |ORDER BY t.q_id, t.rn""".stripMargin) { (s, dir) =>
-      // Quantized millesimal components are ≤ ~4000, so every product
-      // (≤1.6e7), subspace sum (≤5e8) and 64-dim sum (≤4e9) is
-      // integer-exact in a double — the dot_f expansions below are
-      // bit-equal to the oracle's Σ(x−y)² folds (q_cluster_kmeans note).
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 1000)" +
-          " as bigint))").as("q"))
-        .withColumn("qd", col("q").cast("array<double>"))
-      // subspace slices: (vec_id, s, v double[8], vn = |v|²)
-      def subspaces(df: DataFrame, idCol: String) = df
-        .select(col(idCol), posexplode(
-          expr("transform(sequence(0, 7), s -> slice(qd, s*8 + 1, 8))")))
-        .select(col(idCol), col("pos").as("s"), col("col").as("v"))
-        .withColumn("vn", dot("v", "v"))
-      val cb = broadcast(subspaces(emb.filter(col("vec_id") < 4), "vec_id")
-        .select(col("vec_id").cast("int").as("cid"), col("s"),
-          col("v").as("c"), col("vn").as("cn")))
+      // Integer-exact throughout (Vectors): the encode, LUT and rerank
+      // distances are bit-equal to the oracle's Σ(x−y)² folds.
+      val emb = Vectors.quantized(t(s, dir, "embeddings"), "vec_id")
+      val cb = Vectors.codebook(emb.filter(col("vec_id") < 4), "qd", 0)
       val corp = emb.filter(col("vec_id") >= 9)
-      // ENCODE: argmin over the 4 centroids per (vector, subspace) —
-      // broadcast codebook join + min(struct) map-side combine, then
-      // the 8 codes fold to one array<int> per vector.
-      val codes = subspaces(corp, "vec_id")
-        .join(cb, "s")
-        .withColumn("d",
-          (col("vn") + col("cn") - lit(2) * dot("v", "c")).cast("long"))
-        .groupBy("vec_id", "s")
-        .agg(min(struct(col("d"), col("cid"))).as("best"))
-        .select(col("vec_id"), col("s"), col("best.cid").as("code"))
-        .groupBy("vec_id")
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(s, code))), x -> x.code)")
-          .as("codes"))
+      // ENCODE: argmin over the 4 centroids per (vector, subspace), the
+      // 8 codes folded to one array<int> per vector.
+      val codes = Vectors.encode(Vectors.slices(corp, "qd", "vec_id"), cb)
       // Per-query LUT: 32 longs ordered by s*4+cid, one row per query.
-      val qs = emb.filter(col("vec_id") >= 4 && col("vec_id") < 9)
-      val lut = broadcast(subspaces(qs, "vec_id")
-        .select(col("vec_id").as("q_id"), col("s"), col("v").as("qv"),
-          col("vn").as("qn_s"))
-        .join(cb, "s")
-        .withColumn("ld",
-          (col("qn_s") + col("cn") - lit(2) * dot("qv", "c")).cast("long"))
-        .withColumn("k", col("s") * 4 + col("cid"))
-        .groupBy("q_id")
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(k, ld))), x -> x.ld)")
-          .as("lut")))
+      val qs = pqQueries(emb)
+      val lut = Vectors.lut(Vectors.slices(qs, "qv", "q_id"), cb, 4, "q_id")
       // ADC scan: one pass over the code table, LUT lookups only.
       // Final rank — SIZE-ADAPTIVE (TopKAgg.engage, r16 extension of
       // the r15 cutover, VERDICT r15 #6): the scored relation is
@@ -2071,10 +1829,7 @@ object Similarity extends QueryPack {
       // 5-element buffers map-side; identical rows either way
       // (TopKSpec laws, Round18OpsSpec forced row-set parity).
       val adcScored = codes.crossJoin(lut)
-        .withColumn("adc_dist", expr(
-          "aggregate(zip_with(codes, sequence(0, 7)," +
-            " (c, s) -> element_at(lut, cast(s*4 + c + 1 as int)))," +
-            " cast(0 as bigint), (a, x) -> a + x)"))
+        .withColumn("adc_dist", Vectors.adc(4))
       val top = TopKAgg.perGroup(adcScored, Seq("q_id"),
         Seq("adc_dist" -> Asc, "vec_id" -> Asc), 5, rank = Some("rn"),
         agg = TopKAgg.engage(emb))
@@ -2082,14 +1837,7 @@ object Similarity extends QueryPack {
           col("vec_id").as("cand_id"), col("adc_dist"))
       // Exact rerank of the 25 winners: join the original vectors back
       // in by id (top side broadcasts; the corpus never re-shuffles).
-      val corpV = corp.select(col("vec_id").as("cand_id"),
-        col("qd").as("cv"))
-        .withColumn("cvn", dot("cv", "cv"))
-      val qV = broadcast(qs.select(col("vec_id").as("q_id"),
-        col("qd").as("qv")).withColumn("qvn", dot("qv", "qv")))
-      top.join(corpV, "cand_id").join(qV, "q_id")
-        .withColumn("exact_dist",
-          (col("qvn") + col("cvn") - lit(2) * dot("qv", "cv")).cast("long"))
+      Vectors.withExactDist(top, corp, qs)
         .select("q_id", "rn", "cand_id", "adc_dist", "exact_dist")
         .orderBy("q_id", "rn")
     },
@@ -2166,65 +1914,29 @@ object Similarity extends QueryPack {
         |      ORDER BY exact_dist, vec_id) AS rn
         |  FROM rer) WHERE rn <= 5
         |ORDER BY q_id, rn""".stripMargin) { (s, dir) =>
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 1000)" +
-          " as bigint))").as("q"))
-        .withColumn("qd", col("q").cast("array<double>"))
-        .withColumn("en", dot("qd", "qd"))
-      def sl(df: DataFrame, vcol: String, carry: String*) =
-        graft.sources.IvfPqIndex.slices(df, vcol, carry: _*)
-      val cb = broadcast(
-        sl(emb.filter(col("vec_id") >= 9 && col("vec_id") < 25),
-          "qd", "vec_id")
-          .select((col("vec_id") - 9).cast("int").as("cid"), col("s"),
-            col("v").as("cv"), col("vn").as("cvn")))
+      val emb = Vectors.quantized(t(s, dir, "embeddings"), "vec_id")
+      val cb = Vectors.codebook(
+        emb.filter(col("vec_id") >= 9 && col("vec_id") < 25), "qd", 9)
       val corp = emb.filter(col("vec_id") >= 9)
-      val codes = sl(corp, "qd", "vec_id")
-        .join(cb, "s")
-        .withColumn("d",
-          (col("vn") + col("cvn") - lit(2) * dot("v", "cv")).cast("long"))
-        .groupBy("vec_id", "s")
-        .agg(min(struct(col("d"), col("cid"))).as("best"))
-        .groupBy("vec_id")
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(s, best.cid as code)))," +
-            " x -> x.code)").as("codes"))
-      val qs = emb.filter(col("vec_id") >= 4 && col("vec_id") < 9)
-        .select(col("vec_id").as("q_id"), col("qd").as("qv"),
-          col("en").as("qn"))
-      val lut = broadcast(sl(qs, "qv", "q_id")
-        .join(cb, "s")
-        .withColumn("ld",
-          (col("vn") + col("cvn") - lit(2) * dot("v", "cv")).cast("long"))
-        .withColumn("k", col("s") * 16 + col("cid"))
-        .groupBy("q_id")
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(k, ld))), x -> x.ld)")
-          .as("lut")))
+      val codes = Vectors.encode(Vectors.slices(corp, "qd", "vec_id"), cb)
+      val qs = pqQueries(emb)
+      val lut = Vectors.lut(Vectors.slices(qs, "qv", "q_id"), cb, 16, "q_id")
       // ADC shortlist rank — SIZE-ADAPTIVE (TopKAgg.engage, r16,
       // VERDICT r15 #6; see q_ann_pq_adc's note — same corpus×queries
       // expansion, k=50). The exact-rerank window below stays a
       // window: its input is shortlist·queries rows (250 here, 50·|q|
       // at any scale) — model-sized by construction.
       val shortScored = codes.crossJoin(lut)
-        .withColumn("adc_dist", expr(
-          "aggregate(zip_with(codes, sequence(0, 7)," +
-            " (c, s) -> element_at(lut, cast(s*16 + c + 1 as int)))," +
-            " cast(0 as bigint), (a, x) -> a + x)"))
+        .withColumn("adc_dist", Vectors.adc(16))
       val short = TopKAgg.perGroup(shortScored, Seq("q_id"),
         Seq("adc_dist" -> Asc, "vec_id" -> Asc), 50,
         agg = TopKAgg.engage(emb))
         .select(col("q_id"), col("vec_id").as("cand_id"), col("adc_dist"))
       // Exact rerank of the 250 shortlist rows; the corpus side joins
       // by id (shortlist broadcasts), floats touched only here.
-      val corpV = corp.select(col("vec_id").as("cand_id"),
-        col("qd").as("cv2"), col("en").as("cvn2"))
-      val qV = broadcast(qs)
       val wExact = org.apache.spark.sql.expressions.Window
         .partitionBy("q_id").orderBy(col("exact_dist"), col("cand_id"))
-      short.join(corpV, "cand_id").join(qV, "q_id")
-        .withColumn("exact_dist",
-          (col("qn") + col("cvn2") - lit(2) * dot("qv", "cv2")).cast("long"))
+      Vectors.withExactDist(short, corp, qs)
         .withColumn("rn", row_number().over(wExact).cast("int"))
         .filter(col("rn") <= 5)
         .select("q_id", "rn", "cand_id", "adc_dist", "exact_dist")
@@ -2251,98 +1963,41 @@ object Similarity extends QueryPack {
     // LUTs (an equi-join on cell_id, no BNLJ on the corpus side);
     // cells, codebook and LUTs are all model-sized broadcasts.
     q("q_ann_ivfpq", ivfpqOracleSql) { (s, dir) =>
-      // Integer bounds: quantized |q_i| ≤ ~4000 → residuals ≤ 8000,
-      // LUT terms (q − c − cv) ≤ 16000 → squares ≤ 2.6e8, subspace
-      // sums ≤ 2.1e9, 64-dim sums ≤ 1.7e10 — all << 2^53, so every
-      // dot_f expansion below is bit-equal to the oracle's Σ(x−y)².
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 1000)" +
-          " as bigint))").as("q"))
-        .withColumn("qd", col("q").cast("array<double>"))
-        .withColumn("en", dot("qd", "qd"))
+      // Integer-exact throughout (Vectors; residuals ≤ 8000, LUT terms
+      // ≤ 16000): every distance is bit-equal to the oracle's Σ(x−y)².
+      // The codebook is sliced from the corpus residuals here, so this
+      // statement composes the operators itself rather than reading
+      // IvfPqIndex's model frames (whose codebook filter sits lower).
+      val emb = Vectors.quantized(t(s, dir, "embeddings"), "vec_id")
       val cellsB = broadcast(emb.filter(col("vec_id") < 4)
         .select(col("vec_id").as("cell_id"), col("qd").as("cd"),
           col("en").as("cn")))
       val corp = emb.filter(col("vec_id") >= 9)
-      // Coarse assignment + residual in one pass: min(struct) carries
-      // the winning centroid array so the residual needs no re-join
-      // (cell_id is unique per distance tie-break, so the trailing cd
-      // never participates in the ordering).
-      val res = corp.crossJoin(cellsB)
-        .withColumn("d",
-          (col("en") + col("cn") - lit(2) * dot("qd", "cd")).cast("long"))
-        .groupBy("vec_id")
-        .agg(min(struct(col("d"), col("cell_id"), col("cd"))).as("best"),
-          first(col("qd")).as("qd"))
-        .select(col("vec_id"), col("best.cell_id").as("cell_id"),
-          expr("zip_with(qd, best.cd, (a, b) -> a - b)").as("rd"))
-      // (id-ish, s, v, vn) subspace slices of an array column.
-      def slices(df: DataFrame, vcol: String, carry: String*) = df
-        .select(carry.map(col) :+ posexplode(expr(
-          s"transform(sequence(0, 7), s -> slice($vcol, s*8 + 1, 8))")): _*)
-        .select(carry.map(col) :+ col("pos").as("s") :+ col("col").as("v"): _*)
-        .withColumn("vn", dot("v", "v"))
+      val res = Vectors.assignResidual(corp, cellsB)
       // Shared residual codebook: residuals of vectors 9..12, sliced.
-      val cb = broadcast(
-        slices(res.filter(col("vec_id") >= 9 && col("vec_id") < 13),
-          "rd", "vec_id")
-          .select((col("vec_id") - 9).cast("int").as("cid"), col("s"),
-            col("v").as("cv"), col("vn").as("cvn")))
-      val codes = slices(res, "rd", "vec_id", "cell_id")
-        .join(cb, "s")
-        .withColumn("d",
-          (col("vn") + col("cvn") - lit(2) * dot("v", "cv")).cast("long"))
-        .groupBy("vec_id", "s")
-        .agg(min(struct(col("d"), col("cid"))).as("best"),
-          first(col("cell_id")).as("cell_id"))
-        .groupBy("vec_id")
-        .agg(first(col("cell_id")).as("cell_id"), expr(
-          "transform(sort_array(collect_list(struct(s, best.cid as code)))," +
-            " x -> x.code)").as("codes"))
+      val cb = Vectors.codebook(
+        res.filter(col("vec_id") >= 9 && col("vec_id") < 13), "rd", 9)
+      val codes = Vectors.encode(
+        Vectors.slices(res, "rd", "vec_id", "cell_id"), cb, "cell_id")
       // nprobe=2 cells per query, then one LUT per (query, cell) over
       // the query's per-cell residual.
-      val qs = emb.filter(col("vec_id") >= 4 && col("vec_id") < 9)
-        .select(col("vec_id").as("q_id"), col("qd").as("qv"),
-          col("en").as("qn"))
-      val wProbe = org.apache.spark.sql.expressions.Window
-        .partitionBy("q_id").orderBy(col("d"), col("cell_id"))
-      val probe = qs.crossJoin(cellsB)
-        .withColumn("d",
-          (col("qn") + col("cn") - lit(2) * dot("qv", "cd")).cast("long"))
-        .withColumn("rn", row_number().over(wProbe))
-        .filter(col("rn") <= 2)
-        .select(col("q_id"), col("cell_id"),
-          expr("zip_with(qv, cd, (a, b) -> a - b)").as("qr"))
-      val lut = broadcast(slices(probe, "qr", "q_id", "cell_id")
-        .join(cb, "s")
-        .withColumn("ld",
-          (col("vn") + col("cvn") - lit(2) * dot("v", "cv")).cast("long"))
-        .withColumn("k", col("s") * 4 + col("cid"))
-        .groupBy("q_id", "cell_id")
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(k, ld))), x -> x.ld)")
-          .as("lut")))
+      val qs = pqQueries(emb)
+      val probe = Vectors.probeResiduals(qs, cellsB, 2)
+      val lut = Vectors.lut(Vectors.slices(probe, "qr", "q_id", "cell_id"),
+        cb, 4, "q_id", "cell_id")
       // ADC scan: equi-join the code table to the probed-cell LUTs on
       // cell_id — the cell-partition pruning shape — then pure lookups.
       // Final rank — SIZE-ADAPTIVE (TopKAgg.engage, r16, VERDICT r15
       // #6; q_ann_pq_adc's note): nprobe/nlist of corpus × queries.
       // cell_id is carried, never ordered — vec_id is unique per group.
       val adcScored = codes.join(lut, "cell_id")
-        .withColumn("adc_dist", expr(
-          "aggregate(zip_with(codes, sequence(0, 7)," +
-            " (c, s) -> element_at(lut, cast(s*4 + c + 1 as int)))," +
-            " cast(0 as bigint), (a, x) -> a + x)"))
+        .withColumn("adc_dist", Vectors.adc(4))
       val top = TopKAgg.perGroup(adcScored, Seq("q_id"),
         Seq("adc_dist" -> Asc, "vec_id" -> Asc), 5, carry = Seq("cell_id"),
         rank = Some("rn"), agg = TopKAgg.engage(emb))
         .select(col("q_id"), col("rn").cast("int").as("rn"),
           col("vec_id").as("cand_id"), col("cell_id"), col("adc_dist"))
-      val corpV = corp.select(col("vec_id").as("cand_id"),
-        col("qd").as("cv2"), col("en").as("cvn2"))
-      val qV = broadcast(qs.select(col("q_id"), col("qv"), col("qn")))
-      top.join(corpV, "cand_id").join(qV, "q_id")
-        .withColumn("exact_dist",
-          (col("qn") + col("cvn2") - lit(2) * dot("qv", "cv2")).cast("long"))
+      Vectors.withExactDist(top, corp, qs)
         .select("q_id", "rn", "cand_id", "cell_id", "adc_dist",
           "exact_dist")
         .orderBy("q_id", "rn")
@@ -2597,9 +2252,8 @@ object Similarity extends QueryPack {
         |UNION ALL
         |SELECT q_id, 4 AS rank, v4 AS vec_id, score4 AS mmr_score FROM s4
         |ORDER BY q_id, rank""".stripMargin) { (s, dir) =>
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), expr(
-        "cast(transform(embedding, x -> cast(round(cast(x as double)" +
-          " * 1000) as bigint)) as array<double>)").as("v"))
+      val emb = t(s, dir, "embeddings").select(col("vec_id"),
+        Vectors.quantize("embedding").cast("array<double>").as("v"))
       val qs = broadcast(emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("q_id"), col("v").as("qv")))
       val corpus = emb.filter(col("vec_id") >= 9)
@@ -2616,7 +2270,7 @@ object Similarity extends QueryPack {
       // stages; the interpreted-lambda cost is O(k·shortlist²·dims)
       // on 3 rows — noise, and no hash calls (the lambda lint's trap).
       val sl = qs.join(corpus)
-        .withColumn("dq", expr("cast(dot_f(qv, cv) as long)"))
+        .withColumn("dq", dot("qv", "cv").cast("long"))
         .withColumn("rn", row_number().over(wTop)).filter(col("rn") <= 8)
         .groupBy("q_id")
         .agg(collect_list(struct(col("cand_id"), col("dq"), col("cv")))
@@ -3151,9 +2805,8 @@ object Similarity extends QueryPack {
         .select(col("doc_id"), col("pd"), col("inrm"))
       val qs = broadcast(t(s, dir, "embeddings")
         .filter(col("vec_id") < 6)
-        .select(col("vec_id").as("q_id"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double)" +
-            " * 1000) as bigint))").as("qv"))
+        .select(col("vec_id").as("q_id"),
+          Vectors.quantize("embedding").as("qv"))
         .withColumn("qpd", sharedProj("qv").cast("array<double>"))
         .withColumn("qnrm", sqrt(dot("qpd", "qpd")))
         .select(col("q_id"), col("qpd"), col("qnrm")))
@@ -3163,8 +2816,7 @@ object Similarity extends QueryPack {
       // window sort-scratch measured into sf100 ENOSPC; forced-parity
       // tested in Round18OpsSpec.
       val scored = img.crossJoin(qs)
-        .withColumn("cos_sim",
-          round(dot("qpd", "pd") / (col("qnrm") * col("inrm")), 6))
+        .withColumn("cos_sim", cos6("qpd", "qnrm", "pd", "inrm"))
       TopKAgg.perGroup(scored, Seq("q_id"),
         Seq("cos_sim" -> Desc, "doc_id" -> Asc), 2, rank = Some("rn"),
         agg = TopKAgg.engage(img))
@@ -3241,12 +2893,9 @@ object Similarity extends QueryPack {
       // the rounded cosine (tie → lower cell_id), then the
       // deterministic per-cell cap
       val assigned = img.crossJoin(cells)
-        .withColumn("ccos",
-          round(dot("pd", "cd") / (col("inrm") * col("cn")), 6))
+        .withColumn("ccos", cos6("pd", "inrm", "cd", "cn"))
         .groupBy("doc_id")
-        .agg(max_by(col("cell_id"),
-          struct(col("ccos"), (lit(0L) - col("cell_id")).as("inv")))
-          .as("cell"),
+        .agg(Vectors.maxByCos(col("cell_id"), "ccos", "cell_id").as("cell"),
           first(col("pd")).as("pd"), first(col("inrm")).as("inrm"))
       // Per-cell cap — SIZE-ADAPTIVE (TopKAgg.engage, r16, VERDICT r15
       // #6). Unlike the LSH bucket cap (bounded ~32-member occupancy —
@@ -3261,30 +2910,25 @@ object Similarity extends QueryPack {
         agg = TopKAgg.engage(img))
       val qs = t(s, dir, "embeddings")
         .filter(col("vec_id") < 6)
-        .select(col("vec_id").as("q_id"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double)" +
-            " * 1000) as bigint))").as("qv"))
+        .select(col("vec_id").as("q_id"),
+          Vectors.quantize("embedding").as("qv"))
         .withColumn("qpd", sharedProj("qv").cast("array<double>"))
         .withColumn("qnrm", sqrt(dot("qpd", "qpd")))
         .select(col("q_id"), col("qpd"), col("qnrm"))
       val wProbe = org.apache.spark.sql.expressions.Window
         .partitionBy("q_id").orderBy(col("pcos").desc, col("cell_id"))
       val probes = qs.crossJoin(cells)
-        .withColumn("pcos",
-          round(dot("qpd", "cd") / (col("qnrm") * col("cn")), 6))
+        .withColumn("pcos", cos6("qpd", "qnrm", "cd", "cn"))
         .withColumn("rn", row_number().over(wProbe))
         .filter(col("rn") <= nprobe)
         .select(col("q_id"), col("qpd"), col("qnrm"),
           col("cell_id").as("pcell"))
       index.join(broadcast(probes), col("pcell") === col("cell"))
-        .withColumn("cos_sim",
-          round(dot("qpd", "pd") / (col("qnrm") * col("inrm")), 6))
+        .withColumn("cos_sim", cos6("qpd", "qnrm", "pd", "inrm"))
         .groupBy("q_id")
-        .agg(max_by(
+        .agg(Vectors.maxByCos(
           struct(col("doc_id").as("cand_id"), col("cell").as("cell_id"),
-            col("cos_sim")),
-          struct(col("cos_sim"), (lit(0L) - col("doc_id")).as("inv")))
-          .as("best"))
+            col("cos_sim")), "cos_sim", "doc_id").as("best"))
         .select(col("q_id"), col("best.cand_id").as("cand_id"),
           col("best.cell_id").as("cell_id"),
           col("best.cos_sim").as("cos_sim"))

@@ -1,7 +1,9 @@
 package graft.sources
 
+import graft.operators.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persisted IVF-PQ index — the "build once, query many" production
   * shape of q_ann_ivfpq (queries/Similarity.scala): the expensive
@@ -52,39 +54,19 @@ import org.apache.spark.sql.functions._
   */
 object IvfPqIndex {
 
-  private def dot(a: String, b: String) =
-    expr(s"dot_f($a, $b)")
-
   /** Quantized embeddings: (vec_id, q bigint[64], qd double[64], en). */
-  private[graft] def quantized(s: SparkSession, dir: String): DataFrame =
-    graft.T.t(s, dir, "embeddings").select(col("vec_id"), expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 1000)" +
-        " as bigint))").as("q"))
-      .withColumn("qd", col("q").cast("array<double>"))
-      .withColumn("en", dot("qd", "qd"))
+  private def quantized(s: SparkSession, dir: String): DataFrame =
+    Vectors.quantized(graft.T.t(s, dir, "embeddings"), "vec_id")
 
-  /** 8-dim subspace slices of array column `vcol`, carrying `carry`. */
-  private[graft] def slices(df: DataFrame, vcol: String,
-      carry: String*): DataFrame = df
-    .select(carry.map(col) :+ posexplode(expr(
-      s"transform(sequence(0, 7), s -> slice($vcol, s*8 + 1, 8))")): _*)
-    .select(carry.map(col) :+ col("pos").as("s") :+ col("col").as("v"): _*)
-    .withColumn("vn", dot("v", "v"))
-
-  /** Coarse assignment + residual: (vec_id, cell_id, rd). min(struct)
-    * carries the winning centroid array so the residual needs no
-    * re-join (cell_id is unique per distance tie-break, so the
-    * trailing cd never participates in the ordering).
-    */
-  private def assignResidual(corp: DataFrame, cellsB: DataFrame): DataFrame =
-    corp.crossJoin(cellsB)
-      .withColumn("d",
-        (col("en") + col("cn") - lit(2) * dot("qd", "cd")).cast("long"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d"), col("cell_id"), col("cd"))).as("best"),
-        first(col("qd")).as("qd"))
-      .select(col("vec_id"), col("best.cell_id").as("cell_id"),
-        expr("zip_with(qd, best.cd, (a, b) -> a - b)").as("rd"))
+  // The writers' schemas, read back as given: no footer-inference job
+  // per read, and the same types inference yields (cell_id, the codes
+  // partition column, infers as int).
+  private val cellsSchema =
+    StructType.fromDDL("cell_id BIGINT, c ARRAY<BIGINT>")
+  private val codebookSchema =
+    StructType.fromDDL("cid INT, s INT, cv ARRAY<BIGINT>")
+  private val codesSchema =
+    StructType.fromDDL("vec_id BIGINT, codes ARRAY<INT>, cell_id INT")
 
   /** The deterministic model frames: broadcast cells (vec_id < 4) and
     * the shared residual codebook (residuals of vectors 9..12 under
@@ -97,11 +79,7 @@ object IvfPqIndex {
       .select(col("vec_id").as("cell_id"), col("qd").as("cd"),
         col("en").as("cn")))
     val seeds = emb.filter(col("vec_id") >= 9 && col("vec_id") < 13)
-    val cb = broadcast(
-      slices(assignResidual(seeds, cellsB), "rd", "vec_id")
-        .select((col("vec_id") - 9).cast("int").as("cid"), col("s"),
-          col("v").as("cv"), col("vn").as("cvn")))
-    (cellsB, cb)
+    (cellsB, Vectors.codebook(Vectors.assignResidual(seeds, cellsB), "rd", 9))
   }
 
   /** The frozen model frames read BACK from a persisted index — same
@@ -111,15 +89,19 @@ object IvfPqIndex {
     */
   private[graft] def readModelFrames(s: SparkSession,
       path: String): (DataFrame, DataFrame) = {
-    val cellsB = broadcast(s.read.parquet(path + "/cells")
+    val cellsB = broadcast(s.read.schema(cellsSchema).parquet(path + "/cells")
       .withColumn("cd", col("c").cast("array<double>"))
-      .withColumn("cn", dot("cd", "cd"))
+      .withColumn("cn", Vectors.dot("cd", "cd"))
       .select(col("cell_id"), col("cd"), col("cn")))
-    val cb = broadcast(s.read.parquet(path + "/codebook")
+    val cb = broadcast(s.read.schema(codebookSchema).parquet(path + "/codebook")
       .withColumn("cv", col("cv").cast("array<double>"))
-      .withColumn("cvn", dot("cv", "cv")))
+      .withColumn("cvn", Vectors.dot("cv", "cv")))
     (cellsB, cb)
   }
+
+  /** The code table of a persisted index: (vec_id, codes, cell_id). */
+  private[graft] def readCodes(s: SparkSession, path: String): DataFrame =
+    s.read.schema(codesSchema).parquet(path + "/codes")
 
   /** Residual-PQ encode of a corpus slice under frozen model frames:
     * (vec_id, cell_id, codes int[8]). Per-row deterministic — the
@@ -127,17 +109,8 @@ object IvfPqIndex {
     */
   private def encode(corp: DataFrame, cellsB: DataFrame,
       cb: DataFrame): DataFrame =
-    slices(assignResidual(corp, cellsB), "rd", "vec_id", "cell_id")
-      .join(cb, "s")
-      .withColumn("d",
-        (col("vn") + col("cvn") - lit(2) * dot("v", "cv")).cast("long"))
-      .groupBy("vec_id", "s")
-      .agg(min(struct(col("d"), col("cid"))).as("best"),
-        first(col("cell_id")).as("cell_id"))
-      .groupBy("vec_id")
-      .agg(first(col("cell_id")).as("cell_id"), expr(
-        "transform(sort_array(collect_list(struct(s, best.cid as code)))," +
-          " x -> x.code)").as("codes"))
+    Vectors.encode(Vectors.slices(Vectors.assignResidual(corp, cellsB), "rd",
+      "vec_id", "cell_id"), cb, "cell_id")
 
   /** Build (memoized) and return the index root path — full corpus. */
   def ensure(s: SparkSession, dir: String): String = {

@@ -24,7 +24,8 @@ class Round17OpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val dir = SparkTestBase.sfDir
 
-  private def runBoth(name: String): (Seq[String], Seq[String]) = {
+  private def runBoth(name: String,
+      dir: String = dir): (Seq[String], Seq[String]) = {
     val d = SparkEntry.all.find(_.name == name).get
     def rows(): Seq[String] = {
       val df = d.run(spark, dir)
@@ -50,6 +51,39 @@ class Round17OpsSpec extends AnyFunSuite {
       assert(w.nonEmpty, s"$q returned no rows")
       assert(w == a, s"$q: adaptive top-k branches disagree")
     }
+  }
+
+  // On sf0.001 no vector ties on the rounded cosine at the k-th cell, so
+  // the parity tests above cannot tell a right tie-break from a wrong
+  // one in the routed-IVF rank stages. Here 500 unit vectors sit in
+  // blocks: vec_ids 32j..32j+31 lie on axis j, so the 16 seeds
+  // (vec_id % 32 == 0, both statements at n = 500) are e_0..e_15 and
+  // every vector has cosine 1 with its own seed and exactly 0 with the
+  // 15 others — nprobe = 2 keeps one of 15 cells tied at the boundary.
+  // Block 5 holds only its seed (vec_ids 161..191 lie on axis 6), so
+  // vector 160 finds its answer in that tied second cell: the lowest
+  // cell id (0) by the statements' (cos DESC, id) order.
+  test("routed IVF: both arms agree when the k-th cell ties on the rounded cosine") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions._
+    val tied = SparkTestBase.tmpDir("graft-ivf-ties").toString
+    (0L until 500L).toDF("vec_id")
+      .withColumn("axis", when(col("vec_id") > 160 && col("vec_id") < 192, 6L)
+        .otherwise(col("vec_id").divide(32).cast("long")))
+      .select(col("vec_id"), expr("transform(sequence(0, 63)," +
+        " i -> cast(if(i = axis, 1, 0) as float))").as("embedding"),
+        lit(0).as("label"))
+      .write.parquet(s"$tied/embeddings.parquet")
+    val split = Seq("q_ann_ivf_cells", "q_ann_ivf_hier").flatMap { q =>
+      val (w, a) = runBoth(q, tied)
+      assert(w.length == 500, s"$q: one answer per vector")
+      assert(w.contains("[160,0,0.0]"),
+        s"$q: vector 160 must take the lowest tied cell's first member")
+      if (w == a) None
+      else Some(s"$q: window-only ${w.diff(a)}, collect_topk-only ${a.diff(w)}")
+    }
+    assert(split.isEmpty, "the arms break the k-th cell tie differently")
   }
 
   test("TopKAgg.engage gates on the size estimate, not a constant") {

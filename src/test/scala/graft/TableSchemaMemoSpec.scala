@@ -144,4 +144,20 @@ class TableSchemaMemoSpec extends AnyFunSuite {
     }.filter(_._2 != 0)
     assert(jobs.isEmpty, s"statements whose second build started jobs: $jobs")
   }
+
+  test("rebuilding an IVF-PQ index statement reads the index back with no inference job") {
+    // The index tables are read with their writer's schema, so the only
+    // jobs left are the search's own: the eager probe checkpoint and the
+    // collect that routes the probed cells (8 jobs when each of the
+    // three tables was inferred from its footers).
+    for (name <- Seq("q_ann_ivfpq_index", "q_ann_ivfpq_delta")) {
+      val run = SparkEntry.queries(name)
+      val s = fresh()
+      run(s, sfDir) // builds or finds the index; memoizes embeddings
+      val (df, jobs) = jobsIn(run(s, sfDir))
+      assert(jobs == 5, s"$name: $jobs jobs per rebuild")
+      assert(hash(df) == hash(SparkEntry.queries("q_ann_ivfpq")(s, sfDir)),
+        s"$name: the index search must answer as q_ann_ivfpq")
+    }
+  }
 }
