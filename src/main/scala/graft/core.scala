@@ -21,11 +21,6 @@ trait QueryPack {
   protected def q(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, Some(oracle), run)
-
-  /** Rows-only query (no SQL-expressible oracle). */
-  protected def qRows(name: String)(
-      run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, None, run)
 }
 
 /** Table access + numeric helpers shared by all packs. */
@@ -214,16 +209,18 @@ object T {
   def scratchDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(d: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(d)) {
-          val st = java.nio.file.Files.list(d)
-          try st.forEach(rm(_)) finally st.close()
-        }
-        java.nio.file.Files.deleteIfExists(d); ()
-      }
-      try rm(p) catch { case _: Throwable => () }
+      try deleteTree(p) catch { case _: Throwable => () }
     }))
     p.toString
+  }
+
+  /** Delete `p` and, if it is a directory, everything under it. */
+  def deleteTree(p: java.nio.file.Path): Unit = {
+    if (java.nio.file.Files.isDirectory(p)) {
+      val st = java.nio.file.Files.list(p)
+      try st.forEach(deleteTree(_)) finally st.close()
+    }
+    java.nio.file.Files.deleteIfExists(p); ()
   }
 
   /** Content fingerprint of one test table: md5 over the sorted

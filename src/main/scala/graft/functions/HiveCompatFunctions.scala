@@ -263,16 +263,6 @@ object HiveCompatFunctions {
       c.substr(lit(1), greatest(length(c) - n, lit(0))),
       mask(c.substr(greatest(length(c) - n + 1, lit(1)), lit(n))))
 
-  /** mask_show_first_n: show first n, mask the rest. */
-  def maskShowFirstN(c: Column, n: Int): Column =
-    concat(c.substr(lit(1), lit(n)), mask(c.substr(lit(n + 1), length(c))))
-
-  /** mask_show_last_n: mask all but the last n chars. */
-  def maskShowLastN(c: Column, n: Int): Column =
-    concat(
-      mask(c.substr(lit(1), greatest(length(c) - n, lit(0)))),
-      c.substr(greatest(length(c) - n + 1, lit(1)), lit(n)))
-
   /** mask_hash: deterministic hash of the value (Hive uses md5/sha256). */
   def maskHash(c: Column): Column = md5(c.cast("string"))
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft._
 import graft.T._
+import graft.operators.Artifact
 import org.apache.spark.sql.functions._
 
 /** GroupByOperator surface (SURVEY.md §2.4): hash aggregation with
@@ -21,19 +22,13 @@ object Aggregates extends QueryPack {
     * (event_type, day=partition, bucket, bm) where bm is the bitmap
     * blob of user_ids in that bucket — built once per events-content
     * fingerprint (the scheduled-job artifact q_agg_bitmap_rollup
-    * queries). Completion gate: parquet's root _SUCCESS, written last.
+    * queries).
     */
   private[graft] def ensureBitmapRollup(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_bmroll_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "events")
-    val done = new java.io.File(path, "_SUCCESS")
-    if (!done.exists())
-      rollupOf(s, dir, "true")
-        .write.mode("overwrite").partitionBy("day").parquet(path)
-    path
-  }
+      dir: String): String =
+    Artifact.derive(s, "bmroll", dir, "events") { out =>
+      rollupOf(s, dir, "true").write.partitionBy("day").parquet(out)
+    }
 
   /** One day-grouped bitmap pass over the events slice matching
     * `pred` (a SQL predicate over the raw columns) — the single
@@ -62,31 +57,22 @@ object Aggregates extends QueryPack {
     * input-order-insensitive, base ∪ delta is byte-identical to a
     * from-scratch rebuild (Round14OpsSpec proves blob-level equality),
     * and range queries keep pruning day directories exactly as
-    * before. Completion gate: a _GRAFT_DONE marker written AFTER the
-    * append (parquet's _SUCCESS lands mid-sequence in a two-phase
-    * build). This is the Druid-slice segment-append pattern applied
+    * before. This is the Druid-slice segment-append pattern applied
     * to the exact-bitmap artifact. 100 TB: the daily append scans one
     * day of raw events, never the history — the property that makes a
     * persisted rollup operable as a scheduled job.
     */
   private[graft] def ensureBitmapRollupIncremental(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_bmrollinc_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "events")
-    val done = new java.io.File(path, "_GRAFT_DONE")
-    if (!done.exists()) {
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Artifact.derive(s, "bmrollinc", dir, "events") { out =>
       // the "today" boundary: newest day in the feed (1-row collect)
       val maxDay = t(s, dir, "events")
         .agg(max(to_date(col("ts")))).collect()(0).getDate(0)
       rollupOf(s, dir, s"to_date(ts) < DATE '$maxDay'")
-        .write.mode("overwrite").partitionBy("day").parquet(path)
+        .write.partitionBy("day").parquet(out)
       rollupOf(s, dir, s"to_date(ts) = DATE '$maxDay'")
-        .write.mode("append").partitionBy("day").parquet(path)
-      done.createNewFile()
+        .write.mode("append").partitionBy("day").parquet(out)
     }
-    path
-  }
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -988,7 +974,7 @@ object Aggregates extends QueryPack {
         |  AND CAST(ts AS DATE) < DATE '2024-01-15'
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
       val store = ensureBitmapRollup(s, dir)
-      s.read.parquet(store)
+      Artifact.read(s, store)
         .filter(col("day") >= lit("2024-01-08").cast("date") &&
           col("day") < lit("2024-01-15").cast("date"))
         .createOrReplaceTempView("bmr_rollup")
@@ -1016,7 +1002,7 @@ object Aggregates extends QueryPack {
         |WHERE CAST(ts AS DATE) >= DATE '2024-01-08'
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
       val store = ensureBitmapRollupIncremental(s, dir)
-      s.read.parquet(store)
+      Artifact.read(s, store)
         .filter(col("day") >= lit("2024-01-08").cast("date"))
         .createOrReplaceTempView("bmr_rollup_inc")
       s.sql(

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.storage.StorageLevel
 import graft._
 import graft.T._
+import graft.operators.Artifact
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a large-scale training-data pipeline
@@ -162,16 +163,11 @@ object Dedup extends QueryPack {
     * production artifact shape for CONTINUOUS near-dup dedup: the
     * index is built once by a scheduled job (and extended by appending
     * each accepted batch's postings); daily batches only PROBE it.
-    * Memoized per documents-content fingerprint; completion gate is
-    * parquet's own _SUCCESS (nothing written after the commit).
+    * One artifact per documents content.
     */
-  private def ensureLshIndex(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_lshidx_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "documents")
-    val done = new java.io.File(path, "_SUCCESS")
-    if (!done.exists()) {
+  private[graft] def ensureLshIndex(s: org.apache.spark.sql.SparkSession,
+      dir: String): String =
+    Artifact.derive(s, "lshidx", dir, "documents") { out =>
       val corpus = shingleDf(s, dir)
         .filter(pmod(col("doc_id"), lit(10)) =!= 7)
       val banded = bandedSigs(corpus, "c_id")
@@ -189,8 +185,7 @@ object Dedup extends QueryPack {
       // DROPPED (a probe can miss a true J>=0.8 pair whose only shared
       // bucket was capped — beyond the documented (1-s^2)^12 LSH miss
       // bound), so the build RECORDS what it truncated: a sidecar
-      // written BEFORE the postings (parquet _SUCCESS stays the
-      // completion gate, written last) plus a stdout line.
+      // written before the postings plus a stdout line.
       val capped = ranked.filter(col("rnk") > 1000)
         .agg(countDistinct(struct(col("band"), col("h"))).as("buckets"),
           count(lit(1)).as("postings"))
@@ -199,17 +194,14 @@ object Dedup extends QueryPack {
       // sidecar under its own prefix (graft_lshcap_) so directory scans
       // over graft_lshidx_* keep seeing only the index directory
       val meta = new java.io.PrintWriter(
-        path.replace("graft_lshidx_", "graft_lshcap_") + ".json", "UTF-8")
+        Artifact.path("lshcap", dir, "documents") + ".json", "UTF-8")
       try meta.print(s"""{"cap": 1000, "capped_buckets": $cb, """ +
         s""""dropped_postings": $cp}""")
       finally meta.close()
       println(s"[graft] lsh index build: $cb buckets hit the 1000-cap" +
         s" ($cp postings dropped)")
-      ranked.filter(col("rnk") <= 1000).drop("rnk")
-        .write.mode("overwrite").parquet(path)
+      ranked.filter(col("rnk") <= 1000).drop("rnk").write.parquet(out)
     }
-    path
-  }
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -625,7 +617,7 @@ object Dedup extends QueryPack {
       val sh = shingleDf(s, dir)
       val batch = sh.filter(pmod(col("doc_id"), lit(10)) === 7)
       val probe = bandedSigs(batch, "b_id")
-      val cand = probe.join(s.read.parquet(idx), Seq("band", "h"))
+      val cand = probe.join(Artifact.read(s, idx), Seq("band", "h"))
         .select("b_id", "c_id").distinct()
       val sa = batch.select(col("doc_id").as("b_id"),
         col("shingles").as("sa"))

@@ -4,7 +4,7 @@ import org.apache.spark.storage.StorageLevel
 import graft._
 import graft.T._
 import graft.TopKAgg.{Asc, Desc}
-import graft.operators.Vectors
+import graft.operators.{Artifact, Vectors}
 import graft.operators.Vectors.{cos6, dot, sqL2}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -976,8 +976,7 @@ object Similarity extends QueryPack {
       // both the n×c assignment and the n×nprobe×(n/c) probe rescore
       // are O(n^1.5), IVF's textbook scaling. The count() is one
       // parquet-footer metadata read.
-      val nVecs = e.sparkSession.read
-        .parquet(s"$dir/embeddings.parquet").count()
+      val nVecs = t(s, dir, "embeddings").count()
       val seedMod = Vectors.sqrtTier(nVecs, 31)
       var cents = e.filter(col("vec_id") % seedMod === 0)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cent"),
@@ -1160,8 +1159,7 @@ object Similarity extends QueryPack {
         |  FROM scored) WHERE rn = 1 ORDER BY q_id""".stripMargin) {
       (s, dir) =>
       val e = withNorm(t(s, dir, "embeddings"))
-      val nVecs = e.sparkSession.read
-        .parquet(s"$dir/embeddings.parquet").count()
+      val nVecs = t(s, dir, "embeddings").count()
       // Tier sizing by pure integer shifts both engines replay: fine
       // nlist ≈ sqrt(n) (p² ≥ n, the flat-IVF seeding), coarse
       // ncoarse ≈ sqrt(nlist) (q² ≥ p).
@@ -1615,7 +1613,7 @@ object Similarity extends QueryPack {
         |  END AS bmp_bytes
         |FROM m ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureStore(s, dir)
-      val blobs = s.read.parquet(store).filter(col("doc_id") < 64)
+      val blobs = Artifact.read(s, store).filter(col("doc_id") < 64)
       graft.sources.MediaBlobs.withDecoded(blobs)
         .select(col("doc_id"), col("fmt"), col("width"), col("height"),
           col("bit_depth").cast("int").as("bit_depth"), col("channels"),
@@ -1647,7 +1645,7 @@ object Similarity extends QueryPack {
         |FROM grp ORDER BY canonical_doc""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureStore(s, dir)
       val blobs = graft.sources.MediaBlobs.withDecoded(
-        s.read.parquet(store))
+        Artifact.read(s, store))
       blobs
         .groupBy(md5(col("payload")).as("media_hash"))
         .agg(min(col("doc_id")).as("canonical_doc"),
@@ -1691,7 +1689,7 @@ object Similarity extends QueryPack {
         |  CAST(44 + nf * ch * 2 AS BIGINT) AS wav_bytes
         |FROM m ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureAudioStore(s, dir)
-      val blobs = s.read.parquet(store).filter(col("doc_id") < 64)
+      val blobs = Artifact.read(s, store).filter(col("doc_id") < 64)
       graft.sources.MediaBlobs.withAudioDecoded(blobs)
         .select(col("doc_id"), col("fmt"), col("channels"),
           col("sample_rate"), col("bits"), col("n_frames"),
@@ -1731,7 +1729,7 @@ object Similarity extends QueryPack {
         |FROM w ORDER BY doc_id, win""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureAudioStore(s, dir)
       graft.sources.MediaBlobs.audioFrameEnergy(
-          s.read.parquet(store).filter(col("doc_id") < 12), 25)
+          Artifact.read(s, store).filter(col("doc_id") < 12), 25)
         .select(col("doc_id"), col("win").cast("int").as("win"),
           col("n_samples"), col("energy"))
         .orderBy("doc_id", "win")
@@ -2082,7 +2080,7 @@ object Similarity extends QueryPack {
         |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureStore(s, dir)
       graft.sources.MediaBlobs.resizeBmpThumb(
-          s.read.parquet(store).filter(col("doc_id") < 64), 8, 2)
+          Artifact.read(s, store).filter(col("doc_id") < 64), 8, 2)
         .orderBy("doc_id")
     },
 
@@ -2119,7 +2117,7 @@ object Similarity extends QueryPack {
         |    AS BIGINT) AS y4m_bytes
         |FROM m ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureVideoStore(s, dir)
-      val blobs = s.read.parquet(store).filter(col("doc_id") < 64)
+      val blobs = Artifact.read(s, store).filter(col("doc_id") < 64)
       graft.sources.MediaBlobs.withVideoDecoded(blobs)
         .select(col("doc_id"), col("fmt"), col("width"), col("height"),
           col("fps"), col("colorspace"), col("n_frames"),
@@ -2164,7 +2162,7 @@ object Similarity extends QueryPack {
         |FROM f ORDER BY doc_id, frame""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureVideoStore(s, dir)
       graft.sources.MediaBlobs.videoFrameFeatures(
-          s.read.parquet(store).filter(col("doc_id") < 12), 2)
+          Artifact.read(s, store).filter(col("doc_id") < 12), 2)
         .select(col("doc_id"), col("frame"), col("luma_sum"),
           col("delta_prev"))
         .orderBy("doc_id", "frame")
@@ -2352,7 +2350,7 @@ object Similarity extends QueryPack {
         |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureStore(s, dir)
       graft.sources.MediaBlobs.dhashBmp(
-          s.read.parquet(store).filter(col("doc_id") < 64))
+          Artifact.read(s, store).filter(col("doc_id") < 64))
         .orderBy("doc_id")
     },
 
@@ -2413,7 +2411,7 @@ object Similarity extends QueryPack {
       // join-back formulation re-read 7 GB of payloads at sf30 and
       // failed building a broadcast side.
       val dh = graft.sources.MediaBlobs.dhashBmpWithMeta(
-          s.read.parquet(store))
+          Artifact.read(s, store))
         .groupBy("media_hash")
         .agg(min(col("doc_id")).as("canonical"),
           count(lit(1)).as("n_copies"),
@@ -2517,7 +2515,7 @@ object Similarity extends QueryPack {
       // single decoder pass carries hash + dims + dHash (see
       // q_image_neardup's scale note)
       val groups = graft.sources.MediaBlobs.dhashBmpWithMeta(
-          s.read.parquet(store))
+          Artifact.read(s, store))
         .groupBy("media_hash")
         .agg(min(col("doc_id")).as("canonical"),
           count(lit(1)).as("n_copies"),
@@ -2600,16 +2598,16 @@ object Similarity extends QueryPack {
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val img = graft.sources.MediaBlobs.withDecoded(s.read.parquet(
+      val img = graft.sources.MediaBlobs.withDecoded(Artifact.read(s,
           graft.sources.MediaBlobs.ensureStore(s, dir)))
         .select(col("doc_id"), col("fmt").as("img_fmt"),
           when(col("fmt") === "bmp", length(col("payload")).cast("long"))
             .as("img_bytes"))
-      val wav = s.read.parquet(
+      val wav = Artifact.read(s,
           graft.sources.MediaBlobs.ensureAudioStore(s, dir))
         .select(col("doc_id"),
           length(col("payload")).cast("long").as("wav_bytes"))
-      val vid = s.read.parquet(
+      val vid = Artifact.read(s,
           graft.sources.MediaBlobs.ensureVideoStore(s, dir))
         .select(col("doc_id"),
           length(col("payload")).cast("long").as("y4m_bytes"))
@@ -2664,7 +2662,7 @@ object Similarity extends QueryPack {
         |GROUP BY fp, nwin ORDER BY canonical_doc""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureAudioStore(s, dir)
       val feats = graft.sources.MediaBlobs.audioFrameEnergy(
-        s.read.parquet(store), 25)
+        Artifact.read(s, store), 25)
       val wl = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy("win")
       feats.withColumn("lag_e", lag(col("energy"), 1).over(wl))
@@ -2713,7 +2711,7 @@ object Similarity extends QueryPack {
         |GROUP BY fp, n_frames ORDER BY canonical_doc""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureVideoStore(s, dir)
       val feats = graft.sources.MediaBlobs.videoFrameFeatures(
-        s.read.parquet(store), 1)
+        Artifact.read(s, store), 1)
       val wl = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy("frame")
       feats.withColumn("lag_l", lag(col("luma_sum"), 1).over(wl))
@@ -2761,7 +2759,7 @@ object Similarity extends QueryPack {
         |FROM m ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureCodecStore(s, dir)
       graft.sources.MediaBlobs.decodeCodecDims(
-          s.read.parquet(store).filter(col("doc_id") < 64))
+          Artifact.read(s, store).filter(col("doc_id") < 64))
         .orderBy("doc_id")
     },
 
@@ -2799,7 +2797,7 @@ object Similarity extends QueryPack {
         |  FROM scored) WHERE rn <= 2 ORDER BY q_id, rn""".stripMargin) {
       (s, dir) =>
       val store = graft.sources.MediaBlobs.ensureImageEmbStore(s, dir)
-      val img = s.read.parquet(store)
+      val img = Artifact.read(s, store)
         .withColumn("pd", sharedProj("f").cast("array<double>"))
         .withColumn("inrm", sqrt(dot("pd", "pd")))
         .select(col("doc_id"), col("pd"), col("inrm"))
@@ -2881,7 +2879,7 @@ object Similarity extends QueryPack {
       val nprobe = ivfNprobe
       val cellCap = ivfCellCap
       val store = graft.sources.MediaBlobs.ensureImageEmbStore(s, dir)
-      val img = s.read.parquet(store)
+      val img = Artifact.read(s, store)
         .withColumn("pd", sharedProj("f").cast("array<double>"))
         .withColumn("inrm", sqrt(dot("pd", "pd")))
         .select(col("doc_id"), col("pd"), col("inrm"))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -82,15 +83,10 @@ object AccumuloKv {
 
   /** Deterministic cell-store build from the supplier table: one CELL
     * ROW per (supplier, mapped column), rowkey = padded s_suppkey.
-    * Memoized per supplier-content fingerprint; the completion gate is
-    * the meta file, written LAST (the HBase-slice lesson — never gate
-    * on an artifact that precedes the final write).
+    * One artifact per supplier content and tablet count.
     */
-  def ensureStore(s: SparkSession, dir: String, nTablets: Int = 6): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_accumulo_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "supplier") + "_t" + nTablets
-    if (!java.nio.file.Files.exists(metaPath(path))) {
+  def ensureStore(s: SparkSession, dir: String, nTablets: Int = 6): String =
+    Artifact.derive(s, "accumulo", dir, "supplier", "_t" + nTablets) { out =>
       val sup = graft.T.t(s, dir, "supplier")
       val maxKey = sup.agg(max(col("s_suppkey"))).head().getLong(0)
       val cells = cellSpec.map { case (cq, src, vis) =>
@@ -108,14 +104,12 @@ object AccumuloKv {
       cells
         .repartition(col("__tablet"))
         .sortWithinPartitions("__row", "__cf", "__cq")
-        .write.mode("overwrite")
+        .write
         .partitionBy("__tablet")
-        .parquet(path)
-      java.nio.file.Files.write(metaPath(path),
+        .parquet(out)
+      java.nio.file.Files.write(metaPath(out),
         s"""{"nTablets":$nTablets,"maxKey":$maxKey}""".getBytes("UTF-8"))
     }
-    path
-  }
 
   /** Range SCAN [startRow, stopRow) with authorizations: driver-side
     * tablet selection (the client's tablet-locator cache), `__row`
@@ -132,7 +126,7 @@ object AccumuloKv {
     // stop-exclusive: the last tablet that can hold a row < stopRow
     val hi = tabletOf(math.max(0L, stopRow.toLong - 1L), nTablets, maxKey)
     val authArr = array(auths.toSeq.sorted.map(lit): _*)
-    s.read.parquet(path)
+    Artifact.read(s, path)
       .filter(col("__tablet") >= lo && col("__tablet") <= hi)
       .filter(col("__row") >= startRow && col("__row") < stopRow)
       .filter(forall(split(col("__vis"), "&"),

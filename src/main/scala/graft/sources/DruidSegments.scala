@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,14 +42,10 @@ object DruidSegments {
     * metrics (cnt, value_sum, value_max). Metric partials are exact
     * DECIMAL(18,4) sums so query-time re-aggregation is associative
     * bit-for-bit (double partials would make rollup order visible).
-    * Memoized per events-content fingerprint.
+    * One artifact per events content.
     */
-  def ensureDatasource(s: SparkSession, dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_druid_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "events")
-    val done = new java.io.File(path, "_SUCCESS")
-    if (!done.exists()) {
+  def ensureDatasource(s: SparkSession, dir: String): String =
+    Artifact.derive(s, "druid", dir, "events") { out =>
       graft.T.t(s, dir, "events")
         .groupBy(
           date_trunc("hour", col("ts")).as("__time"),
@@ -59,12 +56,10 @@ object DruidSegments {
         .withColumn("__day", to_date(col("__time")))
         .repartition(col("__day"))
         .sortWithinPartitions("__time", "event_type")
-        .write.mode("overwrite")
+        .write
         .partitionBy("__day")
-        .parquet(path)
+        .parquet(out)
     }
-    path
-  }
 
   /** Interval scan [start, end) — end exclusive (Druid's interval
     * convention). Compiles to segment (directory) pruning on `__day`;
@@ -86,7 +81,7 @@ object DruidSegments {
     val endDayBound =
       if (midnightEnd) col("__day") < lit(endDay).cast("date")
       else col("__day") <= lit(endDay).cast("date")
-    s.read.parquet(path)
+    Artifact.read(s, path)
       .filter(col("__day") >= lit(startDay).cast("date") &&
         endDayBound &&
         col("__time") >= lit(startDay).cast("timestamp") &&

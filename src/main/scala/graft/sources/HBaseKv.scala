@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,19 +66,11 @@ object HBaseKv {
 
   /** Deterministic store build from the customer table — the
     * `hbase.columns.mapping` twin `:key,cf:name,cf:mktsegment,
-    * cf:acctbal,cf:nationkey` with rowkey = padded c_custkey. Memoized
-    * per customer-content fingerprint (stale-memo discipline).
+    * cf:acctbal,cf:nationkey` with rowkey = padded c_custkey. One
+    * artifact per customer content and region count.
     */
-  def ensureStore(s: SparkSession, dir: String, nRegions: Int = 8): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_hbase_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "customer") + "_r" + nRegions
-    // Completion gate = the meta file, which is written LAST (after the
-    // parquet commit): gating on parquet's _SUCCESS alone left a crash
-    // window between the two where the store looked complete but every
-    // readMeta threw until the tmp dir was cleared by hand.
-    val done = java.nio.file.Files.exists(metaPath(path))
-    if (!done) {
+  def ensureStore(s: SparkSession, dir: String, nRegions: Int = 8): String =
+    Artifact.derive(s, "hbase", dir, "customer", "_r" + nRegions) { out =>
       val c = graft.T.t(s, dir, "customer")
       val maxKey = c.agg(max(col("c_custkey"))).head().getLong(0)
       c.select(
@@ -94,15 +87,13 @@ object HBaseKv {
           col("c_nationkey").as("nationkey"))
         .repartition(col("__region"))
         .sortWithinPartitions("__row_key")
-        .write.mode("overwrite")
+        .write
         .partitionBy("__region")
-        .parquet(path)
-      java.nio.file.Files.write(metaPath(path),
+        .parquet(out)
+      java.nio.file.Files.write(metaPath(out),
         s"""{"nRegions":$nRegions,"maxKey":$maxKey}"""
           .getBytes("UTF-8"))
     }
-    path
-  }
 
   /** Range SCAN: [startRow, stopRow), stop exclusive (the HBase Scan
     * convention). The driver-side meta lookup selects the contiguous
@@ -112,7 +103,7 @@ object HBaseKv {
   def scanRange(s: SparkSession, path: String,
       startRow: String, stopRow: String): DataFrame = {
     val (nRegions, maxKey) = readMeta(path)
-    val kv = s.read.parquet(path)
+    val kv = Artifact.read(s, path)
     val lo = startRow.toLong
     val hi = stopRow.toLong - 1L // last key a stop-EXCLUSIVE scan can hit
     if (hi < lo) return kv.filter(lit(false))
@@ -125,7 +116,7 @@ object HBaseKv {
   /** Point GET: one region + one exact key — the client get(rowkey). */
   def get(s: SparkSession, path: String, key: Long): DataFrame = {
     val (nRegions, maxKey) = readMeta(path)
-    val kv = s.read.parquet(path)
+    val kv = Artifact.read(s, path)
     if (key > maxKey) return kv.filter(lit(false))
     kv.filter(col("__region") === regionOf(key, nRegions, maxKey) &&
       col("__row_key") === rowkey(key))
@@ -136,7 +127,7 @@ object HBaseKv {
     */
   def multiGet(s: SparkSession, path: String, keys: Seq[Long]): DataFrame = {
     val (nRegions, maxKey) = readMeta(path)
-    val kv = s.read.parquet(path)
+    val kv = Artifact.read(s, path)
     val ks = keys.filter(_ <= maxKey)
     if (ks.isEmpty) return kv.filter(lit(false))
     val regions = ks.map(regionOf(_, nRegions, maxKey)).distinct.sorted

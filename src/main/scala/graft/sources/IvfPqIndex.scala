@@ -1,9 +1,8 @@
 package graft.sources
 
-import graft.operators.Vectors
+import graft.operators.{Artifact, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Persisted IVF-PQ index — the "build once, query many" production
   * shape of q_ann_ivfpq (queries/Similarity.scala): the expensive
@@ -30,20 +29,14 @@ import org.apache.spark.sql.types.StructType
   *   ensureIncremental — base build over the STANDING corpus
   *                       (vec_id % 10 != 7, the ensureLshIndex split)
   *                       followed by a DELTA APPEND of the batch: the
-  *                       append job reads the FROZEN model tables back
-  *                       from the artifact (it never recomputes them),
-  *                       encodes ONLY the batch rows, and appends new
-  *                       files into the existing cell_id partitions.
-  *                       Encoding is per-row deterministic given the
-  *                       frozen model, so base ∪ delta is row-for-row
-  *                       identical to a from-scratch rebuild
-  *                       (spec-proven in Round14OpsSpec); probe cost is
-  *                       unchanged — searches still read only probed
-  *                       partitions. Completion gate: a _GRAFT_DONE
-  *                       marker written AFTER the append (parquet's
-  *                       own _SUCCESS lands mid-sequence here, so it
-  *                       cannot gate a multi-phase build — the
-  *                       HBase-slice lesson generalized).
+  *                       append encodes ONLY the batch rows under the
+  *                       same frozen model and appends new files into
+  *                       the existing cell_id partitions. Encoding is
+  *                       per-row deterministic given the model, so
+  *                       base ∪ delta is row-for-row identical to a
+  *                       from-scratch rebuild (spec-proven in
+  *                       Round14OpsSpec); probe cost is unchanged —
+  *                       searches still read only probed partitions.
   *
   * 100 TB shape: the index build is one corpus pass (broadcast cells +
   * codebook, no corpus shuffle except the partitioned write); a daily
@@ -58,15 +51,8 @@ object IvfPqIndex {
   private def quantized(s: SparkSession, dir: String): DataFrame =
     Vectors.quantized(graft.T.t(s, dir, "embeddings"), "vec_id")
 
-  // The writers' schemas, read back as given: no footer-inference job
-  // per read, and the same types inference yields (cell_id, the codes
-  // partition column, infers as int).
-  private val cellsSchema =
-    StructType.fromDDL("cell_id BIGINT, c ARRAY<BIGINT>")
-  private val codebookSchema =
-    StructType.fromDDL("cid INT, s INT, cv ARRAY<BIGINT>")
-  private val codesSchema =
-    StructType.fromDDL("vec_id BIGINT, codes ARRAY<INT>, cell_id INT")
+  /** The index's tables, each with its own schema record. */
+  private val tables = Seq("cells", "codebook", "codes")
 
   /** The deterministic model frames: broadcast cells (vec_id < 4) and
     * the shared residual codebook (residuals of vectors 9..12 under
@@ -85,15 +71,15 @@ object IvfPqIndex {
   /** The frozen model frames read BACK from a persisted index — same
     * column shapes as modelFrames (quantized components are integers,
     * so the bigint parquet round-trip is exact). This is what the
-    * delta-append job and the searches consume.
+    * searches consume.
     */
   private[graft] def readModelFrames(s: SparkSession,
       path: String): (DataFrame, DataFrame) = {
-    val cellsB = broadcast(s.read.schema(cellsSchema).parquet(path + "/cells")
+    val cellsB = broadcast(Artifact.read(s, path + "/cells")
       .withColumn("cd", col("c").cast("array<double>"))
       .withColumn("cn", Vectors.dot("cd", "cd"))
       .select(col("cell_id"), col("cd"), col("cn")))
-    val cb = broadcast(s.read.schema(codebookSchema).parquet(path + "/codebook")
+    val cb = broadcast(Artifact.read(s, path + "/codebook")
       .withColumn("cv", col("cv").cast("array<double>"))
       .withColumn("cvn", Vectors.dot("cv", "cv")))
     (cellsB, cb)
@@ -101,7 +87,7 @@ object IvfPqIndex {
 
   /** The code table of a persisted index: (vec_id, codes, cell_id). */
   private[graft] def readCodes(s: SparkSession, path: String): DataFrame =
-    s.read.schema(codesSchema).parquet(path + "/codes")
+    Artifact.read(s, path + "/codes")
 
   /** Residual-PQ encode of a corpus slice under frozen model frames:
     * (vec_id, cell_id, codes int[8]). Per-row deterministic — the
@@ -113,57 +99,42 @@ object IvfPqIndex {
       "vec_id", "cell_id"), cb, "cell_id")
 
   /** Build (memoized) and return the index root path — full corpus. */
-  def ensure(s: SparkSession, dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_ivfpq_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "embeddings")
-    val done = new java.io.File(path + "/codes", "_SUCCESS")
-    if (!done.exists()) {
-      writeModels(s, dir, path)
-      val (cellsB, cb) = readModelFrames(s, path)
+  def ensure(s: SparkSession, dir: String): String =
+    Artifact.derive(s, "ivfpq", dir, "embeddings", tables = tables) { out =>
+      val (cellsB, cb) = writeModels(s, dir, out)
       encode(quantized(s, dir).filter(col("vec_id") >= 9), cellsB, cb)
-        .write.mode("overwrite").partitionBy("cell_id")
-        .parquet(path + "/codes")
+        .write.partitionBy("cell_id").parquet(out + "/codes")
     }
-    path
-  }
 
   /** Incrementally-maintained twin of `ensure`: base build over the
     * standing corpus, then a delta append of the batch (vec_id % 10
-    * == 7) encoded under the frozen on-disk model. Returns the index
+    * == 7) encoded under the same frozen model. Returns the index
     * root; content is row-identical to `ensure`'s.
     */
-  def ensureIncremental(s: SparkSession, dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_ivfpqinc_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "embeddings")
-    val done = new java.io.File(path, "_GRAFT_DONE")
-    if (!done.exists()) {
+  def ensureIncremental(s: SparkSession, dir: String): String =
+    Artifact.derive(s, "ivfpqinc", dir, "embeddings", tables = tables) { out =>
       val corp = quantized(s, dir).filter(col("vec_id") >= 9)
-      writeModels(s, dir, path)
-      val (cellsB, cb) = readModelFrames(s, path)
+      val (cellsB, cb) = writeModels(s, dir, out)
       // base: the standing corpus (everything ingested before today)
       encode(corp.filter(pmod(col("vec_id"), lit(10)) =!= 7), cellsB, cb)
-        .write.mode("overwrite").partitionBy("cell_id")
-        .parquet(path + "/codes")
+        .write.partitionBy("cell_id").parquet(out + "/codes")
       // delta: ONLY the batch — new files appended into the existing
       // cell_id partition directories, frozen model untouched
       encode(corp.filter(pmod(col("vec_id"), lit(10)) === 7), cellsB, cb)
         .write.mode("append").partitionBy("cell_id")
-        .parquet(path + "/codes")
-      done.createNewFile()
+        .parquet(out + "/codes")
     }
-    path
-  }
 
-  /** Model tables: cells + shared residual codebook (written before
-    * any code table — the completion gate is always downstream).
+  /** Model tables: cells + shared residual codebook. Returns the model
+    * frames the code tables are encoded under.
     */
-  private def writeModels(s: SparkSession, dir: String, path: String): Unit = {
+  private def writeModels(s: SparkSession, dir: String,
+      path: String): (DataFrame, DataFrame) = {
     val (cellsB, cb) = modelFrames(s, dir)
     cellsB.select(col("cell_id"), col("cd").cast("array<bigint>").as("c"))
-      .coalesce(1).write.mode("overwrite").parquet(path + "/cells")
+      .coalesce(1).write.parquet(path + "/cells")
     cb.select(col("cid"), col("s"), col("cv").cast("array<bigint>").as("cv"))
-      .coalesce(1).write.mode("overwrite").parquet(path + "/codebook")
+      .coalesce(1).write.parquet(path + "/codebook")
+    (cellsB, cb)
   }
 }

@@ -41,16 +41,12 @@ object KafkaLog {
     * pmod(user_id, nPartitions) (Kafka's key-hash partitioner with
     * user_id as the record key), offset = arrival order within the
     * partition (ts, event_id — unique, so the log is reproducible and
-    * the DuckDB oracle can re-derive identical offsets). Memoized per
-    * events-content fingerprint; a regenerated events.parquet builds a
-    * fresh log (stale-memo discipline, round 7).
+    * the DuckDB oracle can re-derive identical offsets). One artifact
+    * per events content and partition count.
     */
-  def ensureTopic(s: SparkSession, dir: String, nPartitions: Int = 4): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_kafka_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "events") + "_p" + nPartitions
-    val done = new java.io.File(path, "_SUCCESS")
-    if (!done.exists()) {
+  def ensureTopic(s: SparkSession, dir: String, nPartitions: Int = 4): String =
+    graft.operators.Artifact.derive(s, "kafka", dir, "events",
+        "_p" + nPartitions) { out =>
       import org.apache.spark.sql.expressions.Window
       val ev = graft.T.t(s, dir, "events")
       val w = Window.partitionBy("__partition")
@@ -67,12 +63,10 @@ object KafkaLog {
           col("event_type").as("__value"))
         .repartition(col("__partition"))
         .sortWithinPartitions("__partition", "__offset")
-        .write.mode("overwrite")
+        .write
         .partitionBy("__partition")
-        .parquet(path)
+        .parquet(out)
     }
-    path
-  }
 
   /** Batch read with Kafka-consumer offset semantics: per-partition
     * starting offsets (inclusive; partitions absent from the map start

@@ -203,43 +203,29 @@ object MediaBlobs {
     b.array()
   }
 
-  /** Deterministic blob table from `documents`: (doc_id, payload).
-    * Memoized per documents-content fingerprint (stale-memo
-    * discipline); the completion gate is parquet's own `_SUCCESS`
-    * (nothing is written after the commit — the HBase-slice lesson).
+  /** Deterministic blob table from `documents`: (doc_id, payload),
+    * one artifact per documents content.
     */
-  def ensureStore(s: SparkSession, dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_media_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "documents")
-    val done = new java.io.File(path, "_SUCCESS")
-    if (!done.exists()) {
-      import s.implicits._
-      graft.T.t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map(id => (id, blobFor(id % seedMod)))
-        .toDF("doc_id", "payload")
-        .write.mode("overwrite").parquet(path)
-    }
-    path
-  }
+  def ensureStore(s: SparkSession, dir: String): String =
+    blobStore(s, dir, "media", blobFor)
 
   /** Audio blob table twin of ensureStore: (doc_id, payload) of real
-    * WAV files, same seed/memoization discipline.
+    * WAV files.
     */
-  def ensureAudioStore(s: SparkSession, dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_audio_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "documents")
-    val done = new java.io.File(path, "_SUCCESS")
-    if (!done.exists()) {
+  def ensureAudioStore(s: SparkSession, dir: String): String =
+    blobStore(s, dir, "audio", wavFor)
+
+  /** The (doc_id, payload) artifact of `kind`: payload = `blob` of the
+    * document's seed. */
+  private def blobStore(s: SparkSession, dir: String, kind: String,
+      blob: Long => Array[Byte]): String =
+    graft.operators.Artifact.derive(s, kind, dir, "documents") { out =>
       import s.implicits._
       graft.T.t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map(id => (id, wavFor(id % seedMod)))
+        .map(id => (id, blob(id % seedMod)))
         .toDF("doc_id", "payload")
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(out)
     }
-    path
-  }
 
   // ---- expression-based header decode (codegen'd built-ins only) ----
 
@@ -558,22 +544,10 @@ object MediaBlobs {
   }
 
   /** Video blob table twin of ensureStore: (doc_id, payload) of real
-    * Y4M streams, same seed/memoization discipline.
+    * Y4M streams.
     */
-  def ensureVideoStore(s: SparkSession, dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_video_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "documents")
-    val done = new java.io.File(path, "_SUCCESS")
-    if (!done.exists()) {
-      import s.implicits._
-      graft.T.t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map(id => (id, y4mFor(id % seedMod)))
-        .toDF("doc_id", "payload")
-        .write.mode("overwrite").parquet(path)
-    }
-    path
-  }
+  def ensureVideoStore(s: SparkSession, dir: String): String =
+    blobStore(s, dir, "video", y4mFor)
 
   /** Y4M header decode with codegen'd built-ins only. Unlike BMP/PNG/
     * WAV the Y4M header is ASCII text, so the parse is: US-ASCII-decode
@@ -907,17 +881,11 @@ object MediaBlobs {
     * is an embarrassingly parallel decode pass; searches never touch
     * blob bytes again.
     */
-  def ensureImageEmbStore(s: SparkSession, dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_imgemb_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "documents")
-    val done = new java.io.File(path, "_SUCCESS")
-    if (!done.exists()) {
-      val blobs = s.read.parquet(ensureStore(s, dir))
-      imageEmbFromBytes(blobs).write.mode("overwrite").parquet(path)
+  def ensureImageEmbStore(s: SparkSession, dir: String): String =
+    graft.operators.Artifact.derive(s, "imgemb", dir, "documents") { out =>
+      imageEmbFromBytes(graft.operators.Artifact.read(s, ensureStore(s, dir)))
+        .write.parquet(out)
     }
-    path
-  }
 
   // ---- JPEG / GIF modality: REAL codec output (javax.imageio) ----
 
@@ -979,22 +947,10 @@ object MediaBlobs {
   }
 
   /** Codec blob table twin of ensureStore: (doc_id, payload) of real
-    * JPEG/GIF files, same seed/memoization discipline.
+    * JPEG/GIF files.
     */
-  def ensureCodecStore(s: SparkSession, dir: String): String = {
-    val path = System.getProperty("java.io.tmpdir") + "/graft_codec_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" +
-      graft.T.contentTag(dir, "documents")
-    val done = new java.io.File(path, "_SUCCESS")
-    if (!done.exists()) {
-      import s.implicits._
-      graft.T.t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map(id => (id, codecBlobFor(id % seedMod)))
-        .toDF("doc_id", "payload")
-        .write.mode("overwrite").parquet(path)
-    }
-    path
-  }
+  def ensureCodecStore(s: SparkSession, dir: String): String =
+    blobStore(s, dir, "codec", codecBlobFor)
 
   /** Header decode for the codec formats — a real structural parse,
     * per format:

@@ -1,6 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -25,14 +27,24 @@ class TableSchemaMemoSpec extends AnyFunSuite {
   /** Run `body` under a fresh job group; return its value and the number
     * of Spark jobs started in that group. */
   private def jobsIn[A](body: => A): (A, Int) = {
+    val (out, sites) = jobSitesIn(body)
+    (out, sites.size)
+  }
+
+  /** Run `body` under a fresh job group; return its value and the call
+    * site of each Spark job started in that group: Spark's short form
+    * (e.g. "parquet at Dedup.scala:628"), which names the job's result
+    * stage, the newest of its stages. The `callSite.short` property is
+    * set only where user code calls `setCallSite`. */
+  private def jobSitesIn[A](body: => A): (A, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"schema-memo-${java.util.UUID.randomUUID}"
-    val started = new AtomicInteger
+    val started = new ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          started.incrementAndGet()
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(_ => started.add(e.stageInfos.maxBy(_.stageId).name))
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "schema memo spec", interruptOnCancel = false)
@@ -41,7 +53,7 @@ class TableSchemaMemoSpec extends AnyFunSuite {
       // SparkContext.listenerBus is Spark-internal; reach it reflectively.
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      (out, started.get)
+      (out, started.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -159,5 +171,34 @@ class TableSchemaMemoSpec extends AnyFunSuite {
       assert(hash(df) == hash(SparkEntry.queries("q_ann_ivfpq")(s, sfDir)),
         s"$name: the index search must answer as q_ann_ivfpq")
     }
+  }
+
+  test("rebuilding a statement that reads an artifact starts no inference job") {
+    // Every statement that reads a derived artifact back (through an
+    // ensure* builder: the media stores, the KV / segment / topic
+    // stores, the IVF-PQ and LSH indexes, the bitmap rollups), plus the
+    // two IVF statements that size their tiers from the embeddings
+    // count. The first build publishes the artifacts and memoizes the
+    // base tables; a rebuild must read both back with known schemas.
+    val stmts = Seq(
+      "q_multimodal_decode", "q_media_dedup", "q_multimodal_audio",
+      "q_audio_frames", "q_image_resize", "q_multimodal_video",
+      "q_video_frames", "q_image_dhash", "q_image_neardup",
+      "q_image_dedup_survivors", "q_media_manifest", "q_audio_fingerprint",
+      "q_video_fingerprint", "q_multimodal_codecs", "q_crossmodal_topk",
+      "q_crossmodal_ivf",
+      "q_agg_bitmap_rollup", "q_agg_bitmap_rollup_delta",
+      "q_dedup_incremental_neardup",
+      "q_src_hbase_rowkey_range", "q_src_accumulo_range",
+      "q_src_druid_interval", "q_src_kafka_offsets",
+      "q_ann_ivfpq_index", "q_ann_ivfpq_delta",
+      "q_ann_ivf_cells", "q_ann_ivf_hier")
+    val s = fresh()
+    val inferring = stmts.map { name =>
+      val run = SparkEntry.queries(name)
+      run(s, sfDir)
+      name -> jobSitesIn(run(s, sfDir))._2.filter(_.startsWith("parquet at"))
+    }.filter(_._2.nonEmpty)
+    assert(inferring.isEmpty, s"rebuilds that inferred a schema: $inferring")
   }
 }
