@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** One named capability: a Spark query plus (optionally) DuckDB oracle SQL
   * the driver hash-compares against. Name and column aliases MUST match
@@ -159,45 +161,44 @@ object T {
   def drev(p: Column, d: Column): Column =
     sum(dec(p) * (lit(1) - dec(d))).cast("decimal(38,2)").cast(DoubleType)
 
-  /** Cross-statement scratch hygiene. Iterative operators and
-    * shared-artifact memos persist eager localCheckpoint blocks that
-    * outlive the query that made them; in a long-running session (the
-    * bench harness, a Thrift server) they accumulate without bound and
-    * the storage pressure evicts later queries' working blocks
-    * (measured: q_cluster_kmeans 1.3 s in isolation → 6.8 s once ~100
-    * queries of scratch preceded it). `releaseScratch` is the
-    * between-statements hook: drop every persisted RDD EXCEPT those
-    * registered through `pinning` — artifacts that must outlive their
-    * creating query (Dedup's memoized pair graph). Pinned checkpoints
-    * have truncated lineage, so unpersisting them would break later
-    * consumers; they are few and bounded by design.
+  /** Statement scratch, the one checkpoint operator. An eager
+    * MEMORY_AND_DISK_SER local checkpoint outlives the statement that
+    * made it; in a long session (the bench harness, a Thrift server)
+    * such blocks pile up and evict later statements' working blocks
+    * (q_cluster_kmeans: 1.3 s alone, 6.8 s after ~100 statements'
+    * scratch). A statement runs on one thread, so that thread is its
+    * scope: [[scratch]] records the checkpoint under it, and
+    * [[releaseScratch]] drops only what its caller recorded, never
+    * another thread's in-flight checkpoints. [[keep]] makes a checkpoint
+    * no statement owns, for a session memo (Dedup's pair graph), which
+    * hands a superseded one to the current statement with [[own]].
     */
-  private val pinnedRdds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  private val scratchIds =
+    ThreadLocal.withInitial(() => scala.collection.mutable.Set.empty[Int])
 
-  /** Run `build` and pin any RDD it persists so releaseScratch keeps it.
-    * Serial-harness contract: no concurrent persists in this session
-    * while `build` runs (true for Bench/Verify/ScalaTest here).
-    */
-  def pinning[A](s: SparkSession)(build: => A): A = {
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    val out = build
-    (s.sparkContext.getPersistentRDDs.keySet -- before)
-      .foreach(pinnedRdds.add(_))
-    out
+  def scratch(df: DataFrame): DataFrame = own(keep(df))
+
+  def keep(df: DataFrame): DataFrame =
+    df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+
+  def own(checkpoint: DataFrame): DataFrame = {
+    scratchIds.get += checkpoint.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+    checkpoint
   }
 
-  /** Drop all unpinned persisted blocks a statement left behind.
-    * BLOCKING: the async form left removal racing the next statement,
-    * so on a large-heap JVM (the driver runs ~88 g) tens of GB of dead
-    * scratch stayed resident in old gen and G1's concurrent-mark cycles
-    * traced it continuously, stealing CPU from the 32 executor threads.
+  /** Drop the checkpoints the calling statement made. BLOCKING: the
+    * async form left removal racing the next statement, so on a
+    * large-heap JVM (~88 g) tens of GB of dead scratch
+    * stayed resident in old gen and G1's concurrent-mark cycles traced
+    * it continuously, stealing CPU from the 32 executor threads.
     * Callers sit in untimed gaps, so the synchronous wait is free.
     */
-  def releaseScratch(s: SparkSession): Unit =
-    s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedRdds.contains(id)) rdd.unpersist(blocking = true)
-    }
+  def releaseScratch(s: SparkSession): Unit = {
+    val ids = scratchIds.get
+    val live = s.sparkContext.getPersistentRDDs
+    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = true)))
+    ids.clear()
+  }
 
   /** Process-scoped scratch dir (session warehouses of the Bench /
     * Verify / Explain mains), deleted recursively at JVM exit — every

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.storage.StorageLevel
+import graft.T
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -72,7 +72,7 @@ object BpeTrain {
     var syms = vocab.select(
       concat(split(col("word"), ""), array(lit(EndMark))).as("syms"),
       col("freq").cast("long").as("freq"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(T.scratch)
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long)]
     var round = 1
@@ -91,7 +91,7 @@ object BpeTrain {
         merges += ((round, l, r, l + r, cnt))
         syms = syms
           .select(mergePair(col("syms"), l, r).as("syms"), col("freq"))
-          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+          .transform(T.scratch)
         round += 1
       }
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -55,7 +54,7 @@ object ConnectedComponents {
     // just because this operator reads its input from two angles.
     val raw = edges
       .select(col(src).cast("long").as("s"), col(dst).cast("long").as("d"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(T.scratch)
     // Single consumer (the final label join) — no checkpoint needed.
     val nodes = raw
       .select(explode(array(col("s"), col("d"))).as("node"))
@@ -66,7 +65,7 @@ object ConnectedComponents {
         greatest(col("s"), col("d")).as("hi"))
       .filter(col("lo") =!= col("hi"))
       .distinct()
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(T.scratch)
 
     def checksum(df: DataFrame): (Long, Long) = {
       // bit_xor: order-independent over the distinct edge set and
@@ -141,7 +140,7 @@ object ConnectedComponents {
       val large = sym.join(mins, "u")
         .filter(col("v") > col("u"))
         .select(col("m").as("lo"), col("v").as("hi"))
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(T.scratch)
       // SMALL-STAR over the min-oriented edges: group the not-larger
       // neighborhood of each hi node; everyone (including hi) re-links
       // to its minimum. (m, lo_i) may self-loop when lo_i == m — drop.
@@ -151,7 +150,7 @@ object ConnectedComponents {
         .union(j.select(col("m").as("lo"), col("hi")))
         .filter(col("lo") =!= col("hi"))
         .distinct()
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(T.scratch)
       val s = checksum(small)
       converged = s == prev
       prev = s

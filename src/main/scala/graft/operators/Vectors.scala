@@ -1,11 +1,10 @@
 package graft.operators
 
-import graft.TopKAgg
+import graft.{T, TopKAgg}
 import graft.TopKAgg.{Asc, Desc}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The vector operators the ANN statements (queries/Similarity.scala)
   * and the persisted IVF-PQ index (sources/IvfPqIndex.scala) are
@@ -221,7 +220,7 @@ object Vectors {
       Seq("fcos" -> Desc, "cent_id" -> Asc), nprobe,
       rank = Some("arn"), agg = useAgg)
       .select("vec_id", "arn", "cent_id")
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(T.scratch)
       .join(e, "vec_id") // re-attach embedding+nrm to the survivors
     val wCell = Window.partitionBy("cell").orderBy("cand_id")
     val index = ranked.filter(col("arn") === 1)

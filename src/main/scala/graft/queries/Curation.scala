@@ -881,7 +881,6 @@ object Curation extends QueryPack {
          |FROM (SELECT * FROM w1t UNION ALL SELECT * FROM w2t
          |      UNION ALL SELECT * FROM w3t) ORDER BY step""".stripMargin
     }) { (s, dir) =>
-      import org.apache.spark.storage.StorageLevel
       val d = t(s, dir, "documents")
         .withColumn("w", split(col("text"), " "))
         .withColumn("n_tok", size(col("w")))
@@ -893,7 +892,7 @@ object Curation extends QueryPack {
             .cast("double") / col("n_tok"), 6).as("x2"),
           round(length(regexp_replace(col("text"), " ", "")).cast("double")
             / col("n_tok"), 6).as("x3"))
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(T.scratch)
       var w = s.range(1).select(lit(0).as("step"),
         lit(0L).as("w0"), lit(0L).as("w1"), lit(0L).as("w2"),
         lit(0L).as("w3"))
@@ -928,7 +927,7 @@ object Curation extends QueryPack {
               .cast("long")).as("w2"),
             (col("pw3") - round(lit(0.05) * col("g3") / col("n"))
               .cast("long")).as("w3"))
-          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+          .transform(T.scratch)
         steps += w
       }
       steps.reduce(_ unionAll _)
@@ -1124,8 +1123,7 @@ object Curation extends QueryPack {
           .as("bg"))
         .select(col("source"), (h60(col("bg")) % 1024).as("b"))
       val c = f.groupBy("source", "b").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(T.scratch)
       val n = c.groupBy("source").agg(sum(col("cnt")).cast("long").as("n"))
       val dense = broadcast(n)
         .crossJoin(broadcast(

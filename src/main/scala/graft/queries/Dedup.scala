@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.storage.StorageLevel
 import graft._
 import graft.T._
 import graft.operators.Artifact
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a large-scale training-data pipeline
@@ -42,39 +42,46 @@ object Dedup extends QueryPack {
     * survivor selection, keep-best — from the same artifact; recomputing
     * the candidate join per consumer is the single biggest waste at
     * 100 TB (on a cluster this is a persisted table; in one JVM it's a
-    * localCheckpoint). Keyed per (session, dir); WeakHashMap on the
-    * session so a closed session's materializations are collectable.
+    * [[T.keep]] checkpoint; the build's own checkpoints are scratch).
+    * Keyed per (session, artifact, dir), WeakHashMap on the session so
+    * a closed session's entries are collectable. An entry is valid for
+    * one [[T.contentTag]] of documents: a rewritten table rebuilds it
+    * and hands the superseded checkpoint to the rebuilding statement.
     * Contents are deterministic, so first-compute vs reuse is
     * result-invariant.
     */
-  private val memo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]]
+  private val memo = new java.util.WeakHashMap[SparkSession,
+    scala.collection.mutable.Map[(String, String), (String, DataFrame)]]
 
-  private def materialized(s: org.apache.spark.sql.SparkSession, key: String)(
-      build: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = memo.synchronized {
-    val m = memo.computeIfAbsent(s,
-      _ => scala.collection.mutable.Map.empty)
-    m.getOrElseUpdate(key, T.pinning(s)(build.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)))
+  private def materialized(s: SparkSession, artifact: String, dir: String)(
+      build: => DataFrame): DataFrame = memo.synchronized {
+    val m = memo.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
+    val tag = T.contentTag(dir, "documents")
+    m.get((artifact, dir)) match {
+      case Some((`tag`, df)) => df
+      case _ =>
+        val df = T.keep(build)
+        m.put((artifact, dir), (tag, df)).foreach { case (_, old) => T.own(old) }
+        df
+    }
   }
 
   /** MinHash-LSH near-dup pairs: 24 minhash sigs → 12 bands × 2 →
     * capped bucket join → exact Jaccard >= 0.8 rescore (integer math).
     * Shared by q_dedup_minhash (emits the pairs) and the component/
     * survivor family (clusters them). Columns: a_id, b_id, n_inter,
-    * n_union; unsorted. Materialized once per (session, dir).
+    * n_union; unsorted. Materialized once per (session, dir, content).
     */
   private def minhashPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    materialized(s, s"pairs:$dir") { minhashPairsBuild(s, dir) }
+    materialized(s, "pairs", dir) { minhashPairsBuild(s, dir) }
 
   /** Component labels over the pair graph — the second shared artifact
     * (three consumers: components, survivors, keep-best).
     */
   private[queries] def pairComponents(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    materialized(s, s"comp:$dir") {
+    materialized(s, "comp", dir) {
       ConnectedComponents.label(
         minhashPairs(s, dir).select("a_id", "b_id"), "a_id", "b_id")
     }
@@ -83,7 +90,7 @@ object Dedup extends QueryPack {
       dir: String): org.apache.spark.sql.DataFrame = {
     // Three consumers (signature pass + both rescore sides): shingle
     // the corpus once, not three times.
-    val sh = shingleDf(s, dir).localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    val sh = shingleDf(s, dir).transform(T.scratch)
     // 24 minhash signatures — ONE shingle-array pass via the native
     // minhash_sigs kernel (functions/MinHashSigs.scala); bit-identical
     // to min-over-xxhash64(k, v) per k, minus 23 array traversals and

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.storage.StorageLevel
 import graft._
 import graft.T._
 import org.apache.spark.sql.expressions.Window
@@ -326,7 +325,7 @@ object Graphs extends QueryPack {
           col("a.okey") === col("b.okey") && col("a.pk") < col("b.pk"))
         .select(col("a.pk").as("u"), col("b.pk").as("v"))
         .distinct()
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER) // 3 consumers: degrees, wedges, closing probe
+        .transform(T.scratch) // 3 consumers: degrees, wedges, closing probe
       val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
         .groupBy("n").agg(count(lit(1)).as("dg"))
       // Orient low-degree → high-degree (id tie-break): hub nodes get

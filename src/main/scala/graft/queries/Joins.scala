@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.storage.StorageLevel
 import graft._
 import graft.T._
 import org.apache.spark.sql.functions._
@@ -623,7 +622,7 @@ object Joins extends QueryPack {
             (lit(1) - dec(col("l_discount")))).cast("decimal(18,4)"))
           .as("total_revenue"))
         // consumed twice (max + probe): materialize once, not two scans
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(T.scratch)
       val mx = rev.agg(max(col("total_revenue")).as("mx"))
       rev.crossJoin(broadcast(mx))
         .filter(col("total_revenue") === col("mx"))
@@ -838,7 +837,7 @@ object Joins extends QueryPack {
         .groupBy(col("l_partkey").as("ps_partkey"))
         .agg(sum(dec(col("l_extendedprice"))).as("val"))
         // consumed twice (total + probe): materialize once
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(T.scratch)
       val total = v.agg(sum(col("val")).as("total"))
       v.crossJoin(broadcast(total))
         .filter(lit(1000) * col("val") > col("total"))

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.storage.StorageLevel
 import graft._
 import graft.T._
 import graft.TopKAgg.{Asc, Desc}
@@ -120,7 +119,7 @@ object Similarity extends QueryPack {
       .withColumn("qd", col("q").cast("array<double>"))
       .withColumn("nn", dot("qd", "qd").cast("long"))
       .drop("qd") // only q rides the checkpoint; qd re-derived per consumer
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER) // consumed by both pair sides + accounting
+      .transform(T.scratch) // consumed by both pair sides + accounting
   }
 
   /** q_dedup_semantic oracle (see the query's comment block for the
@@ -389,7 +388,7 @@ object Similarity extends QueryPack {
       val qs = pqQueries(emb)
       val (cells, cb) = graft.sources.IvfPqIndex.readModelFrames(s, idx)
       val probe = Vectors.probeResiduals(qs, cells, 2)
-        .localCheckpoint(true) // probed twice below (routing + LUTs)
+        .transform(T.scratch) // probed twice below (routing + LUTs)
       // Driver-side probe routing: ≤ nlist(4) cell ids — model-sized
       // by construction (this is the collect an ANN service does to
       // schedule probes; never corpus data).
@@ -996,7 +995,7 @@ object Similarity extends QueryPack {
       // the checkpoint each round re-runs the scan + norm projection.
       val trainMod = math.max(5L, seedMod / 64)
       val trainSet = e.filter(pmod(col("vec_id"), lit(trainMod)) === 0)
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(T.scratch)
       for (_ <- 1 to iters) {
         // Assignment argmax via map-side-combining max_by (not a sort
         // window — the training pass never sorts the corpus). The
@@ -1030,7 +1029,7 @@ object Similarity extends QueryPack {
             .as("cent"))
           .select(col("cell").as("cent_id"), col("cent"),
             sqrt(dot("cent", "cent")).as("cent_nrm"))
-          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+          .transform(T.scratch)
       }
       // FINAL assignment through a COARSE LAYER OVER THE TRAINED
       // CENTROIDS (round 14 — the de-fang of this query's one flagged
@@ -1397,7 +1396,7 @@ object Similarity extends QueryPack {
       // Assignment distance: the integer-exact Vectors.sqL2, bit-equal
       // to the oracle's Σ(x−y)².
       val emb = Vectors.quantized(t(s, dir, "embeddings"), "vec_id")
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER) // scanned by 4 assignment passes
+        .transform(T.scratch) // scanned by 4 assignment passes
       def assign(cent: org.apache.spark.sql.DataFrame) =
         emb.crossJoin(broadcast(cent))
           .withColumn("d", sqL2("qd", "en", "cd", "cn"))
@@ -1426,7 +1425,7 @@ object Similarity extends QueryPack {
           .agg(expr(
             "transform(sort_array(collect_list(struct(pos, cv))), x -> x.cv)")
             .as("c"))
-          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)) // k rows; flattens the next round's plan
+          .transform(T.scratch)) // k rows; flattens the next round's plan
       }
       assign(cent)
         .groupBy(col("cid").as("cluster_id"))

@@ -616,16 +616,13 @@ object Sources extends QueryPack {
       // Base state: full table, partitioned by status.
       o.repartition(col("o_orderstatus"))
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(p)
-      // Dynamic overwrite of just the 'O' partition (halved prices).
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        o.filter(col("o_orderstatus") === "O")
-          .withColumn("o_totalprice", col("o_totalprice") * 0.5)
-          .repartition(col("o_orderstatus"))
-          .write.mode("overwrite").partitionBy("o_orderstatus").parquet(p)
-      } finally prev.foreach(
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", _))
+      // Dynamic overwrite of just the 'O' partition (halved prices); a
+      // writer option, so no other statement on the session sees it.
+      o.filter(col("o_orderstatus") === "O")
+        .withColumn("o_totalprice", col("o_totalprice") * 0.5)
+        .repartition(col("o_orderstatus"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("o_orderstatus").parquet(p)
       s.read.schema(partitionedSchema(o, "o_orderstatus")).parquet(p)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("cnt"), dsum(col("o_totalprice")).as("sum_price"))
@@ -650,10 +647,9 @@ object Sources extends QueryPack {
         |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       val small = tmp(dir, "compact_small")
       val big = tmp(dir, "compact_out")
-      t(s, dir, "orders")
+      val o = t(s, dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
-        .repartition(64)
-        .write.mode("overwrite").parquet(small)
+      o.repartition(64).write.mode("overwrite").parquet(small)
       def parts(p: String) = Option(new java.io.File(p).listFiles())
         .getOrElse(Array.empty)
         .count(f => f.getName.startsWith("part-"))
@@ -664,10 +660,10 @@ object Sources extends QueryPack {
         .filter(_.getName.startsWith("part-")).map(_.length()).sum
       val nOut = math.max(1L,
         (totalBytes + targetBytes - 1) / targetBytes).toInt
-      s.read.parquet(small).repartition(nOut)
+      s.read.schema(o.schema).parquet(small).repartition(nOut)
         .write.mode("overwrite").parquet(big)
       val bounded = parts(big) <= nOut && parts(big) < nSmall
-      s.read.parquet(big)
+      s.read.schema(o.schema).parquet(big)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("cnt"),
           sum(dec(col("o_totalprice"))).cast("double").as("sum_price"),

@@ -591,8 +591,7 @@ object TextAnalysis extends QueryPack {
          |FROM enc GROUP BY n_tokens ORDER BY n_tokens""".stripMargin) {
       (s, dir) =>
       val vocab = bpeVocab(s, dir)
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(T.scratch)
       // The trained merge table is the MODEL — 8 rows to the driver,
       // the same artifact a tokenizer ships; encoding then runs as
       // per-row folds over the distributed vocabulary.

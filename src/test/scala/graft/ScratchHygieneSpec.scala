@@ -1,54 +1,83 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Contract of T.releaseScratch / T.pinning — the between-statements
-  * block hygiene the harness relies on (Bench/Verify call releaseScratch
-  * after every query; Dedup's shared-artifact memo pins through
-  * T.pinning). Without this, eager localCheckpoint scratch accumulates
-  * across a long session and storage pressure inflates later queries.
+import scala.jdk.CollectionConverters._
+
+/** Contract of the scratch operator in T: `T.scratch` checkpoints and
+  * records the checkpoint under the calling thread (the statement's
+  * scope), `T.releaseScratch` drops only what its caller recorded,
+  * `T.keep` makes a checkpoint no statement owns and `T.own` hands one
+  * back to the calling statement. Bench/Verify/Explain and the perfbench
+  * harness call releaseScratch after every statement; without it,
+  * checkpoint scratch accumulates across a long session and storage
+  * pressure inflates later statements.
   *
-  * Order-robust: other suites sharing this JVM may have pinned their
-  * own memo artifacts (Dedup's `materialized`) before this runs —
-  * those legitimately survive releaseScratch, so the assertions track
-  * the DELTA this test creates (its own scratch must drain, its own
-  * pin must survive), not an absolute persistent-RDD count.
+  * Assertions track the RDDs this test makes, never an absolute count:
+  * other suites in this JVM legitimately hold memo checkpoints.
   */
 class ScratchHygieneSpec extends AnyFunSuite {
   import SparkTestBase._
 
-  test("releaseScratch drops checkpoint scratch but keeps pinned artifacts") {
+  private def live(id: Int) =
+    spark.sparkContext.getPersistentRDDs.contains(id)
+
+  private def rddId(checkpoint: org.apache.spark.sql.DataFrame): Int =
+    checkpoint.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+
+  test("releaseScratch drops checkpoint scratch but keeps kept checkpoints") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    T.releaseScratch(spark) // drop any unpinned scratch from other suites
-    val baseline = sc.getPersistentRDDs.keySet // surviving foreign pins
-
-    // Unpinned scratch: the shape every iterative operator leaves behind.
-    val scratch = (1 to 1000).toDF("x").localCheckpoint(true)
-    assert(scratch.count() == 1000)
-
-    // Pinned artifact: the Dedup-memo shape that must outlive queries.
-    val keep = T.pinning(spark)((1 to 500).toDF("y").localCheckpoint(true))
-    assert(keep.count() == 500)
-
-    val mine = sc.getPersistentRDDs.keySet -- baseline
-    assert(mine.size >= 2, s"expected both checkpoints persisted, saw $mine")
+    val scratch = T.scratch((1 to 1000).toDF("x"))
+    val keep = T.keep((1 to 500).toDF("y"))
+    assert(scratch.count() == 1000 && keep.count() == 500)
+    assert(live(rddId(scratch)) && live(rddId(keep)))
 
     T.releaseScratch(spark)
-    // Async unpersist: wait for this test's scratch blocks to drain.
-    def survivors = sc.getPersistentRDDs.keySet -- baseline
-    val deadline = System.nanoTime() + 10e9.toLong
-    while (survivors.size > 1 && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(survivors.size == 1,
-      s"only this test's pinned RDD should survive its scratch, saw $survivors")
-
-    // The pinned artifact is still fully readable after the sweep
-    // (its blocks were never touched — lineage truncation is safe).
+    assert(!live(rddId(scratch)), "the statement's scratch must drain")
+    assert(live(rddId(keep)), "a kept checkpoint outlives the statement")
+    // Its blocks were never touched, so the truncated lineage still reads.
     assert(keep.count() == 500)
-    // And no foreign pin was swept either (releaseScratch never grows
-    // the baseline, never drops pins).
-    assert((baseline -- sc.getPersistentRDDs.keySet).isEmpty,
-      "releaseScratch must not drop other suites' pinned artifacts")
+
+    // Handed back to a statement, it goes with that statement's release.
+    T.own(keep)
+    T.releaseScratch(spark)
+    assert(!live(rddId(keep)))
+  }
+
+  test("releaseScratch leaves another thread's scratch alone") {
+    import spark.implicits._
+    val made = new java.util.concurrent.SynchronousQueue[Int]()
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val other = new Thread(() => {
+      made.put(rddId(T.scratch((1 to 100).toDF("z"))))
+      release.await()
+      T.releaseScratch(spark)
+    })
+    other.start()
+    val id = made.take()
+    T.releaseScratch(spark)
+    assert(live(id), "a release on this thread dropped another statement's checkpoint")
+    release.countDown()
+    other.join()
+    assert(!live(id), "the owning thread's release drops it")
+  }
+
+  test("localCheckpoint( occurs in src/main only inside the scratch operator") {
+    // Every checkpoint goes through T.scratch or T.keep, so each one is
+    // owned by a statement or by the memo that holds it.
+    val root = Paths.get("src", "main", "scala")
+    val st = Files.walk(root)
+    val hits =
+      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex
+          .filter(_._1.contains("localCheckpoint("))
+          .map { case (line, i) => s"${root.relativize(p)}:${i + 1}: ${line.trim}" }
+      }.toList
+      finally st.close()
+    assert(hits.size == 1 && hits.head.startsWith("graft/core.scala:"),
+      s"checkpoints outside T.scratch / T.keep:\n${hits.mkString("\n")}")
   }
 }

@@ -35,8 +35,11 @@ class TableSchemaMemoSpec extends AnyFunSuite {
     * site of each Spark job started in that group: Spark's short form
     * (e.g. "parquet at Dedup.scala:628"), which names the job's result
     * stage, the newest of its stages. The `callSite.short` property is
-    * set only where user code calls `setCallSite`. */
-  private def jobSitesIn[A](body: => A): (A, Seq[String]) = {
+    * set only where user code calls `setCallSite`. With `inferenceOnly`,
+    * jobs run inside a SQL execution (a write, a checkpoint, a collect)
+    * are left out: footer inference runs outside one. */
+  private def jobSitesIn[A](body: => A,
+      inferenceOnly: Boolean = false): (A, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"schema-memo-${java.util.UUID.randomUUID}"
     val started = new ConcurrentLinkedQueue[String]
@@ -44,6 +47,7 @@ class TableSchemaMemoSpec extends AnyFunSuite {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties)
           .filter(_.getProperty("spark.jobGroup.id") == group)
+          .filter(p => !inferenceOnly || p.getProperty("spark.sql.execution.id") == null)
           .foreach(_ => started.add(e.stageInfos.maxBy(_.stageId).name))
     }
     sc.addSparkListener(listener)
@@ -198,6 +202,21 @@ class TableSchemaMemoSpec extends AnyFunSuite {
       val run = SparkEntry.queries(name)
       run(s, sfDir)
       name -> jobSitesIn(run(s, sfDir))._2.filter(_.startsWith("parquet at"))
+    }.filter(_._2.nonEmpty)
+    assert(inferring.isEmpty, s"rebuilds that inferred a schema: $inferring")
+  }
+
+  test("rebuilding a sink statement reads its own output back with no inference job") {
+    // A sink statement writes on every build, and its write jobs carry
+    // the same "parquet at" call site as an inference job; they run
+    // inside a SQL execution, inference does not.
+    val stmts = Seq("q_sink_partitioned", "q_sink_dynpart_overwrite", "q_sink_compact")
+    val s = fresh()
+    val inferring = stmts.map { name =>
+      val run = SparkEntry.queries(name)
+      run(s, sfDir)
+      name -> jobSitesIn(run(s, sfDir), inferenceOnly = true)._2
+        .filter(_.startsWith("parquet at"))
     }.filter(_._2.nonEmpty)
     assert(inferring.isEmpty, s"rebuilds that inferred a schema: $inferring")
   }
