@@ -23,43 +23,40 @@ object SparkEntry {
     ds
   }
 
-  /** Tuned conf baseline (SURVEY.md §4.1 conclusion): AQE is on by default
-    * in Spark 4; add CBO + join reorder + runtime bloom-filter semijoin —
-    * the moral equivalents of Hive's MapJoinProcessor/JoinReorder/
-    * SyntheticJoinPredicate chain.
+  /** Tuned conf baseline (SURVEY.md §4.1 conclusion): AQE and the
+    * runtime bloom-filter semijoin are on by default in Spark 4; add
+    * CBO + join reorder — the moral equivalents of Hive's
+    * MapJoinProcessor/JoinReorder/SyntheticJoinPredicate chain.
+    * Once per session, under the set's lock: [[queries]] calls it per
+    * statement, and setting the confs again undid a client's own `SET`.
     */
-  def tune(spark: SparkSession): SparkSession = {
-    val c = spark.conf
-    c.set("spark.sql.cbo.enabled", "true")
-    c.set("spark.sql.cbo.joinReorder.enabled", "true")
-    c.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    c.set("spark.sql.adaptive.enabled", "true")
-    // ObjectHashAggregate (the exec behind every TypedImperativeAggregate
-    // here — collect_topk, sketches, ngrams) falls back to SORT-BASED
-    // aggregation after this many distinct groups per task; the 128
-    // default would resurrect the very per-task sort the r15
-    // collect_topk conversions removed (their group = a vector/doc id,
-    // so map tasks routinely hold tens of thousands of groups with
-    // k-element bounded buffers — a few MB). 65536 keeps the hash path
-    // for those while still bounding worst-case buffer residency
-    // (65536 × k elements) far below executor memory; past it the exec
-    // degrades gracefully to the old sort behavior.
-    // CAVEAT (ADVICE r15): the threshold is global, so it also governs
-    // the theta/KLL/ngram sketch aggregates, whose per-group buffers
-    // are KB-to-tens-of-KB — the "65536 × k elements" residency bound
-    // holds only for collect_topk. Every current sketch query groups
-    // on a low-cardinality key (≤ dozens of groups/task), so the
-    // high-threshold × big-buffer product is unreachable today; a new
-    // sketch query grouping on a high-cardinality key must lower this
-    // or aggregate in two stages.
-    c.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      "65536")
-    HiveCompatFunctions.ensure(spark)
-    // Dormant until spark.graft.stats.answerQueries=true (Hive's
-    // hive.compute.query.using.stats twin — see plans/StatsAnswer).
-    StatsAnswer.install(spark)
+  def tune(spark: SparkSession): SparkSession = tuned.synchronized {
+    if (tuned.put(spark, java.lang.Boolean.TRUE) == null) {
+      val c = spark.conf
+      c.set("spark.sql.cbo.enabled", "true")
+      c.set("spark.sql.cbo.joinReorder.enabled", "true")
+      // ObjectHashAggregate (behind collect_topk, the sketches, ngrams)
+      // falls back to sort-based aggregation past this many groups per
+      // task; the 128 default would bring back the per-task sort for
+      // collect_topk, whose groups (a vector/doc id) number tens of
+      // thousands per task with k-element buffers. 65536 bounds buffer
+      // residency at 65536 × k elements. The threshold is global: the
+      // sketch aggregates' buffers are KB-sized, which is safe only
+      // because every sketch query groups on a low-cardinality key; a
+      // new one grouping on a high-cardinality key must lower this or
+      // aggregate in two stages.
+      c.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        "65536")
+      HiveCompatFunctions.ensure(spark)
+      // Dormant until spark.graft.stats.answerQueries=true (Hive's
+      // hive.compute.query.using.stats twin — see plans/StatsAnswer).
+      spark.experimental.extraOptimizations ++= Seq(new StatsAnswer.AnswerRule)
+    }
     spark
   }
+
+  private val tuned = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {

@@ -161,6 +161,27 @@ object T {
   def drev(p: Column, d: Column): Column =
     sum(dec(p) * (lit(1) - dec(d))).cast("decimal(38,2)").cast(DoubleType)
 
+  /** The one place a statement writes names into the shared session:
+    * register each frame as a temp view under a name unique to this
+    * call, `v(key)` (any other key gets one too, for a view or SQL
+    * variable the body declares), run `body`, then drop every name.
+    * `s.sql` analyzes eagerly, so its frame no longer needs them.
+    * Catalog names, not plan substitution: `IDENTIFIER(..)` and
+    * `EXECUTE IMMEDIATE` resolve names from strings.
+    */
+  def scoped[A](s: SparkSession, frames: (String, DataFrame)*)(
+      body: (String => String) => A): A = {
+    val names = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val id = scopeIds.incrementAndGet()
+    val v = (key: String) => names.getOrElseUpdate(key, s"graft_${key}_$id")
+    try { frames.foreach { case (key, df) => df.createTempView(v(key)) }; body(v) }
+    finally names.values.foreach { n => // the session catalog: no uncache
+      if (!s.sessionState.catalog.dropTempView(n))
+        s.sql(s"DROP TEMPORARY VARIABLE IF EXISTS $n")
+    }
+  }
+  private val scopeIds = new java.util.concurrent.atomic.AtomicLong()
+
   /** Statement scratch, the one checkpoint operator. An eager
     * MEMORY_AND_DISK_SER local checkpoint outlives the statement that
     * made it; in a long session (the bench harness, a Thrift server)

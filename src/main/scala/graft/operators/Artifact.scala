@@ -24,8 +24,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - Completion is one rule: the published directory holds the schema
   *    record `_schema.json` of each of its tables, inferred once from
   *    the staged files before the rename (so column order and partition
-  *    types are what a bare read infers). A directory at the path
-  *    without it was never published by this operator; it is rebuilt.
+  *    types are what a bare read infers), unless the build wrote it (as
+  *    ACID commits do). A directory at the path without it was never
+  *    published by this operator; it is rebuilt.
   *  - [[read]] passes the record to the reader: no footer-inference job.
   *
   * Spark's file index skips names starting with `_`, so the record and
@@ -33,7 +34,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object Artifact {
   private val tmp = System.getProperty("java.io.tmpdir")
-  private val record = "_schema.json"
+  private[graft] val record = "_schema.json"
   private val locks = new ConcurrentHashMap[String, AnyRef]()
 
   /** Where the artifact of `kind` over `dir`'s `table` lives. */
@@ -58,8 +59,9 @@ object Artifact {
           .resolve(java.util.UUID.randomUUID.toString)
         try {
           build(staging.toString)
-          tables.map(staging.resolve).foreach(t => Files.write(t.resolve(record),
-            s.read.parquet(t.toString).schema.json.getBytes(UTF_8)))
+          tables.map(staging.resolve).filterNot(t => Files.exists(t.resolve(record)))
+            .foreach(t => Files.write(t.resolve(record),
+              s.read.parquet(t.toString).schema.json.getBytes(UTF_8)))
           if (!published) { // not by another JVM while this one built
             graft.T.deleteTree(out)
             Files.move(staging, out, StandardCopyOption.ATOMIC_MOVE)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.{CatalogTable, HiveTableRelation}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Literal}
@@ -42,103 +41,100 @@ object StatsAnswer {
 
   val Flag = "spark.graft.stats.answerQueries"
 
-  private val installed =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Install the rule into this session (idempotent). The rule stays
+  /** The rule `SparkEntry.tune` installs into each session; it stays
     * dormant until `spark.graft.stats.answerQueries=true`.
     */
-  def install(spark: SparkSession): Unit =
-    if (installed.add(spark))
-      spark.experimental.extraOptimizations ++= Seq(new AnswerRule)
-
   final class AnswerRule extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan =
-      if (conf.getConfString(Flag, "false") != "true") plan
-      else plan.transformUp {
-        case agg @ Aggregate(Nil, aggExprs, child, _) =>
-          answerAll(agg, aggExprs, child).getOrElse(agg)
-      }
+      if (conf.getConfString(Flag, "false") != "true") plan else answer(plan)
+  }
 
-    /** The whole aggregate must be answerable or none of it is — a
-      * partial rewrite would still scan, so it would save nothing.
-      */
-    private def answerAll(agg: Aggregate,
-        aggExprs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression],
-        child: LogicalPlan): Option[LogicalPlan] =
-      for {
-        table <- bareTable(child)
-        stats <- table.stats
-        rowCount <- stats.rowCount
-        values <- traverse(aggExprs)(answer(_, table, rowCount.toLong))
-      } yield LocalRelation(
-        agg.output.map(_.asInstanceOf[Attribute]),
-        Seq(InternalRow.fromSeq(values)))
+  /** The rewrite itself: every answerable global aggregate in `plan`
+    * becomes a one-row `LocalRelation`. A statement that wants the
+    * answer for its own plan calls this on its optimized plan instead
+    * of setting the session conf other statements would see.
+    */
+  def answer(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case agg @ Aggregate(Nil, aggExprs, child, _) =>
+      answerAll(agg, aggExprs, child).getOrElse(agg)
+  }
 
-    /** Accept only a bare relation under aliases/hints/attribute-only
-      * projections — ANY filter or computation means real work that
-      * stats cannot answer.
-      */
-    private def bareTable(plan: LogicalPlan): Option[CatalogTable] =
-      plan match {
-        case SubqueryAlias(_, c) => bareTable(c)
-        case ResolvedHint(c, _) => bareTable(c)
-        case Project(ps, c) if ps.forall(_.isInstanceOf[AttributeReference]) =>
-          bareTable(c)
-        case r: HiveTableRelation => Some(r.tableMeta)
-        case l: LogicalRelation => l.catalogTable
-        case _ => None
-      }
+  /** The whole aggregate must be answerable or none of it is — a
+    * partial rewrite would still scan, so it would save nothing.
+    */
+  private def answerAll(agg: Aggregate,
+      aggExprs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression],
+      child: LogicalPlan): Option[LogicalPlan] =
+    for {
+      table <- bareTable(child)
+      stats <- table.stats
+      rowCount <- stats.rowCount
+      values <- traverse(aggExprs)(valueOf(_, table, rowCount.toLong))
+    } yield LocalRelation(
+      agg.output.map(_.asInstanceOf[Attribute]),
+      Seq(InternalRow.fromSeq(values)))
 
-    private def traverse[A, B](xs: Seq[A])(f: A => Option[B]): Option[Seq[B]] =
-      xs.foldRight(Option(List.empty[B])) { (x, acc) =>
-        for (t <- acc; v <- f(x)) yield v :: t
-      }
-
-    /** One aggregate output → its stats-derived Catalyst value. */
-    private def answer(e: org.apache.spark.sql.catalyst.expressions.NamedExpression,
-        table: CatalogTable, rowCount: Long): Option[Any] = e match {
-      case Alias(AggregateExpression(fn, Complete, false, None, _), _) =>
-        fn match {
-          // count(*) / count(1) / count(any non-null literal)
-          case Count(Seq(Literal(v, _))) if v != null => Some(rowCount)
-          // count(col) = rowCount - nullCount(col)
-          case Count(Seq(a: AttributeReference)) =>
-            colStat(table, a).flatMap(_.nullCount)
-              .map(nc => rowCount - nc.toLong)
-          case Min(a: AttributeReference) => minMax(table, a, isMin = true)
-          case Max(a: AttributeReference) => minMax(table, a, isMin = false)
-          case _ => None
-        }
+  /** Accept only a bare relation under aliases/hints/attribute-only
+    * projections — ANY filter or computation means real work that
+    * stats cannot answer.
+    */
+  private def bareTable(plan: LogicalPlan): Option[CatalogTable] =
+    plan match {
+      case SubqueryAlias(_, c) => bareTable(c)
+      case ResolvedHint(c, _) => bareTable(c)
+      case Project(ps, c) if ps.forall(_.isInstanceOf[AttributeReference]) =>
+        bareTable(c)
+      case r: HiveTableRelation => Some(r.tableMeta)
+      case l: LogicalRelation => l.catalogTable
       case _ => None
     }
 
-    private def colStat(table: CatalogTable, a: AttributeReference) =
-      table.stats.flatMap(_.colStats.get(a.name))
-        .map(_.toPlanStat(a.name, a.dataType))
+  private def traverse[A, B](xs: Seq[A])(f: A => Option[B]): Option[Seq[B]] =
+    xs.foldRight(Option(List.empty[B])) { (x, acc) =>
+      for (t <- acc; v <- f(x)) yield v :: t
+    }
 
-    /** min/max from column stats; an all-null (or empty) column has no
-      * recorded min/max and correctly answers NULL — but only when the
-      * null count PROVES it, otherwise don't fire.
-      */
-    private def minMax(table: CatalogTable, a: AttributeReference,
-        isMin: Boolean): Option[Any] =
-      colStat(table, a).flatMap { st =>
-        val v = if (isMin) st.min else st.max
-        v match {
-          case Some(x) => Some(x)
-          case None =>
-            // Fire with a NULL answer only if stats PROVE every row is
-            // null (or the table is empty); otherwise stay out.
-            if (st.nullCount.exists(_.toLong == tableRows(table)))
-              Some(null)
-            else None
-        }
+  /** One aggregate output → its stats-derived Catalyst value. */
+  private def valueOf(e: org.apache.spark.sql.catalyst.expressions.NamedExpression,
+      table: CatalogTable, rowCount: Long): Option[Any] = e match {
+    case Alias(AggregateExpression(fn, Complete, false, None, _), _) =>
+      fn match {
+        // count(*) / count(1) / count(any non-null literal)
+        case Count(Seq(Literal(v, _))) if v != null => Some(rowCount)
+        // count(col) = rowCount - nullCount(col)
+        case Count(Seq(a: AttributeReference)) =>
+          colStat(table, a).flatMap(_.nullCount)
+            .map(nc => rowCount - nc.toLong)
+        case Min(a: AttributeReference) => minMax(table, a, isMin = true)
+        case Max(a: AttributeReference) => minMax(table, a, isMin = false)
+        case _ => None
       }
-
-    private def tableRows(table: CatalogTable): Long =
-      table.stats.flatMap(_.rowCount).map(_.toLong).getOrElse(-1L)
+    case _ => None
   }
+
+  private def colStat(table: CatalogTable, a: AttributeReference) =
+    table.stats.flatMap(_.colStats.get(a.name))
+      .map(_.toPlanStat(a.name, a.dataType))
+
+  /** min/max from column stats; an all-null (or empty) column has no
+    * recorded min/max and correctly answers NULL — but only when the
+    * null count PROVES it, otherwise don't fire.
+    */
+  private def minMax(table: CatalogTable, a: AttributeReference,
+      isMin: Boolean): Option[Any] =
+    colStat(table, a).flatMap { st =>
+      val v = if (isMin) st.min else st.max
+      v match {
+        case Some(x) => Some(x)
+        case None =>
+          // Fire with a NULL answer only if stats PROVE every row is
+          // null (or the table is empty); otherwise stay out.
+          if (st.nullCount.exists(_.toLong == tableRows(table)))
+            Some(null)
+          else None
+      }
+    }
+
+  private def tableRows(table: CatalogTable): Long =
+    table.stats.flatMap(_.rowCount).map(_.toLong).getOrElse(-1L)
 }

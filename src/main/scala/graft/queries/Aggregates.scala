@@ -38,14 +38,15 @@ object Aggregates extends QueryPack {
     */
   private def rollupOf(s: org.apache.spark.sql.SparkSession, dir: String,
       pred: String): org.apache.spark.sql.DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("bmr_events_src")
-    s.sql(
-      s"""SELECT event_type, to_date(ts) AS day,
-         |  bitmap_bucket_number(user_id) AS bucket,
-         |  bitmap_construct_agg(bitmap_bit_position(user_id)) AS bm
-         |FROM bmr_events_src WHERE $pred
-         |GROUP BY event_type, to_date(ts),
-         |  bitmap_bucket_number(user_id)""".stripMargin)
+    scoped(s, "events" -> t(s, dir, "events")) { v =>
+      s.sql(
+        s"""SELECT event_type, to_date(ts) AS day,
+           |  bitmap_bucket_number(user_id) AS bucket,
+           |  bitmap_construct_agg(bitmap_bit_position(user_id)) AS bm
+           |FROM ${v("events")} WHERE $pred
+           |GROUP BY event_type, to_date(ts),
+           |  bitmap_bucket_number(user_id)""".stripMargin)
+    }
   }
 
   /** Incrementally-maintained twin of ensureBitmapRollup (round 14 —
@@ -207,13 +208,14 @@ object Aggregates extends QueryPack {
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin) {
       (s, dir) =>
-        t(s, dir, "lineitem").createOrReplaceTempView("gs_lineitem")
-        s.sql(
-          """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
-            |  GROUPING_ID(l_returnflag, l_linestatus) AS gid
-            |FROM gs_lineitem
-            |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-            |ORDER BY gid, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)
+        scoped(s, "lineitem" -> t(s, dir, "lineitem")) { v =>
+          s.sql(
+            s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
+               |  GROUPING_ID(l_returnflag, l_linestatus) AS gid
+               |FROM ${v("lineitem")}
+               |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
+               |ORDER BY gid, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)
+        }
     },
 
     // Statistical UDAF family (GenericUDAFVariance/Std/Correlation/
@@ -935,21 +937,21 @@ object Aggregates extends QueryPack {
         |FROM orders WHERE o_orderkey < 2000
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) {
       (s, dir) =>
-      t(s, dir, "orders").filter(col("o_orderkey") < 2000)
-        .createOrReplaceTempView("os_orders")
-      s.sql(
-        """SELECT o_orderstatus,
-          |  listagg(DISTINCT o_orderpriority, ',')
-          |    WITHIN GROUP (ORDER BY o_orderpriority) AS prios,
-          |  ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice),
-          |        4) AS p50_cont,
-          |  ROUND(percentile_cont(0.25) WITHIN GROUP (ORDER BY o_totalprice),
-          |        4) AS p25_cont,
-          |  percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice)
-          |    AS p50_disc,
-          |  COUNT(*) AS n
-          |FROM os_orders
-          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
+      scoped(s, "orders" -> t(s, dir, "orders").filter(col("o_orderkey") < 2000)) { v =>
+        s.sql(
+          s"""SELECT o_orderstatus,
+             |  listagg(DISTINCT o_orderpriority, ',')
+             |    WITHIN GROUP (ORDER BY o_orderpriority) AS prios,
+             |  ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice),
+             |        4) AS p50_cont,
+             |  ROUND(percentile_cont(0.25) WITHIN GROUP (ORDER BY o_totalprice),
+             |        4) AS p25_cont,
+             |  percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice)
+             |    AS p50_disc,
+             |  COUNT(*) AS n
+             |FROM ${v("orders")}
+             |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
+      }
     },
 
     // PERSISTED exact-distinct bitmap ROLLUP (round 13): the
@@ -974,17 +976,17 @@ object Aggregates extends QueryPack {
         |  AND CAST(ts AS DATE) < DATE '2024-01-15'
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
       val store = ensureBitmapRollup(s, dir)
-      Artifact.read(s, store)
-        .filter(col("day") >= lit("2024-01-08").cast("date") &&
-          col("day") < lit("2024-01-15").cast("date"))
-        .createOrReplaceTempView("bmr_rollup")
-      s.sql(
-        """SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS n_users
-          |FROM (
-          |  SELECT event_type, bucket,
-          |    bitmap_count(bitmap_or_agg(bm)) AS cnt
-          |  FROM bmr_rollup GROUP BY event_type, bucket)
-          |GROUP BY event_type ORDER BY event_type""".stripMargin)
+      scoped(s, "rollup" -> Artifact.read(s, store)
+          .filter(col("day") >= lit("2024-01-08").cast("date") &&
+            col("day") < lit("2024-01-15").cast("date"))) { v =>
+        s.sql(
+          s"""SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS n_users
+             |FROM (
+             |  SELECT event_type, bucket,
+             |    bitmap_count(bitmap_or_agg(bm)) AS cnt
+             |  FROM ${v("rollup")} GROUP BY event_type, bucket)
+             |GROUP BY event_type ORDER BY event_type""".stripMargin)
+      }
     },
 
     // The INCREMENTALLY-MAINTAINED bitmap rollup (round 14): same
@@ -1002,16 +1004,16 @@ object Aggregates extends QueryPack {
         |WHERE CAST(ts AS DATE) >= DATE '2024-01-08'
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
       val store = ensureBitmapRollupIncremental(s, dir)
-      Artifact.read(s, store)
-        .filter(col("day") >= lit("2024-01-08").cast("date"))
-        .createOrReplaceTempView("bmr_rollup_inc")
-      s.sql(
-        """SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS n_users
-          |FROM (
-          |  SELECT event_type, bucket,
-          |    bitmap_count(bitmap_or_agg(bm)) AS cnt
-          |  FROM bmr_rollup_inc GROUP BY event_type, bucket)
-          |GROUP BY event_type ORDER BY event_type""".stripMargin)
+      scoped(s, "rollup" -> Artifact.read(s, store)
+          .filter(col("day") >= lit("2024-01-08").cast("date"))) { v =>
+        s.sql(
+          s"""SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS n_users
+             |FROM (
+             |  SELECT event_type, bucket,
+             |    bitmap_count(bitmap_or_agg(bm)) AS cnt
+             |  FROM ${v("rollup")} GROUP BY event_type, bucket)
+             |GROUP BY event_type ORDER BY event_type""".stripMargin)
+      }
     },
 
     // EXACT distinct counting via MERGEABLE roaring-style bitmaps
@@ -1036,20 +1038,21 @@ object Aggregates extends QueryPack {
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_distinct
         |FROM lineitem GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem").createOrReplaceTempView("bm_lineitem")
-      s.sql(
-        """SELECT l_returnflag, CAST(SUM(cnt) AS BIGINT) AS n_distinct
-          |FROM (
-          |  SELECT l_returnflag, bucket,
-          |    bitmap_count(bitmap_or_agg(bm)) AS cnt
-          |  FROM (
-          |    SELECT l_returnflag,
-          |      bitmap_bucket_number(l_partkey) AS bucket,
-          |      bitmap_construct_agg(bitmap_bit_position(l_partkey)) AS bm
-          |    FROM bm_lineitem
-          |    GROUP BY l_returnflag, bitmap_bucket_number(l_partkey),
-          |      l_suppkey % 4)
-          |  GROUP BY l_returnflag, bucket)
-          |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+      scoped(s, "lineitem" -> t(s, dir, "lineitem")) { v =>
+        s.sql(
+          s"""SELECT l_returnflag, CAST(SUM(cnt) AS BIGINT) AS n_distinct
+             |FROM (
+             |  SELECT l_returnflag, bucket,
+             |    bitmap_count(bitmap_or_agg(bm)) AS cnt
+             |  FROM (
+             |    SELECT l_returnflag,
+             |      bitmap_bucket_number(l_partkey) AS bucket,
+             |      bitmap_construct_agg(bitmap_bit_position(l_partkey)) AS bm
+             |    FROM ${v("lineitem")}
+             |    GROUP BY l_returnflag, bitmap_bucket_number(l_partkey),
+             |      l_suppkey % 4)
+             |  GROUP BY l_returnflag, bucket)
+             |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+      }
     })
 }

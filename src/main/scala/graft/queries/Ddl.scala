@@ -2,6 +2,8 @@ package graft.queries
 
 import graft._
 import graft.T._
+import graft.operators.Artifact
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** DDL / catalog / mutation surface (SURVEY.md §7 stage E): CREATE TABLE
@@ -24,67 +26,26 @@ import org.apache.spark.sql.functions._
 object Ddl extends QueryPack {
 
   /** Shared ACID demo table: customer put through a fixed write-id
-    * history. Create-once per (JVM, sf dir) — reruns read, never
-    * rewrite, so every snapshot below is deterministic. The root is
-    * JVM-unique (pid in the name): a table half-built by a killed JVM
-    * can never be mistaken for complete by the next one, and two
-    * concurrent JVMs (bench vs verify) never race on one tmpdir table.
-    * Within the JVM the synchronized block guarantees the history is
-    * fully applied before any reader sees `exists == true`.
+    * history, a derived artifact keyed on customer's content (a
+    * rewritten table derives a new history; reruns read, never
+    * rewrite, so every snapshot below is deterministic).
     *   w1 CREATE  = customer
     *   w2 INSERT  = ingest batch (custkey ≤ 100, shifted key, INGESTED)
     *   w3 DELETE  = negative balances tombstoned
     *   w4 UPDATE  = balances capped at 9000 (delete+insert, one write)
     */
-  private def acidDemo(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val tmpdir = System.getProperty("java.io.tmpdir")
-    val root = tmpdir + "/graft_acid_" +
-      ProcessHandle.current().pid() + "_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
-    AcidTable.synchronized {
-      if (!AcidTable.exists(s, root)) {
-        // pid-unique roots fix the cross-JVM race but would otherwise
-        // accumulate forever: delete ours on exit, and sweep roots left
-        // by dead JVMs (pid no longer alive) before building a new one.
-        registerCleanup(new java.io.File(root))
-        sweepStaleRoots(new java.io.File(tmpdir))
-        val c = t(s, dir, "customer")
-        AcidTable.create(s, root, c)
-        AcidTable.insert(s, root, c.filter(col("c_custkey") <= 100)
-          .withColumn("c_custkey", col("c_custkey") + 1000000L)
-          .withColumn("c_mktsegment", lit("INGESTED")))
-        AcidTable.delete(s, root, col("c_acctbal") < 0)
-        AcidTable.update(s, root, col("c_acctbal") > 9000,
-          Map("c_acctbal" -> lit(9000.0)))
-      }
+  private[graft] def acidDemo(s: org.apache.spark.sql.SparkSession,
+      dir: String): String =
+    Artifact.derive(s, "acid", dir, "customer", tables = Seq("base_1")) { root =>
+      val c = t(s, dir, "customer")
+      AcidTable.create(s, root, c)
+      AcidTable.insert(s, root, c.filter(col("c_custkey") <= 100)
+        .withColumn("c_custkey", col("c_custkey") + 1000000L)
+        .withColumn("c_mktsegment", lit("INGESTED")))
+      AcidTable.delete(s, root, col("c_acctbal") < 0)
+      AcidTable.update(s, root, col("c_acctbal") > 9000,
+        Map("c_acctbal" -> lit(9000.0)))
     }
-    root
-  }
-
-  /** Delete `dir` recursively when this JVM exits (once per root). */
-  private def registerCleanup(dir: java.io.File): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(dir)))
-
-  /** Remove graft_acid_<pid>_* roots whose owning JVM is gone. */
-  private def sweepStaleRoots(tmpdir: java.io.File): Unit = {
-    val pat = "graft_acid_(\\d+)_.*".r
-    Option(tmpdir.listFiles()).getOrElse(Array.empty).foreach { f =>
-      f.getName match {
-        case pat(pid) if pid.toLong != ProcessHandle.current().pid() &&
-            !ProcessHandle.of(pid.toLong).map[Boolean](_.isAlive)
-              .orElse(false) =>
-          deleteRec(f)
-        case _ => ()
-      }
-    }
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(); ()
-  }
 
   /** DuckDB twin of the w2 state (base + ingest batch). */
   private val acidOracleAll =
@@ -231,23 +192,14 @@ object Ddl extends QueryPack {
         |  CAST(MAX(o_orderkey) AS BIGINT) AS max_key,
         |  COUNT(o_custkey) AS n_cust
         |FROM orders""".stripMargin) { (s, dir) =>
-      // Table name carries a content fingerprint of the source parquet:
-      // if the dir's orders.parquet is regenerated in-process, the old
-      // saved table + its ANALYZE stats are abandoned and a fresh one is
-      // built, so the stats-answered row can't silently diverge from the
-      // oracle's live scan (stale-memo advice, round 7).
+      // Table name carries orders' content tag: a rewritten table gets a
+      // fresh saved table and ANALYZE, never the old stats.
       val tag = dir.replaceAll("[^0-9a-zA-Z]", "_")
       val tbl = s"g_stats_orders_${tag}_${T.contentTag(dir, "orders")}"
       if (!s.catalog.tableExists(tbl)) {
-        // Reap stale fingerprints for THIS dir first: each in-process
-        // regeneration of orders.parquet changes the contentTag, and
-        // without the DROP every regeneration abandons the previous
-        // saved table + its data files — unbounded warehouse growth
-        // across regenerations (advice, round 8).
-        // Anchor the match to the fixed-width 16-hex contentTag suffix
-        // so a dir whose sanitized tag is a proper prefix of another's
-        // (e.g. /data/sf1 vs /data/sf1_old) can never reap the OTHER
-        // dir's live stats table (advice, round 9).
+        // Drop this dir's superseded tables (else every rewrite leaves
+        // one in the warehouse). The match is anchored to the 16-hex tag
+        // so /data/sf1 never reaps /data/sf1_old's live table.
         val samePrefix = java.util.regex.Pattern.compile(
           s"g_stats_orders_${java.util.regex.Pattern.quote(tag)}_[0-9a-f]{16}")
         s.catalog.listTables().collect()
@@ -258,20 +210,22 @@ object Ddl extends QueryPack {
           .write.saveAsTable(tbl)
         s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS FOR ALL COLUMNS")
       }
-      // Execute UNDER the flag (plans are lazy — the flag must be on at
-      // optimization time, and must not leak into later queries), then
-      // surface the one answered row as a local relation.
-      s.conf.set(StatsAnswer.Flag, "true")
-      val row =
-        try s.table(tbl).agg(
-          count(lit(1)).as("n_rows"),
-          min(col("o_orderkey")).cast("long").as("min_key"),
-          max(col("o_orderkey")).cast("long").as("max_key"),
-          count(col("o_custkey")).as("n_cust")).head
-        finally s.conf.unset(StatsAnswer.Flag)
+      // Answer this statement's own optimized plan from the catalog
+      // statistics; the session conf would answer every other client's
+      // plans too. Without stats the plan is not rewritten and scans.
+      // The one answered row surfaces as a local relation.
+      val agg = s.table(tbl).agg(
+        count(lit(1)).as("n_rows"),
+        min(col("o_orderkey")).cast("long").as("min_key"),
+        max(col("o_orderkey")).cast("long").as("max_key"),
+        count(col("o_custkey")).as("n_cust"))
+      val v: Int => Long =
+        StatsAnswer.answer(agg.queryExecution.optimizedPlan) match {
+          case answered: LocalRelation => answered.data.head.getLong
+          case _ => agg.head.getLong
+        }
       import s.implicits._
-      Seq((row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3)))
-        .toDF("n_rows", "min_key", "max_key", "n_cust")
+      Seq((v(0), v(1), v(2), v(3))).toDF("n_rows", "min_key", "max_key", "n_cust")
     },
 
     // CREATE VIEW + query-through-view (CreateViewDesc): views expand at
@@ -280,13 +234,13 @@ object Ddl extends QueryPack {
       """SELECT r_name, COUNT(*) AS n_nations
         |FROM nation JOIN region ON n_regionkey = r_regionkey
         |GROUP BY r_name ORDER BY r_name""".stripMargin) { (s, dir) =>
-      t(s, dir, "nation").createOrReplaceTempView("v_nation")
-      t(s, dir, "region").createOrReplaceTempView("v_region")
-      s.sql("CREATE OR REPLACE TEMPORARY VIEW v_nation_region AS " +
-        "SELECT n.*, r.r_name FROM v_nation n " +
-        "JOIN v_region r ON n.n_regionkey = r.r_regionkey")
-      s.sql("SELECT r_name, COUNT(*) AS n_nations FROM v_nation_region " +
-        "GROUP BY r_name ORDER BY r_name")
+      scoped(s, "nation" -> t(s, dir, "nation"), "region" -> t(s, dir, "region")) { v =>
+        s.sql(s"CREATE TEMPORARY VIEW ${v("nation_region")} AS " +
+          s"SELECT n.*, r.r_name FROM ${v("nation")} n " +
+          s"JOIN ${v("region")} r ON n.n_regionkey = r.r_regionkey")
+        s.sql(s"SELECT r_name, COUNT(*) AS n_nations FROM ${v("nation_region")} " +
+          "GROUP BY r_name ORDER BY r_name")
+      }
     },
 
     // MERGE INTO as a batch rewrite: target = customer balances, source =

@@ -340,11 +340,11 @@ object Lateral extends QueryPack {
     q("q_transform_script",
       """SELECT CAST(r_regionkey AS VARCHAR) AS k, r_name AS name
         |FROM region ORDER BY k""".stripMargin) { (s, dir) =>
-      t(s, dir, "region").createOrReplaceTempView("tr_region")
-      s.sql(
-        """SELECT TRANSFORM (r_regionkey, r_name)
-          |USING 'cat' AS (k STRING, name STRING)
-          |FROM tr_region""".stripMargin)
-        .orderBy("k")
+      scoped(s, "region" -> t(s, dir, "region")) { v =>
+        s.sql(
+          s"""SELECT TRANSFORM (r_regionkey, r_name)
+             |USING 'cat' AS (k STRING, name STRING)
+             |FROM ${v("region")}""".stripMargin)
+      }.orderBy("k")
     })
 }

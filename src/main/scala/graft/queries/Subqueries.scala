@@ -29,16 +29,16 @@ object Subqueries extends QueryPack {
         |   WHERE o.o_custkey = c.c_custkey) AS max_price
         |FROM customer c WHERE c_custkey < 40
         |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer").createOrReplaceTempView("sq_customer")
-      t(s, dir, "orders").createOrReplaceTempView("sq_orders")
-      s.sql(
-        """SELECT c_custkey,
-          |  (SELECT COUNT(*) FROM sq_orders o
-          |   WHERE o.o_custkey = c.c_custkey) AS n_orders,
-          |  (SELECT CAST(MAX(o_totalprice) AS DOUBLE) FROM sq_orders o
-          |   WHERE o.o_custkey = c.c_custkey) AS max_price
-          |FROM sq_customer c WHERE c_custkey < 40
-          |ORDER BY c_custkey""".stripMargin)
+      scoped(s, "customer" -> t(s, dir, "customer"), "orders" -> t(s, dir, "orders")) { v =>
+        s.sql(
+          s"""SELECT c_custkey,
+             |  (SELECT COUNT(*) FROM ${v("orders")} o
+             |   WHERE o.o_custkey = c.c_custkey) AS n_orders,
+             |  (SELECT CAST(MAX(o_totalprice) AS DOUBLE) FROM ${v("orders")} o
+             |   WHERE o.o_custkey = c.c_custkey) AS max_price
+             |FROM ${v("customer")} c WHERE c_custkey < 40
+             |ORDER BY c_custkey""".stripMargin)
+      }
     },
 
     // IN subquery → left semi join.
@@ -48,14 +48,14 @@ object Subqueries extends QueryPack {
         |WHERE c_custkey IN (SELECT o_custkey FROM orders
         |                    WHERE o_totalprice > 400000)
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer").createOrReplaceTempView("sq_customer")
-      t(s, dir, "orders").createOrReplaceTempView("sq_orders")
-      s.sql(
-        """SELECT c_mktsegment, COUNT(*) AS cnt
-          |FROM sq_customer
-          |WHERE c_custkey IN (SELECT o_custkey FROM sq_orders
-          |                    WHERE o_totalprice > 400000)
-          |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
+      scoped(s, "customer" -> t(s, dir, "customer"), "orders" -> t(s, dir, "orders")) { v =>
+        s.sql(
+          s"""SELECT c_mktsegment, COUNT(*) AS cnt
+             |FROM ${v("customer")}
+             |WHERE c_custkey IN (SELECT o_custkey FROM ${v("orders")}
+             |                    WHERE o_totalprice > 400000)
+             |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
+      }
     },
 
     // NOT IN with a NULLABLE inner side — the classic three-valued-logic
@@ -69,16 +69,16 @@ object Subqueries extends QueryPack {
         |WHERE k NOT IN (SELECT o_custkey FROM orders
         |                WHERE o_totalprice > 450000
         |                  AND o_custkey IS NOT NULL)""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer").createOrReplaceTempView("sq_customer")
-      t(s, dir, "orders").createOrReplaceTempView("sq_orders")
-      s.sql(
-        """SELECT COUNT(*) AS cnt,
-          |  CAST(SUM(c_custkey) AS BIGINT) AS key_sum
-          |FROM (SELECT NULLIF(c_custkey, 7) AS k, c_custkey
-          |      FROM sq_customer)
-          |WHERE k NOT IN (SELECT o_custkey FROM sq_orders
-          |                WHERE o_totalprice > 450000
-          |                  AND o_custkey IS NOT NULL)""".stripMargin)
+      scoped(s, "customer" -> t(s, dir, "customer"), "orders" -> t(s, dir, "orders")) { v =>
+        s.sql(
+          s"""SELECT COUNT(*) AS cnt,
+             |  CAST(SUM(c_custkey) AS BIGINT) AS key_sum
+             |FROM (SELECT NULLIF(c_custkey, 7) AS k, c_custkey
+             |      FROM ${v("customer")})
+             |WHERE k NOT IN (SELECT o_custkey FROM ${v("orders")}
+             |                WHERE o_totalprice > 450000
+             |                  AND o_custkey IS NOT NULL)""".stripMargin)
+      }
     },
 
     // Correlated EXISTS with an extra correlated predicate.
@@ -89,15 +89,15 @@ object Subqueries extends QueryPack {
         |              WHERE c.c_nationkey = s.s_nationkey
         |                AND c.c_acctbal > s.s_acctbal)
         |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer").createOrReplaceTempView("sq_customer")
-      t(s, dir, "supplier").createOrReplaceTempView("sq_supplier")
-      s.sql(
-        """SELECT s_nationkey, COUNT(*) AS cnt
-          |FROM sq_supplier s
-          |WHERE EXISTS (SELECT 1 FROM sq_customer c
-          |              WHERE c.c_nationkey = s.s_nationkey
-          |                AND c.c_acctbal > s.s_acctbal)
-          |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin)
+      scoped(s, "customer" -> t(s, dir, "customer"), "supplier" -> t(s, dir, "supplier")) { v =>
+        s.sql(
+          s"""SELECT s_nationkey, COUNT(*) AS cnt
+             |FROM ${v("supplier")} s
+             |WHERE EXISTS (SELECT 1 FROM ${v("customer")} c
+             |              WHERE c.c_nationkey = s.s_nationkey
+             |                AND c.c_acctbal > s.s_acctbal)
+             |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin)
+      }
     },
 
     // UNIQUE JOIN (HiveQL extension, JoinDesc.UNIQUE_JOIN): multiway
@@ -155,19 +155,20 @@ object Subqueries extends QueryPack {
         |  CAST(SUM(CAST(bal AS DECIMAL(18,4))) AS DOUBLE) AS bal_total,
         |  CAST(SUM(node) AS BIGINT) AS key_checksum
         |FROM chain GROUP BY depth ORDER BY depth""".stripMargin) { (s, dir) =>
-      t(s, dir, "supplier").createOrReplaceTempView("rec_supplier")
-      s.sql(
-        """WITH RECURSIVE chain AS (
-          |  SELECT s_suppkey AS node, 0 AS depth, s_acctbal AS bal
-          |  FROM rec_supplier WHERE s_suppkey = 0
-          |  UNION ALL
-          |  SELECT s.s_suppkey, c.depth + 1, s.s_acctbal
-          |  FROM rec_supplier s JOIN chain c ON s.s_suppkey DIV 3 = c.node
-          |  WHERE s.s_suppkey <> c.node)
-          |SELECT depth, COUNT(*) AS n_nodes,
-          |  CAST(SUM(CAST(bal AS DECIMAL(18,4))) AS DOUBLE) AS bal_total,
-          |  CAST(SUM(node) AS BIGINT) AS key_checksum
-          |FROM chain GROUP BY depth ORDER BY depth""".stripMargin)
+      scoped(s, "supplier" -> t(s, dir, "supplier")) { v =>
+        s.sql(
+          s"""WITH RECURSIVE chain AS (
+             |  SELECT s_suppkey AS node, 0 AS depth, s_acctbal AS bal
+             |  FROM ${v("supplier")} WHERE s_suppkey = 0
+             |  UNION ALL
+             |  SELECT s.s_suppkey, c.depth + 1, s.s_acctbal
+             |  FROM ${v("supplier")} s JOIN chain c ON s.s_suppkey DIV 3 = c.node
+             |  WHERE s.s_suppkey <> c.node)
+             |SELECT depth, COUNT(*) AS n_nodes,
+             |  CAST(SUM(CAST(bal AS DECIMAL(18,4))) AS DOUBLE) AS bal_total,
+             |  CAST(SUM(node) AS BIGINT) AS key_checksum
+             |FROM chain GROUP BY depth ORDER BY depth""".stripMargin)
+      }
     },
 
     // SQL PIPE syntax (beyond reference — Spark 4's |> operator
@@ -185,17 +186,17 @@ object Subqueries extends QueryPack {
         |FROM orders WHERE o_totalprice > 100000
         |GROUP BY o_orderstatus, bucket
         |ORDER BY o_orderstatus, bucket""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders").createOrReplaceTempView("ps_orders")
-      s.sql(
-        """FROM ps_orders
-          ||> WHERE o_totalprice > 100000
-          ||> EXTEND o_orderkey % 7 AS bucket
-          ||> AGGREGATE COUNT(*) AS n,
-          |     CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-          |       AS price_total
-          |   GROUP BY o_orderstatus, bucket
-          ||> ORDER BY o_orderstatus, bucket""".stripMargin)
-        .select("o_orderstatus", "bucket", "n", "price_total")
+      scoped(s, "orders" -> t(s, dir, "orders")) { v =>
+        s.sql(
+          s"""FROM ${v("orders")}
+             ||> WHERE o_totalprice > 100000
+             ||> EXTEND o_orderkey % 7 AS bucket
+             ||> AGGREGATE COUNT(*) AS n,
+             |     CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+             |       AS price_total
+             |   GROUP BY o_orderstatus, bucket
+             ||> ORDER BY o_orderstatus, bucket""".stripMargin)
+      }.select("o_orderstatus", "bucket", "n", "price_total")
     },
 
     // SQL session variables + EXECUTE IMMEDIATE (Spark 4 surfaces —
@@ -213,18 +214,19 @@ object Subqueries extends QueryPack {
         |    AS ge_cut
         |FROM nation WHERE n_nationkey >= 3
         |GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "nation").createOrReplaceTempView("sv_nation")
-      s.sql("DECLARE OR REPLACE VARIABLE min_key INT DEFAULT 3")
-      s.sql("DECLARE OR REPLACE VARIABLE name_cut STRING DEFAULT 'zz'")
-      s.sql("SET VAR name_cut = 'E'")
-      s.sql(
-        """EXECUTE IMMEDIATE
-          |  'SELECT n_regionkey, COUNT(*) AS n_nations,
-          |     CAST(SUM(CASE WHEN n_name >= :cut THEN 1 ELSE 0 END)
-          |       AS BIGINT) AS ge_cut
-          |   FROM sv_nation WHERE n_nationkey >= :mk
-          |   GROUP BY n_regionkey ORDER BY n_regionkey'
-          |  USING min_key AS mk, name_cut AS cut""".stripMargin)
+      scoped(s, "nation" -> t(s, dir, "nation")) { v =>
+        s.sql(s"DECLARE VARIABLE ${v("min_key")} INT DEFAULT 3")
+        s.sql(s"DECLARE VARIABLE ${v("name_cut")} STRING DEFAULT 'zz'")
+        s.sql(s"SET VAR ${v("name_cut")} = 'E'")
+        s.sql(
+          s"""EXECUTE IMMEDIATE
+             |  'SELECT n_regionkey, COUNT(*) AS n_nations,
+             |     CAST(SUM(CASE WHEN n_name >= :cut THEN 1 ELSE 0 END)
+             |       AS BIGINT) AS ge_cut
+             |   FROM ${v("nation")} WHERE n_nationkey >= :mk
+             |   GROUP BY n_regionkey ORDER BY n_regionkey'
+             |  USING ${v("min_key")} AS mk, ${v("name_cut")} AS cut""".stripMargin)
+      }
     },
 
     // GROUP BY ALL / ORDER BY ALL (Spark 4 ≡ DuckDB — the SAME text
@@ -240,13 +242,14 @@ object Subqueries extends QueryPack {
            |GROUP BY ALL ORDER BY ALL""".stripMargin
       sql
     }) { (s, dir) =>
-      t(s, dir, "lineitem").createOrReplaceTempView("gba_lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-          |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-          |    AS sum_qty
-          |FROM gba_lineitem WHERE l_quantity < 30
-          |GROUP BY ALL ORDER BY ALL""".stripMargin)
+      scoped(s, "lineitem" -> t(s, dir, "lineitem")) { v =>
+        s.sql(
+          s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
+             |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
+             |    AS sum_qty
+             |FROM ${v("lineitem")} WHERE l_quantity < 30
+             |GROUP BY ALL ORDER BY ALL""".stripMargin)
+      }
     },
 
     // Lateral column aliases (Spark 3.4+ ≡ DuckDB): a select item can
@@ -261,14 +264,15 @@ object Subqueries extends QueryPack {
         |  discounted + tax AS billed
         |FROM orders WHERE o_orderkey % 1000 = 1
         |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders").createOrReplaceTempView("lca_orders")
-      s.sql(
-        """SELECT o_orderkey,
-          |  o_totalprice * 0.9 AS discounted,
-          |  discounted * 0.07 AS tax,
-          |  discounted + tax AS billed
-          |FROM lca_orders WHERE o_orderkey % 1000 = 1
-          |ORDER BY o_orderkey""".stripMargin)
+      scoped(s, "orders" -> t(s, dir, "orders")) { v =>
+        s.sql(
+          s"""SELECT o_orderkey,
+             |  o_totalprice * 0.9 AS discounted,
+             |  discounted * 0.07 AS tax,
+             |  discounted + tax AS billed
+             |FROM ${v("orders")} WHERE o_orderkey % 1000 = 1
+             |ORDER BY o_orderkey""".stripMargin)
+      }
     },
 
     // String COLLATIONS (Spark 4 engine surface, round 13): GROUP BY a
@@ -297,27 +301,29 @@ object Subqueries extends QueryPack {
         |    AS BIGINT) AS n_en_ci
         |FROM v GROUP BY lower(lv) ORDER BY lang_ci""".stripMargin) {
       (s, dir) =>
-      t(s, dir, "documents").createOrReplaceTempView("col_documents")
-      s.sql(
-        """WITH v AS (
-          |  SELECT doc_id, CASE doc_id % 3 WHEN 0 THEN upper(lang)
-          |    WHEN 1 THEN lang
-          |    ELSE concat(upper(substr(lang, 1, 1)), substr(lang, 2)) END
-          |    AS lv
-          |  FROM col_documents)
-          |SELECT lower(min(lv)) AS lang_ci, COUNT(*) AS n_docs,
-          |  COUNT(DISTINCT lv) AS n_case_variants,
-          |  MIN(lv) AS first_variant,
-          |  CAST(SUM(CASE WHEN lv = 'EN' COLLATE UTF8_LCASE
-          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_en_ci
-          |FROM v GROUP BY collate(lv, 'UTF8_LCASE')
-          |ORDER BY lang_ci""".stripMargin)
+      scoped(s, "documents" -> t(s, dir, "documents")) { v =>
+        s.sql(
+          s"""WITH v AS (
+             |  SELECT doc_id, CASE doc_id % 3 WHEN 0 THEN upper(lang)
+             |    WHEN 1 THEN lang
+             |    ELSE concat(upper(substr(lang, 1, 1)), substr(lang, 2)) END
+             |    AS lv
+             |  FROM ${v("documents")})
+             |SELECT lower(min(lv)) AS lang_ci, COUNT(*) AS n_docs,
+             |  COUNT(DISTINCT lv) AS n_case_variants,
+             |  MIN(lv) AS first_variant,
+             |  CAST(SUM(CASE WHEN lv = 'EN' COLLATE UTF8_LCASE
+             |    THEN 1 ELSE 0 END) AS BIGINT) AS n_en_ci
+             |FROM v GROUP BY collate(lv, 'UTF8_LCASE')
+             |ORDER BY lang_ci""".stripMargin)
+      }
     },
 
     // IDENTIFIER() clause (Spark 4 engine surface): NAME binding — a
-    // constant expression supplies a table or column identifier where
-    // the grammar wants a name, the injection-safe upgrade of Hive's
-    // textual hivevar splicing into identifiers ([jar]
+    // constant expression (the columns) or a named parameter marker
+    // (the table) supplies an identifier where the grammar wants a
+    // name, the injection-safe upgrade of Hive's textual hivevar
+    // splicing into identifiers ([jar]
     // ql/parse/VariableSubstitution.class is the reference's only
     // tool for parameterizing a table name). The oracle inlines the
     // names — like EXECUTE IMMEDIATE, the binding layer must be
@@ -327,13 +333,15 @@ object Subqueries extends QueryPack {
         |  CAST(SUM(n_nationkey) AS BIGINT) AS key_sum
         |FROM nation GROUP BY n_regionkey
         |ORDER BY n_regionkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "nation").createOrReplaceTempView("idf_nation")
-      s.sql(
-        """SELECT IDENTIFIER('n_' || 'regionkey') AS n_regionkey,
-          |  COUNT(*) AS n,
-          |  CAST(SUM(IDENTIFIER('n_nationkey')) AS BIGINT) AS key_sum
-          |FROM IDENTIFIER('idf_' || 'nation')
-          |GROUP BY IDENTIFIER('n_regionkey')
-          |ORDER BY n_regionkey""".stripMargin)
+      scoped(s, "nation" -> t(s, dir, "nation")) { v =>
+        s.sql(
+          """SELECT IDENTIFIER('n_' || 'regionkey') AS n_regionkey,
+            |  COUNT(*) AS n,
+            |  CAST(SUM(IDENTIFIER('n_nationkey')) AS BIGINT) AS key_sum
+            |FROM IDENTIFIER(:tbl)
+            |GROUP BY IDENTIFIER('n_regionkey')
+            |ORDER BY n_regionkey""".stripMargin,
+          Map("tbl" -> v("nation")))
+      }
     })
 }

@@ -1,8 +1,12 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import graft.operators.Artifact
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** ACID delta-file table layout with merge-on-read and compaction —
   * Hive's transactional-table mechanics (SURVEY.md §1.1 / §2.1:
@@ -85,9 +89,11 @@ object AcidTable {
     }.sortBy(_._2)
   }
 
-  /** Commit protocol: produce the write under `root/.tmp_<name>`, then
-    * one rename to `root/<name>`. Readers list only final names, so a
-    * writer crash before the rename leaves the table untouched.
+  /** Commit protocol: write each part (a subdirectory, "" for the
+    * directory itself) and its schema record (`Artifact`'s format) under
+    * `root/.tmp_<name>`, then one rename to `root/<name>`. Readers list
+    * only final names, so a writer crash before the rename leaves the
+    * table untouched.
     *
     * Concurrent-writer conflict detection is a write-id CAS: `w` is the
     * id this commit claims (allocated as currentWriteId+1 when the
@@ -106,11 +112,16 @@ object AcidTable {
     * two-writer race deterministically.
     */
   private[graft] def commit(s: SparkSession, root: String, w: Long,
-      name: String)(write: String => Unit): Unit = {
+      name: String)(parts: (String, DataFrame)*): Unit = {
     val f = fs(s, root)
     val tmp = new Path(s"$root/.tmp_$name")
     if (f.exists(tmp)) f.delete(tmp, true) // leftover from a crashed writer
-    write(tmp.toString)
+    for ((sub, df) <- parts) {
+      val dir = if (sub.isEmpty) tmp else new Path(tmp, sub)
+      df.write.parquet(dir.toString)
+      val out = f.create(new Path(dir, Artifact.record))
+      try out.write(df.schema.json.getBytes(UTF_8)) finally out.close()
+    }
     val committed = writes(s, root).map(_._2).maxOption.getOrElse(0L)
     if (committed >= w) {
       f.delete(tmp, true)
@@ -126,16 +137,20 @@ object AcidTable {
           "writer claimed this write id, or the root vanished)")
   }
 
-  def exists(s: SparkSession, root: String): Boolean =
-    writes(s, root).nonEmpty
-
   /** Highest committed write id (0 = empty table). */
   def currentWriteId(s: SparkSession, root: String): Long =
     writes(s, root).map(_._2).maxOption.getOrElse(0L)
 
   /** Create the table: `df` becomes base_1. */
   def create(s: SparkSession, root: String, df: DataFrame): Unit =
-    commit(s, root, 1L, "base_1")(tmp => withRid(df, 1L).write.parquet(tmp))
+    commit(s, root, 1L, "base_1")("" -> withRid(df, 1L))
+
+  /** Data directories read with the first one's `commit` record: no inference job. */
+  private def readDirs(s: SparkSession, dirs: String*): DataFrame = {
+    val in = fs(s, dirs.head).open(new Path(dirs.head, Artifact.record))
+    val json = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    s.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(dirs: _*)
+  }
 
   /** Snapshot read. `asOf` = write id (None = latest). Returns data
     * columns + `row__id`.
@@ -150,27 +165,26 @@ object AcidTable {
       s"no snapshot at write id $snap under $root " +
         "(compaction discarded older history)")
     val baseW = visible.filter(_._1 == "base").map(_._2).max
-    val base = s.read.parquet(s"$root/base_$baseW")
+    val base = readDirs(s, s"$root/base_$baseW")
     val rows = visible.collect {
       case ("insert", w) if w > baseW =>
-        s.read.parquet(s"$root/delta_${w}_insert")
+        readDirs(s, s"$root/delta_${w}_insert")
       case ("update", w) if w > baseW =>
-        s.read.parquet(s"$root/delta_${w}_update/insert")
+        readDirs(s, s"$root/delta_${w}_update/insert")
     }.foldLeft(base)(_ unionByName _)
     val delDirs = visible.collect {
       case ("delete", w) if w > baseW => s"$root/delta_${w}_delete"
       case ("update", w) if w > baseW => s"$root/delta_${w}_update/delete"
     }
     if (delDirs.isEmpty) rows
-    else rows.join(broadcast(s.read.parquet(delDirs: _*)), Seq(RID),
+    else rows.join(broadcast(readDirs(s, delDirs: _*)), Seq(RID),
       "left_anti")
   }
 
   /** Append rows as a new write. Returns the write id. */
   def insert(s: SparkSession, root: String, df: DataFrame): Long = {
     val w = currentWriteId(s, root) + 1
-    commit(s, root, w, s"delta_${w}_insert")(tmp =>
-      withRid(df, w).write.parquet(tmp))
+    commit(s, root, w, s"delta_${w}_insert")("" -> withRid(df, w))
     w
   }
 
@@ -178,7 +192,7 @@ object AcidTable {
   def delete(s: SparkSession, root: String, pred: Column): Long = {
     val w = currentWriteId(s, root) + 1
     val tomb = read(s, root).filter(pred).select(RID)
-    commit(s, root, w, s"delta_${w}_delete")(tmp => tomb.write.parquet(tmp))
+    commit(s, root, w, s"delta_${w}_delete")("" -> tomb)
     w
   }
 
@@ -193,12 +207,10 @@ object AcidTable {
     val w = currentWriteId(s, root) + 1
     val hit = read(s, root).filter(pred).cache()
     try {
-      commit(s, root, w, s"delta_${w}_update") { tmp =>
-        hit.select(RID).write.parquet(s"$tmp/delete")
-        val updated = set.foldLeft(hit.drop(RID)) { case (d, (c, e)) =>
-          d.withColumn(c, e) }
-        withRid(updated, w).write.parquet(s"$tmp/insert")
-      }
+      val updated = set.foldLeft(hit.drop(RID)) { case (d, (c, e)) =>
+        d.withColumn(c, e) }
+      commit(s, root, w, s"delta_${w}_update")(
+        "delete" -> hit.select(RID), "insert" -> withRid(updated, w))
     } finally hit.unpersist()
     w
   }
@@ -228,7 +240,7 @@ object AcidTable {
     // snapshot must be materialized BEFORE the commit rename: the plan
     // reads the very dirs the cleaner below deletes.
     val snap = read(s, root)
-    commit(s, root, w, s"base_$w")(tmp => snap.write.parquet(tmp))
+    commit(s, root, w, s"base_$w")("" -> snap)
     val f = fs(s, root)
     val pre = writes(s, root).filter(_._2 < w)
     val anchor: Option[Long] =

@@ -179,14 +179,12 @@ class AcidSpec extends AnyFunSuite {
         struct(lit(w).as("write_id"),
           monotonically_increasing_id().as("row_id")))
     // Writer A commits first.
-    AcidTable.commit(spark, root, w, s"delta_${w}_insert")(tmp =>
-      extra.write.parquet(tmp))
+    AcidTable.commit(spark, root, w, s"delta_${w}_insert")("" -> extra)
     // Writer B (same claimed id, different kind) must abort at the CAS.
     val tomb = AcidTable.read(spark, root, Some(1L))
       .filter(col("n_regionkey") === 0).select("row__id")
     val e = intercept[IllegalStateException] {
-      AcidTable.commit(spark, root, w, s"delta_${w}_delete")(tmp =>
-        tomb.write.parquet(tmp))
+      AcidTable.commit(spark, root, w, s"delta_${w}_delete")("" -> tomb)
     }
     assert(e.getMessage.contains("commit conflict"))
     // The loser left nothing behind: no tombstones applied, A's insert
@@ -212,5 +210,43 @@ class AcidSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("Anti"),
       s"expected broadcast anti-join merge-on-read:\n$plan")
+  }
+
+  test("every committed directory records the schema inference reads") {
+    val root = freshRoot()
+    val n = T.t(spark, sfDir, "nation")
+    AcidTable.create(spark, root, n)
+    AcidTable.insert(spark, root, n.filter(col("n_nationkey") < 3))
+    AcidTable.delete(spark, root, col("n_regionkey") === 0)
+    AcidTable.update(spark, root, col("n_nationkey") === 5,
+      Map("n_name" -> lit("FIVE")))
+    val dirs = Seq("base_1", "delta_2_insert", "delta_3_delete",
+      "delta_4_update/insert", "delta_4_update/delete").map(d => s"$root/$d")
+    for (d <- dirs) {
+      val json = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(d, "_schema.json")), "UTF-8")
+      val recorded = org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      // Nullability included: the reader makes a file source's schema
+      // nullable, so the writer's record reads as inference does.
+      assert(spark.read.schema(recorded).parquet(d).schema ==
+        spark.read.parquet(d).schema, d)
+    }
+  }
+
+  test("a customer table rewritten under a live session derives a new ACID history") {
+    val sf001 = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01")
+    val dir = java.nio.file.Paths.get(copyOfData(sfDir, "graft-acid-rewrite"))
+    val merge = SparkEntry.queries("q_acid_merge_delta")
+    def rows(d: String) = merge(spark, d).collect().map(_.toString).toSeq
+    try {
+      val expected = rows(sf001.toString)
+      val first = rows(dir.toString)
+      assert(first != expected, "sf0.001 and sf0.01 must differ for this test to mean anything")
+      java.nio.file.Files.copy(sf001.resolve("customer.parquet"), dir.resolve("customer.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(rows(dir.toString) == expected,
+        "the rewritten customer table must be read, not the old ACID history")
+    } finally dropArtifacts(dir.toString)
   }
 }

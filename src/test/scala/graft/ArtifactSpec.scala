@@ -41,22 +41,10 @@ class ArtifactSpec extends AnyFunSuite {
       ("ivfpqinc", sources.IvfPqIndex.ensureIncremental, "codes"),
       ("lshidx", queries.Dedup.ensureLshIndex, ""),
       ("bmroll", queries.Aggregates.ensureBitmapRollup, ""),
-      ("bmrollinc", queries.Aggregates.ensureBitmapRollupIncremental, ""))
+      ("bmrollinc", queries.Aggregates.ensureBitmapRollupIncremental, ""),
+      ("acid", queries.Ddl.acidDemo, "base_1"))
 
   private def sanitized(dir: String) = dir.replaceAll("[^0-9a-zA-Z]", "_")
-
-  /** A fresh copy of sf0.001. */
-  private def copyOfSf(): String = {
-    val to = tmpDir("graft-artifact")
-    val from = Paths.get(sfDir)
-    val st = Files.walk(from)
-    try st.iterator().asScala.foreach { p =>
-      val q = to.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(q)
-      else Files.copy(p, q)
-    } finally st.close()
-    to.toString
-  }
 
   private def entries(d: Path): Set[String] =
     if (!Files.isDirectory(d)) Set.empty
@@ -69,14 +57,9 @@ class ArtifactSpec extends AnyFunSuite {
   private def published(kind: String, dir: String): Set[String] =
     entries(tmp).filter(_.startsWith(s"graft_${kind}_${sanitized(dir)}_"))
 
-  /** Delete everything published under tmpdir for the copy `dir`. */
-  private def dropArtifacts(dir: String): Unit =
-    entries(tmp).filter(_.contains(sanitized(dir) + "_"))
-      .foreach(e => T.deleteTree(tmp.resolve(e)))
-
   for ((kind, build, table) <- builders)
     test(s"two threads building the $kind artifact publish one serial-equal copy") {
-      val dir = copyOfSf()
+      val dir = copyOfData(sfDir, "graft-artifact")
       def rows(p: String) = Artifact.read(spark, Paths.get(p, table).toString).count()
       try {
         val serial = rows(build(spark, dir))
@@ -109,7 +92,7 @@ class ArtifactSpec extends AnyFunSuite {
     }
 
   test("a directory at the artifact path without a schema record is rebuilt") {
-    val dir = copyOfSf()
+    val dir = copyOfData(sfDir, "graft-artifact")
     try {
       val legacy = Artifact.path("media", dir, "documents")
       spark.range(1).toDF("doc_id").write.parquet(legacy) // with _SUCCESS

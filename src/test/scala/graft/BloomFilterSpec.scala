@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Runtime bloom-filter semijoin (SURVEY §4.2: Hive's
   * GenericUDAFBloomFilter + GenericUDFInBloomFilter via
   * SyntheticJoinPredicate → Spark's runtime.bloomFilter rewrite).
-  * tune() enables the conf; this spec proves the rewrite actually
-  * fires: with the size thresholds lowered to test scale, a selective
+  * The conf is on by default in Spark 4 (tune() leaves it alone); this
+  * spec proves the rewrite actually fires: with the size thresholds lowered to test scale, a selective
   * dim filter must inject a BloomFilter probe into the fact scan side,
   * and the result must equal the unfiltered-plan result.
   */

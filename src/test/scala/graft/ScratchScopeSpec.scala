@@ -30,16 +30,6 @@ class ScratchScopeSpec extends AnyFunSuite {
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** A fresh copy of sf0.001: a new path, so no memo entry exists yet. */
-  private def copyOfSf(): String = {
-    val to = tmpDir("graft-scratch-scope")
-    val from = Paths.get(sfDir)
-    val st = Files.list(from)
-    try st.iterator().asScala.foreach(p => Files.copy(p, to.resolve(p.getFileName)))
-    finally st.close()
-    to.toString
-  }
-
   test("a release on another thread leaves a running statement's checkpoints") {
     val kmeans = SparkEntry.queries("q_cluster_kmeans")
     val q15 = SparkEntry.queries("q15_top_supplier")
@@ -69,7 +59,7 @@ class ScratchScopeSpec extends AnyFunSuite {
   }
 
   test("the Dedup memo holds its two artifacts and none of their build scratch") {
-    val dir = copyOfSf()
+    val dir = copyOfData(sfDir, "graft-scratch-scope")
     val s = fresh()
     T.releaseScratch(spark)
     val before = persisted
@@ -84,7 +74,7 @@ class ScratchScopeSpec extends AnyFunSuite {
     val run = SparkEntry.queries("q_dedup_components")
     val expected = rows(run(fresh(), sf001))
     T.releaseScratch(spark)
-    val dir = copyOfSf()
+    val dir = copyOfData(sfDir, "graft-scratch-scope")
     val s = fresh()
     val before = persisted
     val first = rows(run(s, dir))

@@ -36,6 +36,31 @@ object SparkTestBase {
     p
   }
 
+  /** A fresh copy of the data dir `from` under a suite-scoped temp dir:
+    * a new path, so no session memo or derived artifact exists for it. */
+  def copyOfData(from: String, prefix: String): String = {
+    val to = tmpDir(prefix)
+    val root = java.nio.file.Paths.get(from)
+    val st = java.nio.file.Files.walk(root)
+    try st.forEach { p =>
+      val q = to.resolve(root.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
+      else java.nio.file.Files.copy(p, q)
+      ()
+    } finally st.close()
+    to.toString
+  }
+
+  /** Delete every derived artifact published under java.io.tmpdir for
+    * the data dir `dir` (a spec's copy). */
+  def dropArtifacts(dir: String): Unit = {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    val mark = dir.replaceAll("[^0-9a-zA-Z]", "_") + "_"
+    val st = java.nio.file.Files.list(tmp)
+    try st.filter(_.getFileName.toString.contains(mark)).forEach(T.deleteTree(_))
+    finally st.close()
+  }
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

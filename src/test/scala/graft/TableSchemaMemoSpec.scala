@@ -161,6 +161,17 @@ class TableSchemaMemoSpec extends AnyFunSuite {
     assert(jobs.isEmpty, s"statements whose second build started jobs: $jobs")
   }
 
+  test("rebuilding q_stats_metadata_only answers from catalog stats with no job or conf") {
+    // The statement applies StatsAnswer to its own optimized plan; had
+    // the rewrite not fired, its aggregate would run a scan job.
+    val s = fresh()
+    val run = SparkEntry.queries("q_stats_metadata_only")
+    val first = run(s, sfDir).collect().toSeq
+    val (again, jobs) = jobsIn(run(s, sfDir).collect().toSeq)
+    assert(jobs == 0 && again == first, s"rebuild started $jobs jobs")
+    assert(s.conf.getOption(StatsAnswer.Flag).isEmpty)
+  }
+
   test("rebuilding an IVF-PQ index statement reads the index back with no inference job") {
     // The index tables are read with their writer's schema, so the only
     // jobs left are the search's own: the eager probe checkpoint and the
@@ -209,8 +220,10 @@ class TableSchemaMemoSpec extends AnyFunSuite {
   test("rebuilding a sink statement reads its own output back with no inference job") {
     // A sink statement writes on every build, and its write jobs carry
     // the same "parquet at" call site as an inference job; they run
-    // inside a SQL execution, inference does not.
-    val stmts = Seq("q_sink_partitioned", "q_sink_dynpart_overwrite", "q_sink_compact")
+    // inside a SQL execution, inference does not. The ACID statements
+    // read back the directories AcidTable's commits wrote.
+    val stmts = Seq("q_sink_partitioned", "q_sink_dynpart_overwrite", "q_sink_compact",
+      "q_acid_merge_delta", "q_acid_time_travel", "q_acid_snapshot_diff")
     val s = fresh()
     val inferring = stmts.map { name =>
       val run = SparkEntry.queries(name)
