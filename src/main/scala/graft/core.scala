@@ -222,14 +222,15 @@ object T {
   }
 
   /** Process-scoped scratch dir (session warehouses of the Bench /
-    * Verify / Explain mains), deleted recursively at JVM exit — every
-    * harness run otherwise leaks one `graft-wh*` dir (complete with
-    * any q_ddl_* table data) into /tmp for the box's lifetime, the
-    * r15 hygiene sweep's second-largest debris class after the spec
-    * temp dirs.
+    * Verify / Explain mains, q_load_data's metastore), under `parent` or
+    * the temp dir, deleted recursively at JVM exit — every harness run
+    * otherwise leaks one `graft-wh*` dir (complete with any q_ddl_*
+    * table data) into /tmp for the box's lifetime, the r15 hygiene
+    * sweep's second-largest debris class after the spec temp dirs.
     */
-  def scratchDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
+  def scratchDir(prefix: String, parent: Option[java.nio.file.Path] = None): String = {
+    val p = parent.fold(java.nio.file.Files.createTempDirectory(prefix))(
+      java.nio.file.Files.createTempDirectory(_, prefix))
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       try deleteTree(p) catch { case _: Throwable => () }
     }))
@@ -245,24 +246,25 @@ object T {
     java.nio.file.Files.deleteIfExists(p); ()
   }
 
-  /** Content fingerprint of one test table: md5 over the sorted
-    * (path, size, mtime) listing of `$dir/$name.parquet` (file or
-    * directory). Setup-once memos (the BPE merge table, ANALYZEd stats
-    * tables) keyed by data-dir PATH alone silently go stale if the
-    * dir's parquet is regenerated in-process; keying on this makes them
-    * self-invalidate, and it costs one directory listing — no data read.
+  /** Content fingerprint of test tables: md5 over the sorted
+    * (path, size, mtime) listing of each `$dir/$name.parquet` (file or
+    * directory). Setup-once memos (the BPE merge table, `Artifact`'s
+    * directories and catalog tables) keyed by data-dir PATH alone
+    * silently go stale if the dir's parquet is regenerated in-process;
+    * keying on this makes them self-invalidate, and it costs one
+    * directory listing per table — no data read.
     */
-  def contentTag(dir: String, name: String): String = {
+  def contentTag(dir: String, names: String*): String = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
-    val root = Paths.get(dir, s"$name.parquet")
-    val files: Seq[Path] =
+    val files: Seq[Path] = names.map(n => Paths.get(dir, s"$n.parquet")).flatMap { root =>
       if (Files.isDirectory(root)) {
         val st = Files.walk(root)
         try st.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
         finally st.close() // walk holds a directory fd until closed
       } else if (Files.exists(root)) Seq(root)
       else Seq.empty
+    }
     val sig = files.map(_.toString).sorted.map { p =>
       val path = Paths.get(p)
       s"$p:${Files.size(path)}:${Files.getLastModifiedTime(path).toMillis}"

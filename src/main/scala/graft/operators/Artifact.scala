@@ -5,13 +5,15 @@ import java.nio.file.{FileSystemException, Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Content-keyed derived tables ("artifacts"): a table a statement
   * derives from base tables once per content, keeps under
   * `java.io.tmpdir` and reads back on every later build — the media
   * blob stores, the KV/segment/topic stores, the IVF-PQ and LSH
-  * indexes, the bitmap rollups. Hive's sink shape, one path for all:
+  * indexes, the bitmap rollups ([[table]]: the catalog tables a
+  * statement saves). Hive's sink shape, one path for all:
   * the build writes into a staging directory (FileSinkOperator) and a
   * rename publishes it (MoveTask).
   *
@@ -37,11 +39,37 @@ object Artifact {
   private[graft] val record = "_schema.json"
   private val locks = new ConcurrentHashMap[String, AnyRef]()
 
+  /** `dir` as it appears in artifact paths and table names. */
+  private[graft] def dirTag(dir: String): String = dir.replaceAll("[^0-9a-zA-Z]", "_")
+
   /** Where the artifact of `kind` over `dir`'s `table` lives. */
   def path(kind: String, dir: String, table: String,
       variant: String = ""): String =
-    s"$tmp/graft_${kind}_${dir.replaceAll("[^0-9a-zA-Z]", "_")}_" +
-      graft.T.contentTag(dir, table) + variant
+    s"$tmp/graft_${kind}_${dirTag(dir)}_" + graft.T.contentTag(dir, table) + variant
+
+  /** Name of the catalog table of `kind` over `dir`'s `inputs`. */
+  def tableName(kind: String, dir: String, inputs: String*): String =
+    s"g_${kind}_${dirTag(dir)}_" + graft.T.contentTag(dir, inputs: _*)
+
+  /** Build (once) and return the catalog table of `kind` over `dir`'s
+    * `inputs`, the catalog twin of [[derive]]: `build` creates and fills
+    * the table it is named, under the per-name lock every caller takes,
+    * so none reads it half built. A build that throws drops the table
+    * and its location. No staging rename: a materialized view's
+    * recorded scan points at the table's own location.
+    */
+  def table(s: SparkSession, kind: String, dir: String, inputs: String*)(
+      build: String => Unit): String = {
+    val name = tableName(kind, dir, inputs: _*)
+    locks.computeIfAbsent(name, _ => new AnyRef).synchronized {
+      if (!s.catalog.tableExists(name)) try build(name) catch { case e: Throwable =>
+        s.sql(s"DROP TABLE IF EXISTS $name") // and what a failed CTAS left:
+        graft.T.deleteTree(Paths.get(s.sessionState.catalog.defaultTablePath(TableIdentifier(name))))
+        throw e
+      }
+    }
+    name
+  }
 
   /** Build (once) and return the artifact's path. `build` writes the
     * whole artifact under the staging directory it is given; `tables`

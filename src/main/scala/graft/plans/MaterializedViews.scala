@@ -65,17 +65,24 @@ object MaterializedViews {
   }
 
   def register(spark: SparkSession, name: String, defining: DataFrame): Unit = {
-    if (!spark.catalog.tableExists(name))
-      defining.write.saveAsTable(name)
+    if (!spark.catalog.tableExists(name)) materialize(name, defining)
     record(spark, name, defining)
   }
+
+  /** Save `defining` as table `name`, computed from its base tables: an
+    * older MV of the same plan (a superseded version) never serves it. */
+  def materialize(name: String, defining: DataFrame): Unit =
+    unrewritten(defining.write.saveAsTable(name))
+
+  private def unrewritten[A](body: => A): A =
+    if (applying.get) body else { applying.set(true); try body finally applying.set(false) }
 
   /** Re-materialize `name` from `defining` and re-point the rewrite at
     * the fresh snapshot (Hive's ALTER MATERIALIZED VIEW ... REBUILD).
     */
   def refresh(spark: SparkSession, name: String, defining: DataFrame): Unit = {
     unregister(spark, name)
-    defining.write.mode("overwrite").saveAsTable(name)
+    unrewritten(defining.write.mode("overwrite").saveAsTable(name))
     record(spark, name, defining)
   }
 
@@ -138,20 +145,19 @@ object MaterializedViews {
     record(spark, name, defining)
   }
 
-  private def record(spark: SparkSession, name: String,
+  /** Rewrite `defining`'s plan to a scan of the existing table `name`,
+    * in place of any table an equal plan was recorded under before (a
+    * rewritten base table reads canonically equal to the old one). */
+  def record(spark: SparkSession, name: String,
       defining: DataFrame): Unit = {
     // extraOptimizations run AFTER the main optimizer batches, so the
     // incoming subtrees are optimized — match on the OPTIMIZED canonical
-    // form of the defining query. If the rule is already installed and
-    // rewrote this very plan (re-registration), the optimized form reads
-    // the MV itself — never register that, or the rule would chase its
-    // own output.
+    // form of the defining query, taken with the rule off (else a plan
+    // recorded before would already read its MV here).
     val st = stateOf(spark)
-    val optimized = defining.queryExecution.optimizedPlan
-    val readsMv = optimized.collectLeaves().exists(_.toString.contains(name))
-    if (!readsMv) {
+    unrewritten {
       val scan = spark.table(name).queryExecution.optimizedPlan
-      st.registry.putIfAbsent(optimized.canonicalized, (name, scan))
+      st.registry.put(defining.queryExecution.optimizedPlan.canonicalized, (name, scan))
     }
     sessions.synchronized {
       if (!st.ruleInstalled) {

@@ -155,9 +155,7 @@ object Ddl extends QueryPack {
         |  FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
         |  GROUP BY c.c_custkey)
         |GROUP BY seg_band ORDER BY seg_band""".stripMargin) { (s, dir) =>
-      val tag = dir.replaceAll("[^0-9a-zA-Z]", "_")
-      val tbl = s"g_cust_summary_$tag"
-      if (!s.catalog.tableExists(tbl)) {
+      val tbl = Artifact.table(s, "cust_summary", dir, "customer", "orders") { tbl =>
         val c = t(s, dir, "customer")
         val o = t(s, dir, "orders")
         c.join(o, c("c_custkey") === o("o_custkey"), "left")
@@ -192,20 +190,9 @@ object Ddl extends QueryPack {
         |  CAST(MAX(o_orderkey) AS BIGINT) AS max_key,
         |  COUNT(o_custkey) AS n_cust
         |FROM orders""".stripMargin) { (s, dir) =>
-      // Table name carries orders' content tag: a rewritten table gets a
-      // fresh saved table and ANALYZE, never the old stats.
-      val tag = dir.replaceAll("[^0-9a-zA-Z]", "_")
-      val tbl = s"g_stats_orders_${tag}_${T.contentTag(dir, "orders")}"
-      if (!s.catalog.tableExists(tbl)) {
-        // Drop this dir's superseded tables (else every rewrite leaves
-        // one in the warehouse). The match is anchored to the 16-hex tag
-        // so /data/sf1 never reaps /data/sf1_old's live table.
-        val samePrefix = java.util.regex.Pattern.compile(
-          s"g_stats_orders_${java.util.regex.Pattern.quote(tag)}_[0-9a-f]{16}")
-        s.catalog.listTables().collect()
-          .map(_.name)
-          .filter(n => samePrefix.matcher(n).matches() && n != tbl)
-          .foreach(stale => s.sql(s"DROP TABLE IF EXISTS $stale"))
+      // Keyed on orders' content: a rewritten table gets a fresh saved
+      // table and ANALYZE, never the old stats.
+      val tbl = Artifact.table(s, "stats_orders", dir, "orders") { tbl =>
         t(s, dir, "orders").select("o_orderkey", "o_custkey")
           .write.saveAsTable(tbl)
         s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS FOR ALL COLUMNS")
@@ -291,13 +278,14 @@ object Ddl extends QueryPack {
         |  COUNT(*) AS cnt
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
         |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
-      val tag = dir.replaceAll("[^0-9a-zA-Z]", "_")
       def defining = {
         val l = t(s, dir, "lineitem")
         l.groupBy("l_returnflag", "l_linestatus")
           .agg(dsum(l("l_quantity")).as("sum_qty"), count(lit(1)).as("cnt"))
       }
-      MaterializedViews.register(s, s"g_mv_qty_$tag", defining)
+      val mv = Artifact.table(s, "mv_qty", dir, "lineitem")(
+        MaterializedViews.materialize(_, defining))
+      MaterializedViews.record(s, mv, defining)
       // A fresh, independently-built instance of the same aggregate:
       // the rewrite rule must recognize it by canonical equality.
       defining.orderBy("l_returnflag", "l_linestatus")
@@ -324,16 +312,10 @@ object Ddl extends QueryPack {
         |  CAST(MAX(o_orderkey) AS BIGINT) AS last_key
         |FROM orders GROUP BY o_orderpriority
         |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-      val tag = dir.replaceAll("[^0-9a-zA-Z]", "_")
-      val store = s"g_mv_rev_store_$tag" // mergeable decimals/longs
-      val name = s"g_mv_rev_$tag" // display form the rewrite serves
       val cutoff = "1999-01-01"
-      // The STORE keeps aggregates in exact mergeable form (decimal
-      // sum, long count/max) - double(old)+double(delta) would not
-      // equal double(old+delta). The display MV casts at the end; the
-      // registered defining carries the same cast because Catalyst
-      // collapses it INTO the Aggregate, and the rewrite matches
-      // optimized canonical plans.
+      // The STORE keeps the exact mergeable form; the display MV casts
+      // at the end, and so does the recorded defining: Catalyst collapses
+      // the cast INTO the Aggregate, and the rule matches optimized plans.
       def aggOf(df: org.apache.spark.sql.DataFrame) =
         df.groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_orders"),
@@ -343,24 +325,25 @@ object Ddl extends QueryPack {
         df.select(col("o_orderpriority"), col("n_orders"),
           col("rev_total").cast("double").as("rev_total"),
           col("last_key").cast("long").as("last_key"))
-      if (!s.catalog.tableExists(name)) {
-        val o = t(s, dir, "orders")
-        aggOf(o.filter(col("o_orderdate") < cutoff))
-          .write.saveAsTable(store)
-        // Fold the 1999+ delta into the store: O(|MV| + |delta agg|),
-        // no rescan of the historical base.
-        MaterializedViews.refreshIncremental(s, store, aggOf(o),
-          aggOf(o.filter(col("o_orderdate") >= cutoff)),
-          Seq("o_orderpriority"),
-          Seq("n_orders" -> "sum", "rev_total" -> "sum",
-            "last_key" -> "max"))
-        // Display snapshot derives from the STORE (5 rows), not the base.
+      // The display MV derives from the STORE (5 rows), not the base.
+      val name = Artifact.table(s, "mv_rev", dir, "orders") { name =>
+        val store = Artifact.table(s, "mv_rev_store", dir, "orders") { store =>
+          val o = t(s, dir, "orders")
+          aggOf(o.filter(col("o_orderdate") < cutoff))
+            .write.saveAsTable(store)
+          // Fold the 1999+ delta into the store: O(|MV| + |delta agg|),
+          // no rescan of the historical base.
+          MaterializedViews.refreshIncremental(s, store, aggOf(o),
+            aggOf(o.filter(col("o_orderdate") >= cutoff)),
+            Seq("o_orderpriority"),
+            Seq("n_orders" -> "sum", "rev_total" -> "sum",
+              "last_key" -> "max"))
+        }
         display(s.table(store)).write.saveAsTable(name)
       }
-      // Table exists by now, so register() only records the plan; the
-      // full-base defining below never actually executes - the rule
-      // serves it from the maintained snapshot (MvSpec proves the plan).
-      MaterializedViews.register(s, name, display(aggOf(t(s, dir, "orders"))))
+      // The full-base defining below never executes: the rule serves it
+      // from the maintained snapshot (MvSpec proves the plan).
+      MaterializedViews.record(s, name, display(aggOf(t(s, dir, "orders"))))
       display(aggOf(t(s, dir, "orders"))).orderBy("o_orderpriority")
     },
 

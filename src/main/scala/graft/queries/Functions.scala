@@ -2,6 +2,7 @@ package graft.queries
 
 import graft._
 import graft.T._
+import graft.operators.Artifact
 import org.apache.spark.sql.functions._
 
 /** Scalar-function surface (SURVEY.md §2.8 — Hive FunctionRegistry, ~230
@@ -576,9 +577,7 @@ object Functions extends QueryPack {
         |  length(rpad(r_name, 12, ' ')) AS char_len,
         |  substring(r_name, 1, 4) AS as_varchar
         |FROM region ORDER BY r_regionkey""".stripMargin) { (s, dir) =>
-      val tag = dir.replaceAll("[^0-9a-zA-Z]", "_")
-      val tbl = s"g_charvarchar_$tag"
-      if (!s.catalog.tableExists(tbl)) {
+      val tbl = Artifact.table(s, "charvarchar", dir, "region") { tbl =>
         s.sql(s"CREATE TABLE $tbl (r_regionkey BIGINT, as_char CHAR(12)," +
           " as_varchar VARCHAR(4)) USING parquet")
         t(s, dir, "region")

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft._
 import graft.T._
+import graft.operators.Artifact
 import org.apache.spark.sql.functions._
 
 /** Join surface (SURVEY.md §2.3): CommonJoinOperator join types
@@ -1091,18 +1092,16 @@ object Joins extends QueryPack {
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
       // Bucketed layout: co-partitioned + co-sorted on the join key, the
-      // write-once/join-many pattern. Setup is one-time per (session, sf
-      // dir) — create-if-absent, so reruns read, never rewrite (the 100 TB
-      // contract: materialize bucketed fact tables once, join many times).
+      // write-once/join-many pattern. Each table is built once per content
+      // of its input, so reruns read, never rewrite (the 100 TB contract:
+      // materialize bucketed fact tables once, join many times).
       // 8 buckets here; at 100 TB size buckets to a few hundred MB each.
-      val tag = dir.replaceAll("[^0-9a-zA-Z]", "_")
-      val (lt, ot) = (s"g_lineitem_bkt_$tag", s"g_orders_bkt_$tag")
-      if (!s.catalog.tableExists(lt))
+      val lt = Artifact.table(s, "lineitem_bkt", dir, "lineitem")(
         t(s, dir, "lineitem").write.bucketBy(8, "l_orderkey")
-          .sortBy("l_orderkey").saveAsTable(lt)
-      if (!s.catalog.tableExists(ot))
+          .sortBy("l_orderkey").saveAsTable(_))
+      val ot = Artifact.table(s, "orders_bkt", dir, "orders")(
         t(s, dir, "orders").write.bucketBy(8, "o_orderkey")
-          .sortBy("o_orderkey").saveAsTable(ot)
+          .sortBy("o_orderkey").saveAsTable(_))
       val lb = s.table(lt)
       val ob = s.table(ot)
       lb.join(ob.hint("merge"), lb("l_orderkey") === ob("o_orderkey"))

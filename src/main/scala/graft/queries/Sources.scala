@@ -2,6 +2,7 @@ package graft.queries
 
 import graft._
 import graft.T._
+import graft.operators.Artifact
 import graft.sources.LegacyDecode
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -29,8 +30,7 @@ import org.apache.spark.sql.types._
 object Sources extends QueryPack {
 
   private def tmp(dir: String, name: String): String =
-    System.getProperty("java.io.tmpdir") + "/graft_src_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_") + "_" + name
+    System.getProperty("java.io.tmpdir") + "/graft_src_" + Artifact.dirTag(dir) + "_" + name
 
   /** Schema of a directory `df` was written to with `partitionBy(part)`:
     * the data columns, then the partition column as the string partition
@@ -64,22 +64,8 @@ object Sources extends QueryPack {
         // 4.3 s vs frozen 2.1 s, a pure FS-state artifact). A
         // throwaway per-JVM metastore needs no durability; LOAD
         // semantics and results are unchanged (same HMS code path).
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        val base =
-          if (java.nio.file.Files.isWritable(shm))
-            java.nio.file.Files.createTempDirectory(shm, "graft-load-cat")
-          else java.nio.file.Files.createTempDirectory("graft-load-cat")
-        // deleted on JVM exit — tmpfs must not accumulate across runs
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(p: java.nio.file.Path): Unit = {
-            if (java.nio.file.Files.isDirectory(p)) {
-              val st = java.nio.file.Files.list(p)
-              try st.forEach(rm(_)) finally st.close()
-            }
-            java.nio.file.Files.deleteIfExists(p); ()
-          }
-          try rm(base) catch { case _: Throwable => () }
-        }))
+        val base = java.nio.file.Paths.get(T.scratchDir("graft-load-cat",
+          Some(java.nio.file.Paths.get("/dev/shm")).filter(java.nio.file.Files.isWritable)))
         // JVM-GLOBAL and permanent (ADVICE r15): every Derby database
         // this process opens afterwards also loses log-fsync
         // durability. Acceptable because all Derby use in this harness
@@ -574,10 +560,7 @@ object Sources extends QueryPack {
       // load lands — delete it, or every bench iteration leaks a temp
       // dir for the JVM's lifetime. (Table data itself is bounded: the
       // DROP TABLE at each shape's start replaces, never accumulates.)
-      val staged = java.nio.file.Files.list(stage)
-      try staged.forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally staged.close()
-      java.nio.file.Files.deleteIfExists(stage)
+      T.deleteTree(stage)
       import s.implicits._
       Seq(s1, s2, s3).toDF("step", "n_rows", "xor_sig", "mod_sum")
         .orderBy("step")

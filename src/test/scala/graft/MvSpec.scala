@@ -44,6 +44,21 @@ class MvSpec extends AnyFunSuite {
       "rewrite still fires after unregister")
   }
 
+  test("recording an equal plan under a new table re-points the rewrite") {
+    // A rewritten base table reads back canonically equal to the old
+    // one: the table recorded last serves the plan, also once the
+    // superseded table's rewrite is retired.
+    val (a, b) = (s"g_mv_swap_a_$tag", s"g_mv_swap_b_$tag")
+    def defin = T.t(spark, sfDir, "supplier")
+      .groupBy("s_nationkey").agg(count(lit(1)).as("cnt"))
+    def reads = defin.queryExecution.optimizedPlan.toString
+    MaterializedViews.register(spark, a, defin)
+    MaterializedViews.register(spark, b, defin)
+    assert(reads.contains(b) && !reads.contains(a), s"not served by $b:\n${reads.take(1500)}")
+    MaterializedViews.unregister(spark, a)
+    assert(reads.contains(b), s"retiring $a stopped the rewrite:\n${reads.take(1500)}")
+  }
+
   test("rebind preserves non-nullable output attributes") {
     val name = s"g_mv_nn_$tag"
     def defin = T.t(spark, sfDir, "nation")

@@ -59,9 +59,8 @@ class OptimizerSpec extends AnyFunSuite {
   }
 
   test("ANALYZE produces real CBO stats (row count visible to planner)") {
-    val tag = sfDir.replaceAll("[^0-9a-zA-Z]", "_")
     SparkEntry.queries("q_ddl_ctas_analyze")(spark, sfDir).collect()
-    val tbl = s"g_cust_summary_$tag"
+    val tbl = operators.Artifact.tableName("cust_summary", sfDir, "customer", "orders")
     val stats = spark.table(tbl).queryExecution.optimizedPlan.stats
     assert(stats.rowCount.isDefined,
       "ANALYZE did not produce a row count — CBO has no stats input")

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,7 +13,8 @@ import scala.jdk.CollectionConverters._
   *  - a statement's release never drops the checkpoints of a statement
   *    running on another thread of the same session;
   *  - the Dedup memo holds exactly its two artifacts, not the
-  *    intermediate checkpoints of their builds;
+  *    intermediate checkpoints of their builds, also when two threads
+  *    build it at once;
   *  - a documents table rewritten in place rebuilds the memo, and the
   *    superseded artifacts go with the rebuilding statement's release.
   * Held RDDs are counted against a snapshot taken inside each test, so
@@ -66,6 +67,33 @@ class ScratchScopeSpec extends AnyFunSuite {
     for (name <- Seq("q_dedup_components", "q_dedup_minhash", "q_dedup_survivors"))
       SparkEntry.queries(name)(s, dir).collect()
     T.releaseScratch(s)
+    val held = persisted -- before
+    assert(held.size == 2, s"held after release: $held")
+  }
+
+  test("two threads building the Dedup memo at once get the serial rows and hold its two RDDs") {
+    val names = Seq("q_dedup_components", "q_dedup_survivors")
+    val serial = names.map(n => n -> rows(SparkEntry.queries(n)(fresh(), sfDir))).toMap
+    T.releaseScratch(spark)
+    val dir = copyOfData(sfDir, "graft-scratch-scope")
+    val s = fresh()
+    val before = persisted
+    val start = new CountDownLatch(1)
+    val wrong = new ConcurrentLinkedQueue[String]()
+    val threads = Seq(names, names.reverse).map { order =>
+      val th = new Thread(() => {
+        start.await()
+        for (n <- order) {
+          try if (rows(SparkEntry.queries(n)(s, dir)) != serial(n)) wrong.add(s"$n rows differ")
+          catch { case e: Throwable => wrong.add(s"$n threw $e") }
+          finally T.releaseScratch(s)
+        }
+      })
+      th.start(); th
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(wrong.isEmpty, wrong.asScala.mkString("\n"))
     val held = persisted -- before
     assert(held.size == 2, s"held after release: $held")
   }

@@ -16,7 +16,8 @@ import scala.jdk.CollectionConverters._
   *    no temp view or variable behind;
   *  - `SparkEntry.tune` runs once per session, so a client's own `SET`
   *    survives the statements it runs;
-  *  - no query pack registers a name or sets a session conf itself.
+  *  - no query pack registers a name, sets a session conf or checks
+  *    for a catalog table itself.
   */
 class SessionScopeSpec extends AnyFunSuite {
   import SparkTestBase._
@@ -82,9 +83,11 @@ class SessionScopeSpec extends AnyFunSuite {
 
   test("query packs register no name and set no session conf themselves") {
     // T.scoped in core.scala is the one place a statement registers a
-    // temp view or a SQL variable.
+    // temp view or a SQL variable; Artifact.table the one place it
+    // looks a catalog table up before saving it.
     val root = Paths.get("src", "main", "scala", "graft", "queries")
-    val banned = Seq("TempView(", "DECLARE OR REPLACE VARIABLE", "conf.set(", "conf.unset(")
+    val banned = Seq("TempView(", "DECLARE OR REPLACE VARIABLE", "conf.set(", "conf.unset(",
+      "tableExists(")
     val st = Files.walk(root)
     val hits =
       try st.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
@@ -93,6 +96,7 @@ class SessionScopeSpec extends AnyFunSuite {
           .map { case (line, i) => s"${root.relativize(p)}:${i + 1}: ${line.trim}" }
       }.toList
       finally st.close()
-    assert(hits.isEmpty, s"session writes outside T.scoped:\n${hits.mkString("\n")}")
+    assert(hits.isEmpty,
+      s"session writes outside T.scoped or Artifact.table:\n${hits.mkString("\n")}")
   }
 }

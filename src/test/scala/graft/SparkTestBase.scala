@@ -24,14 +24,7 @@ object SparkTestBase {
     tmpDirs.add(p)
     if (hooked.compareAndSet(false, true))
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(d: java.nio.file.Path): Unit = {
-          if (java.nio.file.Files.isDirectory(d)) {
-            val st = java.nio.file.Files.list(d)
-            try st.forEach(rm(_)) finally st.close()
-          }
-          java.nio.file.Files.deleteIfExists(d); ()
-        }
-        tmpDirs.forEach(d => try rm(d) catch { case _: Throwable => () })
+        tmpDirs.forEach(d => try T.deleteTree(d) catch { case _: Throwable => () })
       }))
     p
   }
@@ -55,10 +48,18 @@ object SparkTestBase {
     * the data dir `dir` (a spec's copy). */
   def dropArtifacts(dir: String): Unit = {
     val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val mark = dir.replaceAll("[^0-9a-zA-Z]", "_") + "_"
+    val mark = operators.Artifact.dirTag(dir) + "_"
     val st = java.nio.file.Files.list(tmp)
     try st.filter(_.getFileName.toString.contains(mark)).forEach(T.deleteTree(_))
     finally st.close()
+  }
+
+  /** Drop every catalog table saved for the data dir `dir` (a spec's
+    * copy) from the suite's catalog. */
+  def dropTables(dir: String): Unit = {
+    val mark = operators.Artifact.dirTag(dir) + "_"
+    spark.catalog.listTables().collect().map(_.name).filter(_.contains(mark))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   lazy val spark: SparkSession = {
